@@ -88,8 +88,13 @@ def _stage_cells(
         rk = F.row_number().over(
             Window.partitionBy("cell").orderBy(F.desc("csim"), "vec_id")
         )
+        # the cap rides along as column metadata so _is_staged can tell
+        # a frame staged with another cap (stale blocks) from a reusable one
         cells = cells.withColumn(
-            "__blk", F.floor((rk - F.lit(1)) / F.lit(int(cell_cap)))
+            "__blk",
+            F.floor((rk - F.lit(1)) / F.lit(int(cell_cap))).alias(
+                "__blk", metadata={"cell_cap": int(cell_cap)}
+            ),
         )
     if dim:
         from icenetetl_spark.operators.similarity import dot_unrolled
@@ -105,9 +110,12 @@ def _is_staged(
 ) -> bool:
     """True when ``cells`` already carries every staged column the
     (dim, cell_cap) combination needs (i.e. came through
-    :func:`_stage_cells`)."""
+    :func:`_stage_cells`), with ``__blk`` staged at this same ``cell_cap``."""
     cols = set(cells.columns)
-    if cell_cap is not None and "__blk" not in cols:
+    if cell_cap is not None and (
+        "__blk" not in cols
+        or cells.schema["__blk"].metadata.get("cell_cap") != int(cell_cap)
+    ):
         return False
     if dim and "__nrm" not in cols:
         return False

@@ -16,10 +16,9 @@ Scale notes (100 TB / 10^9+ vectors):
   is partitioned by query id, so it distributes); for large Q use the LSH /
   IVF path: bucket both sides, shuffle once on bucket id, search within
   buckets (+ multi-probe for recall).
-- The fold-based dot product is O(d) per pair with no Arrow hop. For very
-  wide vectors a pandas_udf over numpy matmul batches wins — that variant is
-  ``icenetetl_spark.operators.multimodal.embed_batch_scores`` (Arrow-batched),
-  kept off this path so the oracle stays exact.
+- The fold-based dot product is O(d) per pair with no Arrow hop;
+  :func:`dot_unrolled` computes the same values inside whole-stage codegen
+  when the dimension is statically known.
 """
 
 from __future__ import annotations
@@ -96,7 +95,11 @@ def _qident(name: str) -> str:
     SQL-text path accepts any name ``F.col`` accepts (spaces, hyphens,
     reserved words — ADVICE r13 #2). Dots keep their ``F.col`` meaning
     (qualifier / struct-field separators); embedded backticks escape by
-    doubling, the standard Spark identifier rule."""
+    doubling, the standard Spark identifier rule. A reference already
+    wrapped in backticks (``a.b`` quoted, for a column literally named
+    ``a.b``) is valid SQL as it stands and passes through unchanged."""
+    if len(name) > 1 and name.startswith("`") and name.endswith("`"):
+        return name
     return ".".join(
         "`" + part.replace("`", "``") + "`" for part in name.split(".")
     )

@@ -2,13 +2,11 @@
 the driver testdata, each (where SQL-expressible) paired with a DuckDB oracle.
 
 Modules contribute ``QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]]``
-and ``ORACLES: dict[str, str]``; this package merges them for
-``__spark_entry__``.
+and ``ORACLES: dict[str, str]``; this package merges them, in ``_MODULES``
+order, for ``__spark_entry__``.
 """
 
 from __future__ import annotations
-
-import os
 
 from icenetetl_spark.queries import (
     analytics,
@@ -35,169 +33,6 @@ _MODULES = [
     database,
 ]
 
-# query name -> defining module name, for change-aware rotation (the
-# fingerprint closure starts at the module whose QUERIES dict names it)
-_QUERY_SRC_MODULE: dict[str, str] = {
-    name: m.__name__ for m in _MODULES for name in m.QUERIES
-}
-
-
-def _src_root(m, fn) -> tuple[str, str] | None:
-    """Registered callable -> (defining module, def name) root for the
-    function-level fingerprint (None -> module-closure fallback)."""
-    name = getattr(fn, "__name__", None)
-    if not (isinstance(name, str) and name.isidentifier()):
-        return None
-    fmod = getattr(fn, "__module__", None)
-    if not (isinstance(fmod, str) and fmod.startswith("icenetetl_spark")):
-        fmod = m.__name__
-    return (fmod, name)
-
-
-# query name -> (defining module, def name); roots the call-reachable
-# fingerprint so a one-line edit to an unrelated function in the same hub
-# module no longer stales the query (round-9 verdict #1b). The defining
-# module comes from the callable itself (__module__) — a function imported
-# into the registering hub fingerprints where its code lives.
-_QUERY_SRC_FUNC: dict[str, tuple[str, str] | None] = {
-    name: _src_root(m, fn)
-    for m in _MODULES
-    for name, fn in m.QUERIES.items()
-}
-
-# canonical tie-break position: QUERIES merge order. ORACLES dicts may list
-# the same names in a different order, and the driver pairs them by name, so
-# both all_queries() and all_oracles() must sort ties identically
-_CANONICAL_POS: dict[str, int] = {
-    name: i for i, name in enumerate(_QUERY_SRC_MODULE)
-}
-
-
-_LAST_VERIFIED_CACHE: tuple[tuple, dict[str, int]] | None = None
-
-
-def _last_verified_round() -> dict[str, int]:
-    """Most recent driver round in which each query's CORRECTNESS row came
-    back clean (hash-green, or a documented rows-only check). Read from the
-    CORRECTNESS_r*.json files the driver leaves at the repo root; memoized
-    per process KEYED on the file set + mtimes (every consumer calls both
-    all_queries() and all_oracles(), but a long-lived process that observes
-    a new round file landing must still see the rotated order — stat calls
-    are cheap, re-parsing every file twice per call is not)."""
-    global _LAST_VERIFIED_CACHE
-    import glob
-    import json
-    import re
-
-    # queries/__init__.py -> queries -> icenetetl_spark -> repo root
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    paths = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-
-    def _mtime(p):
-        try:
-            return os.path.getmtime(p)
-        except OSError:
-            return None
-
-    cache_key = tuple((p, _mtime(p)) for p in paths)
-    if _LAST_VERIFIED_CACHE is not None and _LAST_VERIFIED_CACHE[0] == cache_key:
-        return _LAST_VERIFIED_CACHE[1]
-    # a rows-only record only "counts" while the query still has no oracle;
-    # once an oracle exists, the query deserves a fresh hash-gated slot
-    has_oracle = {name for m in _MODULES for name in m.ORACLES}
-    last: dict[str, int] = {}
-    for path in paths:
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            clean = (
-                row.get("err") == "no_oracle" and name not in has_oracle
-            ) or (
-                row.get("err") is None
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            if clean:
-                last[name] = max(last.get(name, -1), rnd)
-            else:
-                last.setdefault(name, -1)
-    _LAST_VERIFIED_CACHE = (cache_key, last)
-    return last
-
-
-def _reorder(d):
-    """LEAST-RECENTLY-VERIFIED first, with CHANGED-SINCE-GREEN promoted to
-    the very front. The driver's correctness gate records rows for the first
-    N registry entries per round (N=50 in rounds 1-2, fewer than the registry
-    size), so a static order would permanently shadow whatever sits past the
-    window. Sorting by the round each query last verified cleanly —
-    never-checked and last-failed queries first, stable by module order
-    within ties — rotates the window automatically. On top of age, any query
-    whose implementation fingerprint differs from that of its last-green
-    round's gate commit (see ``_staleness``; since round 10 the fingerprint
-    covers only the definitions call-reachable from the query's registered
-    function, so a one-line hub edit stales only its real consumers) is
-    treated as never verified, so edited plans re-enter the window the round
-    after they change instead of riding unverified until age alone rotates
-    them back in (round-8 verdict item #1)."""
-    from icenetetl_spark.queries import _staleness
-
-    last = _last_verified_round()
-    latest = max(last.values(), default=-1)
-    names = list(d)
-
-    def key(i):
-        name = names[i]
-        pos = _CANONICAL_POS.get(name, i)
-        rnd = last.get(name, -1)
-        mod = _QUERY_SRC_MODULE.get(name)
-        root = _QUERY_SRC_FUNC.get(name)
-        fmod, func = root if root is not None else (mod, None)
-        changed = (
-            rnd >= 0
-            and fmod is not None
-            and _staleness.changed_since_round(fmod, rnd, func)
-        )
-        # the oracle SQL is gate semantics too, and the function-level
-        # fingerprint roots at the query callable which never references
-        # the module-level ORACLES dict — walk ORACLES as a second root so
-        # an oracle edit re-enters the window next round (round-10 advice)
-        oracle_changed = (
-            rnd >= 0
-            and mod is not None
-            and _staleness.oracle_changed_since_round(mod, rnd, name)
-        )
-        if rnd < 0:
-            return (0, 0, rnd, pos)  # never verified: absolute front
-        if changed or oracle_changed:
-            # newest change first (a plan edited last round or this round
-            # beats one whose unverified change is older — the older one's
-            # low last-green round already rotates it forward), then stalest
-            # green within the same change epoch
-            epoch = max(
-                _staleness.change_epoch(fmod, rnd, latest, func)
-                if changed
-                else -1,
-                _staleness.change_epoch(mod, rnd, latest, "ORACLES")
-                if oracle_changed
-                else -1,
-            )
-            return (1, -epoch, rnd, pos)
-        return (2, 0, rnd, pos)
-
-    order = sorted(range(len(names)), key=key)
-    return {names[i]: d[names[i]] for i in order}
-
 
 def all_queries():
     out = {}
@@ -205,11 +40,11 @@ def all_queries():
         overlap = set(out) & set(m.QUERIES)
         assert not overlap, f"duplicate query names: {overlap}"
         out.update(m.QUERIES)
-    return _reorder(out)
+    return out
 
 
 def all_oracles():
     out = {}
     for m in _MODULES:
         out.update(m.ORACLES)
-    return _reorder(out)
+    return out

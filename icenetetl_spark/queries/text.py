@@ -1257,13 +1257,6 @@ ORACLES["text_compression_ratio"] = f"""
     JOIN '{_ZLIB_FIXTURE}' f ON md5(d.text) = f.text_md5
 """
 
-# The fixture's CONTENT is part of this oracle's gate semantics (r11
-# advice #4): a tools/make_zlib_fixture.py rerun changes the asserted
-# n_compressed_fx values without touching any AST, so the staleness root
-# folds the file's blob sha in — see _staleness.ORACLE_DATA_FILES, where
-# the mapping is declared (declared THERE, not registered from here, so
-# the staleness machinery never enters this module's import closure).
-
 
 # Negative sampling for contrastive/retrieval training: k pseudo-random
 # negatives per query doc, deterministic (Knuth multiplicative constant),

@@ -22,6 +22,15 @@ def test_every_oracle_has_a_query():
     assert set(o) <= set(q), f"orphan oracles: {set(o) - set(q)}"
 
 
+def test_registry_is_module_order_merge():
+    """The registry is the plain merge of each module's dicts in
+    ``_MODULES`` order — no reordering layer between modules and driver."""
+    from icenetetl_spark.queries import _MODULES, all_oracles, all_queries
+
+    assert list(all_queries()) == [n for m in _MODULES for n in m.QUERIES]
+    assert list(all_oracles()) == [n for m in _MODULES for n in m.ORACLES]
+
+
 def test_rows_only_queries_are_documented():
     """Queries without an oracle must say why in their docstring."""
     mod = _load_entry()

@@ -308,6 +308,28 @@ def test_staged_cells_matches_unstaged_pairs(spark, emb, cents):
     )
 
 
+def test_frame_staged_with_other_cap_is_restaged(spark, emb, cents):
+    """A frame staged at one cell_cap must not lend its __blk blocks to a
+    call with another cap: the pairs must equal an unstaged call's."""
+    from icenetetl_spark.operators.semdedup import (
+        _pairs_from_cells,
+        _stage_cells,
+    )
+
+    cells = assign_cells_fixed(emb, cents, dim=64)
+    plain = _pairs_from_cells(cells, SEM_T, dim=64, cell_cap=8)
+    restaged = _pairs_from_cells(
+        _stage_cells(cells, dim=64, cell_cap=4).localCheckpoint(eager=False),
+        SEM_T,
+        dim=64,
+        cell_cap=8,
+    )
+    key = ["doc_a", "doc_b", "cell", "__blk", "cos"]
+    assert sorted(map(tuple, plain.select(*key).collect())) == sorted(
+        map(tuple, restaged.select(*key).collect())
+    )
+
+
 def test_two_level_pre_checkpoint_values_unchanged(spark, emb):
     """r14: assign_cells_two_level materializes its (id, v, ||v||)
     projection once (3 plan consumers); assignment values must equal the

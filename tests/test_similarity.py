@@ -309,3 +309,25 @@ def test_dot_unrolled_string_form_is_tree_identical(spark, emb):
     assert [r["c"] for r in cos_col.collect()] == [
         r["c"] for r in cos_str.collect()
     ]
+
+
+def test_unrolled_string_form_accepts_backtick_quoted_names(spark, emb):
+    """A column literally named ``a.b`` is referenced as a backticked
+    string, as with ``F.col``; the SQL-text path must resolve it to that
+    column rather than split it into qualifier ``a`` and field ``b``."""
+    from icenetetl_spark.operators.similarity import (
+        cosine_unrolled,
+        dot_unrolled,
+    )
+
+    df = emb.select(F.col("embedding").alias("a.b")).limit(50)
+    ref = "`a.b`"
+    got = df.select(
+        dot_unrolled(ref, ref, 64).alias("d"),
+        cosine_unrolled(ref, ref, 64).alias("c"),
+    ).collect()
+    want = df.select(
+        dot_unrolled(F.col(ref), F.col(ref), 64).alias("d"),
+        cosine_unrolled(F.col(ref), F.col(ref), 64).alias("c"),
+    ).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
