@@ -97,18 +97,20 @@ BENCH_QUERIES_EXT = [
 def _ambient_probe(spark, reps: int = 3) -> list[float]:
     """Fixed-size synthetic CPU+shuffle micro-job, independent of SF and of
     any repo data: 20M-row integer hash -> 1M-key groupBy (one shuffle) ->
-    top-5. Run before and after the suite so every recorded total carries its
-    own ambient denominator — round-over-round shifts in the suite total can
-    then be attributed to host conditions vs code without re-running the
-    interleaved A/B by hand (BENCHDRIFT.md established the need: same-code
-    spread on this host is ~20%, with 4-15% CPU steal in slow windows)."""
+    top-5, one partition per core. Run before and after the suite so every
+    recorded total carries its own ambient denominator — round-over-round
+    shifts in the suite total can then be attributed to host conditions vs
+    code without re-running the interleaved A/B by hand (BENCHDRIFT.md
+    established the need: same-code spread on this host is ~20%, with
+    4-15% CPU steal in slow windows)."""
     from pyspark.sql import functions as F
 
+    slots = spark.sparkContext.defaultParallelism
     out = []
     for _ in range(reps):
         t0 = time.time()
         (
-            spark.range(0, 20_000_000, 1, 32)
+            spark.range(0, 20_000_000, 1, slots)
             .select(((F.col("id") * 2654435761) % 1000003).alias("k"))
             .groupBy("k")
             .count()
@@ -146,8 +148,10 @@ def main() -> None:
     # one-time process machinery the tiny agg/join above doesn't reach —
     # each would otherwise bill its multi-second setup to whichever measured
     # query hits it first:
-    # 1. the Arrow Python-worker pool (mapInPandas/pandas_udf queries)
-    spark.range(64).repartition(32).mapInPandas(
+    # 1. the Arrow Python-worker pool (mapInPandas/pandas_udf queries),
+    #    one worker per core
+    slots = spark.sparkContext.defaultParallelism
+    spark.range(64).repartition(slots).mapInPandas(
         lambda it: it, "id long"
     ).count()
     # 2. WindowExec + row_number codegen (top-k / sessionize / sequential id)

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 from pyspark.sql.window import Window
 
-from icenetetl_spark.operators.similarity import cosine
+from icenetetl_spark.operators.similarity import cosine, dot
 
 
 def _to_ml_vector(col: Column) -> Column:
@@ -125,11 +125,6 @@ def assign_cells_fixed(
     ~6s on the 10x SemDeDup assignment). Bit-identical to the inline
     cosine — ``a/(sqrt(b)*sqrt(c))`` over the same operands in the same
     order, merely with the sqrt subexpressions hoisted."""
-    from icenetetl_spark.operators.similarity import _dot, dot_unrolled
-
-    def _d(x, y):
-        return dot_unrolled(x, y, dim) if dim else _dot(x, y)
-
     # r13 (guide §2.5): the N*k dot projection below runs map-side on the
     # input partitioning; spread() keeps a row-group-bound scan from
     # serializing it (no-op once parallel — operators/scale.py). Callers
@@ -141,16 +136,14 @@ def assign_cells_fixed(
 
         vectors = spread(vectors, id_col)
     cents = F.broadcast(
-        centroids.withColumn(
-            "__cn", F.sqrt(_d("cvec", "cvec"))
-        )
+        centroids.withColumn("__cn", F.sqrt(dot("cvec", "cvec", dim)))
     )
     pre = vectors.select(
         F.col(id_col).alias(out_id),
         F.col(vec_col).alias("v"),
-        F.sqrt(_d(vec_col, vec_col)).alias("__vn"),
+        F.sqrt(dot(vec_col, vec_col, dim)).alias("__vn"),
     )
-    sim = _d("v", "cvec") / (F.col("__vn") * F.col("__cn"))
+    sim = dot("v", "cvec", dim) / (F.col("__vn") * F.col("__cn"))
     scored = pre.crossJoin(cents).select(
         F.col(out_id),
         sim.alias("__sim"),
@@ -223,11 +216,6 @@ def knn_ivf_fixed_centroids(
     rejoins by id afterwards). A per-row window would shuffle k×N rows
     instead.
     """
-    from icenetetl_spark.operators.similarity import _dot, dot_unrolled
-
-    def _d(x, y):
-        return dot_unrolled(x, y, dim) if dim else _dot(x, y)
-
     cents = F.broadcast(centroids)
     # carry each corpus vector's norm out of the re-rank join (round-9:
     # cosine unrolled at d=64 inside the join consume method is three
@@ -239,7 +227,7 @@ def knn_ivf_fixed_centroids(
     ).select(
         "neighbor_id",
         F.col("v").alias("cv"),
-        F.sqrt(_d("v", "v")).alias("cvn"),
+        F.sqrt(dot("v", "v", dim)).alias("cvn"),
         "cell",
     )
     q_scored = queries.crossJoin(cents).select(
@@ -257,7 +245,7 @@ def knn_ivf_fixed_centroids(
         .select(
             "query_id",
             "qv",
-            F.sqrt(_d("qv", "qv")).alias("qvn"),
+            F.sqrt(dot("qv", "qv", dim)).alias("qvn"),
             F.col("centroid_id").alias("cell"),
         )
     )
@@ -269,10 +257,9 @@ def knn_ivf_fixed_centroids(
         .select(
             "query_id",
             "neighbor_id",
-            (
-                _d("qv", "cv")
-                / (F.col("qvn") * F.col("cvn"))
-            ).alias("cos"),
+            (dot("qv", "cv", dim) / (F.col("qvn") * F.col("cvn"))).alias(
+                "cos"
+            ),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -294,7 +281,6 @@ def knn_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: (query_id, neighbor_id, rank, cos); corpus side is
     assigned 1 cell, query side probes ``n_probe`` cells."""
@@ -316,7 +302,7 @@ def knn_ivf(
         F.broadcast(q).join(c, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
-            "query_id", "neighbor_id", cosine("qv", "cv", dim=dim).alias("cos")
+            "query_id", "neighbor_id", cosine("qv", "cv").alias("cos")
         )
         # a (query, neighbor) pair can meet in several probed cells
         .dropDuplicates(["query_id", "neighbor_id"])

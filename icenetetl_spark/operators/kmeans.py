@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from icenetetl_spark.operators.similarity import dot_unrolled
+from icenetetl_spark.operators.similarity import dot
 
 LLOYD_SCALE = 9  # 10^9 fixed point: |v| <= ~10 and 10^9 rows/cell fit BIGINT
 
@@ -324,7 +324,7 @@ def lloyd_fit(
     # (the assign_cells_fixed trick): the hot N*k projection evaluates ONE
     # dot instead of three. Value-identical — same operands, same order,
     # sqrt/add merely hoisted.
-    self_dot = dot_unrolled("__v", "__v", dim)
+    self_dot = dot("__v", "__v", dim)
     # persist the projected corpus ACROSS iterations (r11 verdict #3's
     # "persist the corpus" lever — the MLlib-KMeans pattern): every
     # iteration's crossJoin re-reads it, so without the cache each Lloyd
@@ -351,36 +351,38 @@ def lloyd_fit(
     )
 
 
+def _cfold(c: list[float]) -> float:
+    """A centroid's self-dot, computed driver-side: an in-order python fold
+    over the same doubles — IEEE-identical to ``similarity.dot(c, c)`` and
+    SQL's ``list_dot_product(c, c)``."""
+    acc = 0.0
+    for x in c:
+        acc += x * x
+    return acc
+
+
 def _lloyd_iterate(spark, pre, cents, iterations, dim, metric, scale):
     """The Lloyd update loop over a persisted ``pre`` projection."""
     import math
 
     q = float(10**scale)
     for _ in range(iterations):
-        # the per-centroid self-dot is an in-order python fold over the
-        # same doubles — IEEE-identical to SQL's list_dot_product(c, c)
-        def cfold(c):
-            acc = 0.0
-            for x in c:
-                acc += x * x
-            return acc
-
         cdf = F.broadcast(
             spark.createDataFrame(
                 [
                     (
                         cid,
                         cvec,
-                        math.sqrt(cfold(cvec))
+                        math.sqrt(_cfold(cvec))
                         if metric == "cosine"
-                        else cfold(cvec),
+                        else _cfold(cvec),
                     )
                     for cid, cvec in cents
                 ],
                 "centroid_id BIGINT, cvec ARRAY<DOUBLE>, __cn DOUBLE",
             )
         )
-        vdot = dot_unrolled("__v", "cvec", dim)
+        vdot = dot("__v", "cvec", dim)
         if metric == "cosine":
             mcol = vdot / (F.col("__sn") * F.col("__cn"))
             best = F.max(

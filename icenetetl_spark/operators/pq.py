@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from icenetetl_spark.operators.similarity import _dot, cosine
+from icenetetl_spark.operators.similarity import cosine, dot
 
 # session-lifetime memo of deterministic codebook fits (the
 # operators/kmeans._FIT_CACHE pattern; see fit_pq_codebooks_lloyd)
@@ -65,10 +65,10 @@ def _fit_events() -> list:
 _ADC_SCALE = 12
 
 
-def _l2sq(a: Column, b: Column) -> Column:
+def _l2sq(a: str, b: str) -> Column:
     """Squared L2 via the three-dot identity, in the exact op order the
     SQL oracle mirrors: (a.a + b.b) - 2*a.b."""
-    return (_dot(a, a) + _dot(b, b)) - F.lit(2.0) * _dot(a, b)
+    return (dot(a, a) + dot(b, b)) - F.lit(2.0) * dot(a, b)
 
 
 def _subvectors(
@@ -151,7 +151,7 @@ def encode_pq(
         "neighbor_id",
         "m",
         F.struct(
-            _l2sq(F.col("sub"), F.col("csub")).alias("d"),
+            _l2sq("sub", "csub").alias("d"),
             F.col("code_id").alias("c"),
         ).alias("dc"),
     )
@@ -252,6 +252,7 @@ def fit_pq_codebooks_lloyd(
     oracle replays."""
     from icenetetl_spark.operators.kmeans import (
         LLOYD_SCALE,
+        _cfold,
         _check_quantized_bound,
         _disk_get,
         _disk_put,
@@ -259,8 +260,6 @@ def fit_pq_codebooks_lloyd(
         _vmax_agg,
         corpus_signature,
     )
-    from icenetetl_spark.operators.similarity import dot_unrolled
-
     spark = corpus.sparkSession
     w = _sub_width(width or _vector_width(corpus, vec_col), m)
     full_key = None
@@ -332,29 +331,23 @@ def fit_pq_codebooks_lloyd(
         .select(
             "__id", F.col("s.mi").alias("__mi"), F.col("s.sv").alias("__v")
         )
-        .withColumn("__sn", dot_unrolled("__v", "__v", w))
+        .withColumn("__sn", dot("__v", "__v", w))
         .persist()
     )
-
-    def cfold(c):
-        acc = 0.0
-        for x in c:
-            acc += x * x
-        return acc
 
     try:
         for _ in range(iterations):
             cdf = F.broadcast(
                 spark.createDataFrame(
                     [
-                        (mi, cid, cvec, cfold(cvec))
+                        (mi, cid, cvec, _cfold(cvec))
                         for mi in range(m)
                         for cid, cvec in cents[mi]
                     ],
                     "__mi INT, centroid_id BIGINT, cvec ARRAY<DOUBLE>, __cn DOUBLE",
                 )
             )
-            vdot = dot_unrolled("__v", "cvec", w)
+            vdot = dot("__v", "cvec", w)
             mcol = (F.col("__sn") + F.col("__cn")) - F.lit(2.0) * vdot
             best = F.min(
                 F.struct(
@@ -476,7 +469,7 @@ def _knn_pq_with_codebook(
         "query_id",
         "m",
         F.col("code_id").alias("code"),
-        _l2sq(F.col("sub"), F.col("csub")).alias("qdist"),
+        _l2sq("sub", "csub").alias("qdist"),
     )
     from icenetetl_spark.functions.portable import fsum_col
 
@@ -509,14 +502,14 @@ def _knn_pq_with_codebook(
         # SLOWER than the interpreted fold on scoring joins), and the
         # unrolled form additionally paid a 3x64-term whole-stage-codegen
         # compile per query construction for a candidate set bounded at
-        # k*refine_factor per query. Values bit-identical (pinned:
-        # dot_unrolled == the fold, term for term).
+        # k*refine_factor per query. Values bit-identical (pinned: the
+        # two similarity.dot forms agree term for term).
         F.broadcast(candidates.join(F.broadcast(qv), "query_id"))
         .join(cv, "neighbor_id")
         .select(
             "query_id",
             "neighbor_id",
-            cosine("qv", "cv", dim=None).alias("cos"),
+            cosine("qv", "cv").alias("cos"),
         )
     )
     wr = Window.partitionBy("query_id").orderBy(
@@ -589,23 +582,18 @@ def knn_ivfpq_fixed(
     # small method and the generated source matches the family's other
     # probe stages). Bit-identical: dot/(sqrt(qq)*sqrt(cc)) with the
     # sqrts hoisted — same operands, same op order.
-    from icenetetl_spark.operators.similarity import _dot, dot_unrolled
-
-    def _d(x, y):
-        return dot_unrolled(x, y, dim) if dim else _dot(x, y)
-
     cents_n = F.broadcast(
-        centroids.withColumn("__cn", F.sqrt(_d("cvec", "cvec")))
+        centroids.withColumn("__cn", F.sqrt(dot("cvec", "cvec", dim)))
     )
     q_pre = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
-        F.sqrt(_d(vec_col, vec_col)).alias("__qn"),
+        F.sqrt(dot(vec_col, vec_col, dim)).alias("__qn"),
     )
     q_scored = q_pre.crossJoin(cents_n).select(
         "query_id",
         F.col("centroid_id"),
-        (_d("__qv", "cvec") / (F.col("__qn") * F.col("__cn"))).alias(
+        (dot("__qv", "cvec", dim) / (F.col("__qn") * F.col("__cn"))).alias(
             "__sim"
         ),
     )
@@ -628,7 +616,7 @@ def knn_ivfpq_fixed(
         "query_id",
         "m",
         F.col("code_id").alias("code"),
-        _l2sq(F.col("sub"), F.col("csub")).alias("qdist"),
+        _l2sq("sub", "csub").alias("qdist"),
     )
     adc = (
         cand.join(codes, "neighbor_id")
@@ -660,7 +648,7 @@ def knn_ivfpq_fixed(
         .select(
             "query_id",
             "neighbor_id",
-            cosine("qv", "cv", dim=None).alias("cos"),
+            cosine("qv", "cv").alias("cos"),
         )
     )
     wr = Window.partitionBy("query_id").orderBy(

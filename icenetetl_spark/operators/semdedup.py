@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from icenetetl_spark.operators.dedup import connected_components
 from icenetetl_spark.operators.ivf import assign_cells_fixed, fit_coarse_quantizer
-from icenetetl_spark.operators.similarity import cosine
+from icenetetl_spark.operators.similarity import cosine, dot
 
 
 def semantic_pairs(
@@ -54,10 +54,10 @@ def semantic_pairs(
     ``doc_a < doc_b``. The self-join keys on the cell id, so candidate
     generation is bucketed exactly like the LSH/SimHash/IVF families.
     ``dim`` (when the embedding width is statically known) switches every
-    cosine to the codegen-unrolled twin — identical values, ~30x per row
-    on the exhaustive pair stage. ``cell_cap`` bounds candidate pairs to
-    N*cap/2 by deterministic block re-splitting of oversized cells (see
-    :func:`_pairs_from_cells`)."""
+    dot to the unrolled form of :func:`similarity.dot` — identical
+    values, ~30x per row on the exhaustive pair stage. ``cell_cap``
+    bounds candidate pairs to N*cap/2 by deterministic block re-splitting
+    of oversized cells (see :func:`_pairs_from_cells`)."""
     cells = assign_cells_fixed(emb, centroids, id_col, vec_col, dim=dim)
     out = _pairs_from_cells(cells, threshold, dim=dim, cell_cap=cell_cap)
     return out.drop("__blk")
@@ -97,11 +97,7 @@ def _stage_cells(
             ),
         )
     if dim:
-        from icenetetl_spark.operators.similarity import dot_unrolled
-
-        cells = cells.withColumn(
-            "__nrm", F.sqrt(dot_unrolled("v", "v", dim))
-        )
+        cells = cells.withColumn("__nrm", F.sqrt(dot("v", "v", dim)))
     return cells
 
 
@@ -150,8 +146,6 @@ def _pairs_from_cells(
         cells = _stage_cells(cells, dim=dim, cell_cap=cell_cap)
     keys = ["cell", "__blk"] if cell_cap is not None else ["cell"]
     if dim:
-        from icenetetl_spark.operators.similarity import dot_unrolled
-
         a = cells.select(
             F.col("vec_id").alias("doc_a"),
             F.col("v").alias("va"),
@@ -164,9 +158,7 @@ def _pairs_from_cells(
             F.col("__nrm").alias("nb"),
             *keys,
         )
-        cos = dot_unrolled("va", "vb", dim) / (
-            F.col("na") * F.col("nb")
-        )
+        cos = dot("va", "vb", dim) / (F.col("na") * F.col("nb"))
     else:
         a = cells.select(
             F.col("vec_id").alias("doc_a"), F.col("v").alias("va"), *keys
@@ -174,7 +166,7 @@ def _pairs_from_cells(
         b = cells.select(
             F.col("vec_id").alias("doc_b"), F.col("v").alias("vb"), *keys
         )
-        cos = cosine(F.col("va"), F.col("vb"), dim=None)
+        cos = cosine("va", "vb")
     return (
         a.join(b, keys)
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -283,11 +275,6 @@ def assign_cells_two_level(
     duplicates among them; trained (Lloyd) centroids are distinct cell
     means. ``tests/test_semdedup.py`` pins full coarse coverage for both
     gate constructions rather than paying a per-construction job here."""
-    from icenetetl_spark.operators.similarity import _dot, dot_unrolled
-
-    def _d(x, y):
-        return dot_unrolled(x, y, dim) if dim else _dot(x, y)
-
     routed = F.broadcast(
         assign_cells_fixed(
             fine.select(
@@ -304,11 +291,11 @@ def assign_cells_two_level(
             "fid",
             F.col("v").alias("fvec"),
             F.col("cell").alias("__coarse"),
-            F.sqrt(_d("v", "v")).alias("__fn"),
+            F.sqrt(dot("v", "v", dim)).alias("__fn"),
         )
     )
     cents1 = F.broadcast(
-        coarse.withColumn("__cn", F.sqrt(_d("cvec", "cvec")))
+        coarse.withColumn("__cn", F.sqrt(dot("cvec", "cvec", dim)))
     )
     # r13 (guide §2.5): the N x k1 routing projection runs map-side on
     # this frame's partitioning; spread() keeps a row-group-bound scan
@@ -330,9 +317,9 @@ def assign_cells_two_level(
     pre = vectors.select(
         F.col(id_col).alias(out_id),
         F.col(vec_col).alias("v"),
-        F.sqrt(_d(vec_col, vec_col)).alias("__vn"),
+        F.sqrt(dot(vec_col, vec_col, dim)).alias("__vn"),
     ).localCheckpoint(eager=False)
-    sim1 = _d("v", "cvec") / (F.col("__vn") * F.col("__cn"))
+    sim1 = dot("v", "cvec", dim) / (F.col("__vn") * F.col("__cn"))
     # top-P coarse cells per vector: one window over the N x k1 scored
     # rows, partitioned on the vector id (k1 rows per partition key —
     # bounded, shuffles once on the id). Scalars only; v rejoins by key.
@@ -351,7 +338,7 @@ def assign_cells_two_level(
         .select(out_id, F.col("__cid").alias("__coarse"))
         .join(pre, out_id)
     )
-    sim = _d("v", "fvec") / (F.col("__vn") * F.col("__fn"))
+    sim = dot("v", "fvec", dim) / (F.col("__vn") * F.col("__fn"))
     scored = vrouted.join(routed, "__coarse").select(
         F.col(out_id),
         sim.alias("__sim"),

@@ -1,9 +1,9 @@
 """Similarity search over an embedding column (``array<float>``).
 
-- ``cosine``            : JVM-side expression (zip_with product + sequential
-                          fold + sqrt) — stays inside whole-stage codegen, no
-                          Python boundary, and is bit-identical to the DuckDB
-                          oracle's list_dot_product on doubles.
+- ``dot`` / ``cosine``  : the only double dot-product builders in the
+                          package. Both take column-reference strings and
+                          return ONE ``F.expr``; every vector score (ANN,
+                          near-dup, SemDeDup, Lloyd, PQ) is built here.
 - ``knn_bruteforce``    : exact top-k per query via query×corpus join +
                           per-query window. The baseline.
 - ``knn_sign_lsh``      : LSH-bucketed approximate variant — random-hyperplane
@@ -11,14 +11,33 @@
                           engine-portable); candidates restricted to the
                           query's bucket.
 
+``dot`` has two forms, chosen by the caller's ``dim`` and nothing else:
+
+- ``dim=None``: the any-length fold
+  ``aggregate(zip_with(x, y, (u, v) -> u*v), 0.0D, (acc, z) -> acc + z)``.
+  ``aggregate``/``zip_with`` are CodegenFallback (interpreted lambda
+  dispatch per row, ~90us/row at d=64), but the expression stays small —
+  it is the measured winner on 3-dot knn scoring (SCALING.md "Cosine
+  dispatch").
+- ``dim=d``: the same left-to-right sum unrolled into ``d`` flat terms,
+  which stays inside whole-stage codegen. Use it where a stage computes
+  ONE dot per row (norms hoisted out): three 64-term dots in one consume
+  method overflow the JVM's 64 KB method limit and the stage runs
+  interpreted anyway.
+
+Both forms accumulate ``((0+x1y1)+x2y2)+...`` in double, so they are
+bit-identical to each other and to DuckDB's ``list_dot_product``
+(tests/test_similarity.py). Both are assembled as SQL text and parsed
+JVM-side in one call: a per-term Column-operator build of the 64-term sum
+cost ~2,500 py4j round-trips per dot (r13 profile: 6.7s of
+dedup_semantic_two_level's 9.9s wall).
+
 Scale notes (100 TB / 10^9+ vectors):
 - Brute force is O(|Q|x|C|): fine for small query sets (the per-query window
   is partitioned by query id, so it distributes); for large Q use the LSH /
   IVF path: bucket both sides, shuffle once on bucket id, search within
   buckets (+ multi-probe for recall).
-- The fold-based dot product is O(d) per pair with no Arrow hop;
-  :func:`dot_unrolled` computes the same values inside whole-stage codegen
-  when the dimension is statically known.
+- The dot product is O(d) per pair with no Arrow hop.
 """
 
 from __future__ import annotations
@@ -29,70 +48,9 @@ from pyspark.sql.window import Window
 from icenetetl_spark.operators.scale import spread
 
 
-def _as_col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def _dot(x: Column | str, y: Column | str) -> Column:
-    x, y = _as_col(x), _as_col(y)
-    return F.aggregate(
-        F.zip_with(x, y, lambda u, v: u.cast("double") * v.cast("double")),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
-    )
-
-
-def cosine(x: Column | str, y: Column | str, dim: int | None = None) -> Column:
-    """Cosine similarity. With ``dim`` (statically-known array width) the
-    expression is the codegen-unrolled form — identical values, ~30x per
-    row; without it, the any-length interpreted fold. ONE dispatch point:
-    callers pass dim through rather than choosing a variant themselves.
-    Pass the operands as column-reference STRINGS where possible (see
-    :func:`dot_unrolled`) — same tree, built in one JVM parse."""
-    if dim:
-        return cosine_unrolled(x, y, dim)
-    return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
-
-
-def dot_unrolled(x: Column | str, y: Column | str, dim: int) -> Column:
-    """BIT-IDENTICAL to :func:`_dot` for length-``dim`` arrays — the same
-    left-to-right double accumulation ``((0+x1y1)+x2y2)+...`` — but as a
-    flat arithmetic expression instead of an interpreted higher-order
-    fold. ``aggregate``/``zip_with`` are CodegenFallback in Spark (every
-    row pays interpreted lambda dispatch, measured ~90us/row at d=64);
-    the unrolled form stays inside whole-stage codegen, which is what
-    makes exhaustive pairwise stages (SemDeDup within-cell pairs) viable.
-    Use when the dimension is statically known; fall back to the fold
-    (any length, same values) when it is not.
-
-    DRIVER-SIDE COST (r13, guide §7.3): building the 64-term tree with
-    per-term Column operators costs ~2,500 py4j round-trips PER CALL —
-    profiled at 6.7s of dedup_semantic_two_level's 9.9s wall (38k socket
-    round-trips for its ten dots; pure serial driver time that a cluster
-    cannot parallelize away). When both operands are column-reference
-    STRINGS (anything ``F.expr`` resolves like ``F.col`` does: ``"v"``,
-    ``"a.vec"``), the IDENTICAL expression text is assembled in Python
-    and parsed JVM-side in ONE call. The parsed tree matches the
-    operator-built tree node-for-node — ``0.0D`` is ``lit(0.0)``,
-    ``CAST(element_at(c, i) AS DOUBLE)`` is ``element_at(c, i)
-    .cast("double")``, and SQL ``+``/``*`` associate exactly like the
-    Python loop — so analysis, codegen, and values are unchanged
-    (equality + analyzed-plan identity pinned in
-    tests/test_similarity.py). Column operands keep the per-term builder."""
-    if isinstance(x, str) and isinstance(y, str):
-        return F.expr(_dot_sql(x, y, dim))
-    out = F.lit(0.0)
-    for i in range(1, dim + 1):
-        out = out + (
-            F.element_at(x, i).cast("double")
-            * F.element_at(y, i).cast("double")
-        )
-    return out
-
-
 def _qident(name: str) -> str:
     """Backtick-quote each dot-separated part of a column reference so the
-    SQL-text path accepts any name ``F.col`` accepts (spaces, hyphens,
+    SQL text accepts any name ``F.col`` accepts (spaces, hyphens,
     reserved words — ADVICE r13 #2). Dots keep their ``F.col`` meaning
     (qualifier / struct-field separators); embedded backticks escape by
     doubling, the standard Spark identifier rule. A reference already
@@ -105,9 +63,14 @@ def _qident(name: str) -> str:
     )
 
 
-def _dot_sql(x: str, y: str, dim: int) -> str:
-    """The :func:`dot_unrolled` expression as SQL text (see its note)."""
+def _dot_sql(x: str, y: str, dim: int | None = None) -> str:
+    """SQL text of the double dot product (see the module note)."""
     xq, yq = _qident(x), _qident(y)
+    if not dim:
+        return (
+            f"aggregate(zip_with({xq}, {yq}, (u, v) -> "
+            "CAST(u AS DOUBLE) * CAST(v AS DOUBLE)), 0.0D, (acc, z) -> acc + z)"
+        )
     terms = " + ".join(
         f"CAST(element_at({xq}, {i}) AS DOUBLE) * "
         f"CAST(element_at({yq}, {i}) AS DOUBLE)"
@@ -116,18 +79,20 @@ def _dot_sql(x: str, y: str, dim: int) -> str:
     return f"0.0D + {terms}"
 
 
-def cosine_unrolled(x: Column | str, y: Column | str, dim: int) -> Column:
-    """Codegen twin of :func:`cosine` — identical values (same fp order),
-    statically-known dimension. String operands assemble the whole
-    dot/(sqrt*sqrt) expression in ONE JVM parse (same tree — SQL ``/``,
-    ``*`` and ``SQRT`` are the operators the Column builder emits)."""
-    if isinstance(x, str) and isinstance(y, str):
-        return F.expr(
-            f"({_dot_sql(x, y, dim)}) / "
-            f"(SQRT({_dot_sql(x, x, dim)}) * SQRT({_dot_sql(y, y, dim)}))"
-        )
-    return dot_unrolled(x, y, dim) / (
-        F.sqrt(dot_unrolled(x, x, dim)) * F.sqrt(dot_unrolled(y, y, dim))
+def dot(x: str, y: str, dim: int | None = None) -> Column:
+    """Double dot product of two array columns, named by reference strings
+    (anything ``F.col`` resolves: ``"v"``, ``"a.vec"``, ``"`a.b`"``).
+    ``dim`` (statically-known array width) selects the codegen-unrolled
+    sum; without it, the any-length fold. Same values either way."""
+    return F.expr(_dot_sql(x, y, dim))
+
+
+def cosine(x: str, y: str, dim: int | None = None) -> Column:
+    """Cosine similarity ``dot(x, y) / (sqrt(dot(x, x)) * sqrt(dot(y, y)))``
+    as one expression, in the ``dim`` form of :func:`dot`."""
+    return F.expr(
+        f"({_dot_sql(x, y, dim)}) / "
+        f"(SQRT({_dot_sql(x, x, dim)}) * SQRT({_dot_sql(y, y, dim)}))"
     )
 
 
@@ -137,7 +102,6 @@ def knn_bruteforce(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, rank, cos).
 
@@ -162,7 +126,7 @@ def knn_bruteforce(
         .select(
             "query_id",
             "neighbor_id",
-            cosine("qv", "cv", dim=dim).alias("cos"),
+            cosine("qv", "cv").alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -199,13 +163,13 @@ def normalize_embeddings(
     with the same physical property (a concrete primitive array).
 
     fp-order contract: norm = sqrt of the left-to-right sequential dot
-    (dot_unrolled ≡ the fold, bit-identical), each element divided by it
+    (either :func:`dot` form, bit-identical), each element divided by it
     in double — mirrored in DuckDB as
     ``list_transform(dv, x -> x / sqrt(list_dot_product(dv, dv)))``.
     """
     v = F.col(vec_col)
     staged = df.withColumn(
-        "__nrm", F.sqrt(dot_unrolled(vec_col, vec_col, dim))
+        "__nrm", F.sqrt(dot(vec_col, vec_col, dim))
     )
     nv = F.array(
         *[
@@ -244,7 +208,7 @@ def knn_bruteforce_prenorm(
         .select(
             "query_id",
             "neighbor_id",
-            _dot(F.col("qv"), F.col("cv")).alias("cos"),
+            dot("qv", "cv").alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -277,7 +241,6 @@ def knn_sign_lsh(
     num_bits: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates limited to the query's sign-LSH bucket,
     then exact cosine rank within bucket. One equi-join shuffle on bucket id
@@ -301,7 +264,7 @@ def knn_sign_lsh(
         .select(
             "query_id",
             "neighbor_id",
-            cosine("qv", "cv", dim=dim).alias("cos"),
+            cosine("qv", "cv").alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -333,7 +296,7 @@ def hyperplane_buckets(
         F.col(vec_col).alias("__v"),
         F.struct(
             F.col("bit_idx"),
-            F.when(_dot(F.col(vec_col), F.col("nvec")) > 0, F.lit("1"))
+            F.when(dot(vec_col, "nvec") > 0, F.lit("1"))
             .otherwise(F.lit("0"))
             .alias("bit"),
         ).alias("ib"),
@@ -356,7 +319,6 @@ def knn_hyperplane_lsh(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k with PROJECTION-based LSH buckets: candidates
     share the sign pattern across all hyperplanes in ``normals``, then
@@ -378,7 +340,7 @@ def knn_hyperplane_lsh(
         .select(
             "query_id",
             "neighbor_id",
-            cosine("qv", "cv", dim=dim).alias("cos"),
+            cosine("qv", "cv").alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -418,7 +380,6 @@ def knn_sign_lsh_multiprobe(
     num_bits: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Multi-probe variant of :func:`knn_sign_lsh`: each query searches its
     own bucket AND all hamming-1 neighbor buckets (num_bits + 1 probes),
@@ -448,7 +409,7 @@ def knn_sign_lsh_multiprobe(
         .select(
             "query_id",
             "neighbor_id",
-            cosine("qv", "cv", dim=dim).alias("cos"),
+            cosine("qv", "cv").alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -566,18 +527,6 @@ def embedding_near_duplicates(
     # precomputed once per row (map-side, linear), the pair stage is one
     # dot plus a divide and compiles. Bit-identical: same operands, same
     # accumulation order, sqrt factored out of the division.
-    def _nrm(col: Column | str) -> Column:
-        from icenetetl_spark.operators.similarity import _dot, dot_unrolled
-
-        d = dot_unrolled(col, col, dim) if dim else _dot(col, col)
-        return F.sqrt(d)
-
-    def _pair_cos(va, vb, na, nb) -> Column:
-        from icenetetl_spark.operators.similarity import _dot, dot_unrolled
-
-        d = dot_unrolled(va, vb, dim) if dim else _dot(va, vb)
-        return d / (na * nb)
-
     # r13 (guide §2.5): both the norm projections and the pair stage run
     # on this frame's partitioning; spread() keeps a row-group-bound scan
     # from serializing them (no-op once parallel — operators/scale.py).
@@ -586,20 +535,20 @@ def embedding_near_duplicates(
         a = emb.select(
             F.col(id_col).alias("id_a"),
             F.col(vec_col).alias("va"),
-            _nrm(vec_col).alias("na"),
+            F.sqrt(dot(vec_col, vec_col, dim)).alias("na"),
         )
         b = emb.select(
             F.col(id_col).alias("id_b"),
             F.col(vec_col).alias("vb"),
-            _nrm(vec_col).alias("nb"),
+            F.sqrt(dot(vec_col, vec_col, dim)).alias("nb"),
         )
         return (
             a.join(b, F.col("id_a") < F.col("id_b"))
             .select(
                 "id_a",
                 "id_b",
-                _pair_cos(
-                    "va", "vb", F.col("na"), F.col("nb")
+                (
+                    dot("va", "vb", dim) / (F.col("na") * F.col("nb"))
                 ).alias("cos"),
             )
             .filter(F.col("cos") >= threshold)
@@ -633,7 +582,7 @@ def embedding_near_duplicates(
     banded = emb.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),
-        _nrm(vec_col).alias("nrm"),
+        F.sqrt(dot(vec_col, vec_col, dim)).alias("nrm"),
         F.explode(F.array(*band_structs)).alias("b"),
     ).select("vid", "vec", "nrm", "b.band_idx", "b.band_sig")
     a, b = banded.alias("a"), banded.alias("b")
@@ -647,8 +596,8 @@ def embedding_near_duplicates(
         .select(
             F.col("a.vid").alias("id_a"),
             F.col("b.vid").alias("id_b"),
-            _pair_cos(
-                "a.vec", "b.vec", F.col("a.nrm"), F.col("b.nrm")
+            (
+                dot("a.vec", "b.vec", dim) / (F.col("a.nrm") * F.col("b.nrm"))
             ).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
@@ -684,8 +633,8 @@ def mmr_select(
 
     r13 construction note (guide §7.3): the reference vectors are
     PROJECTED as literal-array columns (``__q``, ``__s<j>``) and the
-    cosines take column NAMES, riding the one-parse string path of
-    :func:`dot_unrolled`. Inlining the 64-literal array into every
+    cosines take column NAMES, riding the one-parse SQL text of
+    :func:`dot`. Inlining the 64-literal array into every
     element_at term of a Column-built unrolled cosine re-embedded the
     array 64 times per dot (4,096 literal nodes) and cost 122k py4j
     round-trips / 27.6s of doc_mmr_diverse's 32.9s construction;

@@ -24,16 +24,19 @@ _COS = """
 """
 
 
-# The knn SCORING paths deliberately do NOT pass dim=EMB_DIM: the
-# codegen-unrolled cosine (3 unrolled dots per pair in one projection)
-# measured ~3x SLOWER than the interpreted fold on this path — A/B
-# medians-of-3, same session, sf0.1: bruteforce fold 0.51s vs unrolled
-# 1.50s; sign_lsh fold 0.31s vs unrolled 1.32s (the generated method
-# outgrows the JIT and runs as interpreted bytecode). The unrolled form
-# stays where it was measured to WIN: the SemDeDup / near-dup refine
-# stages (one dot per pair over banded candidates). See SCALING.md
-# "Cosine dispatch" for the full table including the pre-normalized
-# variants (knn_bruteforce_prenorm is the stored-normalized-column plan).
+# Dispatch: every vector score is operators.similarity.dot/cosine, and
+# the only choice a call site makes is whether to pass dim=EMB_DIM. Pass
+# it where a stage computes ONE dot per row (hoisted norms: SemDeDup,
+# near-dup refine, IVF/PQ probe and assignment) — the unrolled sum stays
+# in whole-stage codegen. Omit it for 3-dot knn scoring: the knn
+# operators take no dim and always run the fold, because the unrolled
+# cosine (3 unrolled dots per pair in one projection) measured ~3x SLOWER
+# there — A/B medians-of-3, same session, sf0.1: bruteforce fold 0.51s vs
+# unrolled 1.50s; sign_lsh fold 0.31s vs unrolled 1.32s (the generated
+# method outgrows the JIT and runs as interpreted bytecode). See
+# SCALING.md "Cosine dispatch" for the full table including the
+# pre-normalized variants (knn_bruteforce_prenorm is the
+# stored-normalized-column plan).
 
 
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,14 +95,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label vector statistics — array fold staying JVM-side."""
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding")
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(vec, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-    )
+    norm = F.sqrt(S.dot("embedding", "embedding"))
     return (
         emb.select("label", "vec_id", norm.alias("norm"))
         .groupBy("label")
@@ -193,8 +189,6 @@ def knn_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("nvec"),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    # dim deliberately omitted: fold beats unrolled on knn scoring
-    # (see the dispatch note above knn_bruteforce).
     return _hp(queries, emb, normals, k=K)
 
 
@@ -1421,7 +1415,7 @@ def knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "query_id",
         "neighbor_id",
-        S.cosine(F.col("qv"), F.col("cv")).alias("cos"),
+        S.cosine("qv", "cv").alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id")
@@ -1488,7 +1482,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qv))
         .select(
             F.col("vec_id").alias("doc_id"),
-            S.cosine(F.col("embedding"), F.col("qv")).alias("cos"),
+            S.cosine("embedding", "qv").alias("cos"),
         )
     )
     # distributed top-k (TakeOrderedAndProject), then rank over k rows

@@ -257,3 +257,47 @@ def test_nc_ingest_end_to_end_matches_dataframe_path(spark, tmp_path):
         a = sorted(map(str, cat_nc.read(table).collect()))
         b = sorted(map(str, cat_df.read(table).collect()))
         assert a == b, f"{table}: .nc path diverged from DataFrame path"
+
+
+def test_truncated_nc_txn_ingest_commits_nothing(spark, tmp_path):
+    """A .nc drop cut in half must fail the CLI ``ingest --txn`` without
+    touching a warehouse that already holds one drop: no new manifest in
+    any table's txn log, and every table reads back unchanged. At 8x8 the
+    header survives the cut, so the failure comes from the data section,
+    inside the pipeline's Spark jobs, not from the CLI's header read."""
+    import glob
+    import os
+
+    from icenetetl_spark.cli import main
+    from icenetetl_spark.plans.icenet import make_txn_catalog
+
+    wh = str(tmp_path / "wh")
+    good = tmp_path / "north_2024-03-01.nc"
+    good.write_bytes(make_netcdf_bytes("2024-03-01", "north", 8, 2, seed=1))
+    assert main(["ingest", str(good), "--warehouse", wh, "--txn"]) == 0
+
+    def manifests():
+        return sorted(glob.glob(os.path.join(wh, "*", "_manifests", "*")))
+
+    def contents():
+        cat = make_txn_catalog(spark, wh)
+        return {
+            t: sorted(map(str, cat.read(t).collect()))
+            for t in ("forecasts", "cells", "forecast_meta")
+        }
+
+    log_before, tables_before = manifests(), contents()
+    assert log_before and all(tables_before.values())
+
+    raw = make_netcdf_bytes("2024-03-08", "north", 8, 2, seed=2)
+    bad = tmp_path / "cut" / "north_2024-03-08.nc"
+    bad.parent.mkdir()
+    bad.write_bytes(raw[: len(raw) // 2])
+    assert file_attrs(bad.read_bytes()).geospatial_lat_max == 85.0
+    try:
+        rc = main(["ingest", str(bad), "--warehouse", wh, "--txn"])
+    except Exception:
+        rc = None
+    assert rc != 0, "a truncated drop must not ingest cleanly"
+    assert manifests() == log_before
+    assert contents() == tables_before

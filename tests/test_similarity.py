@@ -268,17 +268,76 @@ def test_hybrid_rrf_fuses_both_arms(spark):
     assert scores == sorted(scores)
 
 
+def test_dot_and_cosine_forms_match_duckdb_exactly(spark, emb):
+    """Both forms of ``dot``/``cosine`` — the 64-term unrolled sum and the
+    any-length fold — must return EXACTLY DuckDB's ``list_dot_product``
+    doubles on 400 embedding pairs; the oracle hash gate relies on
+    it. A column literally named ``a.b``, referenced as a backticked
+    string, is one more input: the SQL text must resolve it to that
+    column rather than split it into qualifier ``a`` and field ``b``."""
+    import duckdb
+
+    from icenetetl_spark.operators.similarity import cosine, dot
+
+    head = emb.filter(F.col("vec_id") < 20)
+    pairs = head.select(
+        F.col("vec_id").alias("ida"),
+        F.col("embedding").alias("va"),
+        F.col("embedding").alias("a.b"),
+    ).crossJoin(
+        head.select(F.col("vec_id").alias("idb"), F.col("embedding").alias("vb"))
+    )
+    scores = [
+        f(a, "vb", dim)
+        for a in ("va", "`a.b`")
+        for dim in (64, None)
+        for f in (dot, cosine)
+    ]
+    got = {
+        (r[0], r[1]): tuple(r[2:])
+        for r in pairs.select("ida", "idb", *scores).collect()
+    }
+    a, b = "CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])"
+    rows = duckdb.connect().execute(
+        f"""SELECT a.vec_id, b.vec_id, list_dot_product({a}, {b}),
+                   list_dot_product({a}, {b})
+                   / (sqrt(list_dot_product({a}, {a}))
+                      * sqrt(list_dot_product({b}, {b})))
+            FROM '{SF_DIR}/embeddings.parquet' a,
+                 '{SF_DIR}/embeddings.parquet' b
+            WHERE a.vec_id < 20 AND b.vec_id < 20"""
+    ).fetchall()
+    want = {(ia, ib): (d, c) * 4 for ia, ib, d, c in rows}
+    assert len(got) == 400
+    assert got == want
+
+
+def _column_dot(x, y, dim):
+    """The 64-term sum built with per-term Column operators: the reference
+    the one-parse SQL text of ``dot(x, y, dim)`` must reproduce."""
+    out = F.lit(0.0)
+    for i in range(1, dim + 1):
+        out = out + (
+            F.element_at(x, i).cast("double") * F.element_at(y, i).cast("double")
+        )
+    return out
+
+
+def _column_cosine(x, y, dim):
+    return _column_dot(x, y, dim) / (
+        F.sqrt(_column_dot(x, x, dim)) * F.sqrt(_column_dot(y, y, dim))
+    )
+
+
 def test_dot_unrolled_string_form_is_tree_identical(spark, emb):
-    """The r13 driver-side fix (one F.expr parse instead of ~2,500 py4j
-    round-trips per 64-term dot) must be a pure construction-cost change:
-    the parsed tree, the analyzed plan, and every value must equal the
-    Column-built form exactly — anything else would shift the hash gate."""
+    """The one F.expr parse of the unrolled ``dot``/``cosine`` (instead of
+    ~2,500 py4j round-trips per 64-term dot) must be a pure
+    construction-cost change: the analyzed plan and every value must equal
+    the per-term Column-built sum exactly — anything else would shift the
+    hash gate."""
     import re
 
-    from icenetetl_spark.operators.similarity import (
-        cosine_unrolled,
-        dot_unrolled,
-    )
+    from icenetetl_spark.operators.similarity import cosine, dot
 
     def canon(df):
         # strip expression-id counters (#123) — the only legitimate delta
@@ -287,9 +346,9 @@ def test_dot_unrolled_string_form_is_tree_identical(spark, emb):
         )
 
     col_form = emb.select(
-        dot_unrolled(F.col("embedding"), F.col("embedding"), 64).alias("d")
+        _column_dot(F.col("embedding"), F.col("embedding"), 64).alias("d")
     )
-    str_form = emb.select(dot_unrolled("embedding", "embedding", 64).alias("d"))
+    str_form = emb.select(dot("embedding", "embedding", 64).alias("d"))
     assert canon(col_form) == canon(str_form)
     assert [r["d"] for r in col_form.collect()] == [
         r["d"] for r in str_form.collect()
@@ -302,9 +361,9 @@ def test_dot_unrolled_string_form_is_tree_identical(spark, emb):
         emb.select(F.col("vec_id").alias("idb"), F.col("embedding").alias("vb"))
     ).limit(500)
     cos_col = pairs.select(
-        cosine_unrolled(F.col("va"), F.col("vb"), 64).alias("c")
+        _column_cosine(F.col("va"), F.col("vb"), 64).alias("c")
     )
-    cos_str = pairs.select(cosine_unrolled("va", "vb", 64).alias("c"))
+    cos_str = pairs.select(cosine("va", "vb", 64).alias("c"))
     assert canon(cos_col) == canon(cos_str)
     assert [r["c"] for r in cos_col.collect()] == [
         r["c"] for r in cos_str.collect()
@@ -313,21 +372,20 @@ def test_dot_unrolled_string_form_is_tree_identical(spark, emb):
 
 def test_unrolled_string_form_accepts_backtick_quoted_names(spark, emb):
     """A column literally named ``a.b`` is referenced as a backticked
-    string, as with ``F.col``; the SQL-text path must resolve it to that
-    column rather than split it into qualifier ``a`` and field ``b``."""
-    from icenetetl_spark.operators.similarity import (
-        cosine_unrolled,
-        dot_unrolled,
-    )
+    string, as with ``F.col``; the SQL text must resolve it to that
+    column rather than split it into qualifier ``a`` and field ``b`` —
+    in the unrolled form and in the fold."""
+    from icenetetl_spark.operators.similarity import cosine, dot
 
     df = emb.select(F.col("embedding").alias("a.b")).limit(50)
     ref = "`a.b`"
-    got = df.select(
-        dot_unrolled(ref, ref, 64).alias("d"),
-        cosine_unrolled(ref, ref, 64).alias("c"),
-    ).collect()
     want = df.select(
-        dot_unrolled(F.col(ref), F.col(ref), 64).alias("d"),
-        cosine_unrolled(F.col(ref), F.col(ref), 64).alias("c"),
+        _column_dot(F.col(ref), F.col(ref), 64).alias("d"),
+        _column_cosine(F.col(ref), F.col(ref), 64).alias("c"),
     ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    for dim in (64, None):
+        got = df.select(
+            dot(ref, ref, dim).alias("d"),
+            cosine(ref, ref, dim).alias("c"),
+        ).collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want]
