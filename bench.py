@@ -1,12 +1,13 @@
 """Benchmark driver: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"queries": {name: sec, ...}, "layers": {name: record, ...}, "sf": ...}.
 
-Each query is materialized via a count-style action (no driver collect of
-payload rows — we time the full plan execution, not result transfer).
-A warmup query first touches every table so JVM/codegen/page-cache warmup
-isn't attributed to the first measured query.
+Each query is built and then materialized into the noop sink by
+tools/measure.run (no driver collect of payload rows — we time the full
+plan execution, not result transfer), which also records each phase's
+Spark counters. measure.warmup first touches every table so
+JVM/codegen/page-cache warmup isn't attributed to the first measured query.
 
 Timings are the PER-QUERY MEDIAN over $SPARK_GRAFT_BENCH_RUNS passes
 (default 3): single runs at sf0.1 show ~3s random stalls on arbitrary
@@ -20,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -37,7 +39,7 @@ os.environ["ICENETETL_FIT_CACHE_DIR"] = ""
 
 from icenetetl_spark.queries import all_queries  # noqa: E402
 from icenetetl_spark.session import get_spark  # noqa: E402
-from icenetetl_spark.sources.testdata import TABLES, load_table  # noqa: E402
+from tools import measure  # noqa: E402
 
 BENCH_QUERIES = [
     # relational headliners
@@ -122,61 +124,37 @@ def _ambient_probe(spark, reps: int = 3) -> list[float]:
     return out
 
 
+def _median(xs) -> float:
+    return round(statistics.median(xs), 3)
+
+
+def _layers(records: list[measure.RunRecord]) -> dict:
+    """Per-field medians of one query's run records."""
+    out = {
+        "construct_s": _median(r.construct_s for r in records),
+        "execute_s": _median(r.execute_s for r in records),
+    }
+    for phase in ("construct", "execute"):
+        out[phase] = {
+            k: _median(getattr(r, phase)[k] for r in records)
+            for k in getattr(records[0], phase)
+        }
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("icenetetl-bench")
     queries = all_queries()
 
-    # warmup: touch every table (page cache + parquet footers), then one
-    # tiny agg + join so shuffle machinery and codegen are warm before the
-    # first measured query (steady-state timing, not JVM cold start)
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-    # the flagship's fixture parquet is an input table too
-    from icenetetl_spark.queries.icenet import _FIXTURE_PATH
-
-    spark.read.parquet(_FIXTURE_PATH).count()
-    from pyspark.sql import functions as F
-
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    li.groupBy("l_returnflag").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-    ).count()
-    li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-    # one-time process machinery the tiny agg/join above doesn't reach —
-    # each would otherwise bill its multi-second setup to whichever measured
-    # query hits it first:
-    # 1. the Arrow Python-worker pool (mapInPandas/pandas_udf queries),
-    #    one worker per core
-    slots = spark.sparkContext.defaultParallelism
-    spark.range(64).repartition(slots).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-    # 2. WindowExec + row_number codegen (top-k / sessionize / sequential id)
-    from pyspark.sql.window import Window
-
-    li.limit(512).withColumn(
-        "__rn",
-        F.row_number().over(
-            Window.partitionBy("l_returnflag").orderBy("l_orderkey")
-        ),
-    ).count()
-    # 3. localCheckpoint block-manager path (prefix sums, star rounds)
-    spark.range(128).localCheckpoint(eager=True).count()
-    # 4. broadcast-exchange thread pool
-    li.limit(256).join(
-        F.broadcast(orders.limit(64)),
-        li.l_orderkey == orders.o_orderkey,
-        "left",
-    ).count()
+    measure.warmup(spark, sf_dir)
 
     probe_pre = _ambient_probe(spark)
 
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     suite = BENCH_QUERIES + BENCH_QUERIES_EXT
-    samples: dict[str, list[float]] = {n: [] for n in suite}
+    samples: dict[str, list[measure.RunRecord]] = {n: [] for n in suite}
     # r11 drift lesson: the r11 driver run's FIRST pre-probe read 2.53s vs
     # ~1.3s for the other five — a pre/post-only probe can miss an ambient
     # burst that lands mid-suite. One probe rep between suite passes makes
@@ -193,13 +171,8 @@ def main() -> None:
         if i > 0:
             probe_mid += _ambient_probe(spark, reps=1)
         for name in suite:
-            fn = queries[name]
             n_ev = len(FIT_EVENTS)
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            # force full materialization of every column, not just count paths
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(time.time() - t0)
+            samples[name].append(measure.run(spark, queries[name], sf_dir))
             if len(FIT_EVENTS) > n_ev:
                 fit_cache.setdefault(name, []).append(
                     "+".join(f"{k}:{src}" for k, src in FIT_EVENTS[n_ev:])
@@ -207,11 +180,7 @@ def main() -> None:
 
     probe_post = _ambient_probe(spark)
 
-    import statistics
-
-    timings = {
-        n: round(statistics.median(s), 3) for n, s in samples.items()
-    }
+    timings = {n: _median(r.wall for r in s) for n, s in samples.items()}
     # `value` remains the LEGACY-21 total (comparable with rounds 1-9);
     # the extended suite reports alongside it
     total = round(sum(timings[n] for n in BENCH_QUERIES), 3)
@@ -230,6 +199,9 @@ def main() -> None:
                 "value_extended": total_ext,
                 "unit": "sec",
                 "queries": timings,
+                # per-query medians of each phase's wall and Spark
+                # counters (tools/measure.RunRecord)
+                "layers": {n: _layers(s) for n, s in samples.items()},
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 # r14 (VERDICT r13 #2): the EFFECTIVE core count the
                 # session honors ($SPARK_GRAFT_CPUS -> local[N]) so the

@@ -59,14 +59,15 @@ def test_oracle_sql_is_nonempty_select():
 
 
 def test_bench_queries_are_registered():
-    """bench.py's headline list must stay a subset of the registry —
-    retiring a query from the registry without updating BENCH_QUERIES
-    would crash the driver's per-round bench run (the round-6 stub
-    retirement nearly did)."""
+    """bench.py's headline and extended lists must stay a subset of the
+    registry — retiring a query from the registry without updating
+    BENCH_QUERIES or BENCH_QUERIES_EXT would crash the driver's per-round
+    bench run (the round-6 stub retirement nearly did)."""
     import bench
 
     mod = _load_entry()
-    missing = set(bench.BENCH_QUERIES) - set(mod.queries())
+    suite = bench.BENCH_QUERIES + bench.BENCH_QUERIES_EXT
+    missing = set(suite) - set(mod.queries())
     assert not missing, f"bench queries not in registry: {missing}"
 
 

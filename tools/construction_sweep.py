@@ -1,9 +1,10 @@
-"""Construction-cost sweep: time ONLY the query-function call (plan
-building + any construction-time driver jobs) for every registry entry,
-twice, and report the second (warm) pass sorted descending.
+"""Construction-cost sweep: run every registry entry twice through
+tools/measure.run and report the construction phase (plan building + any
+construction-time driver jobs) of the second (warm) pass, sorted
+descending, with the jobs it ran.
 
 Finds guide-§7.3 driver-side hotspots (py4j chatter, probe jobs, eager
-pins) across the whole registry without paying full executions.
+pins) across the whole registry.
 
 Usage: python tools/construction_sweep.py [top_n]
 """
@@ -12,9 +13,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import measure  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -24,30 +26,25 @@ def main() -> None:
 
     from icenetetl_spark.queries import all_queries
     from icenetetl_spark.session import get_spark
-    from icenetetl_spark.sources.testdata import TABLES, load_table
 
     spark = get_spark("construction-sweep")
-    for t in TABLES:
-        load_table(spark, SF_DIR, t).count()
+    measure.warmup(spark, SF_DIR)
 
     qs = all_queries()
     rows = []
     for name, fn in sorted(qs.items()):
         try:
-            t0 = time.time()
-            fn(spark, SF_DIR)
-            cold = time.time() - t0
-            t0 = time.time()
-            fn(spark, SF_DIR)
-            warm = time.time() - t0
-            rows.append((warm, cold, name))
+            cold = measure.run(spark, fn, SF_DIR)
+            warm = measure.run(spark, fn, SF_DIR)
+            rows.append((warm.construct_s, cold.construct_s,
+                         int(warm.construct["jobs"]), name))
         except Exception as e:  # noqa: BLE001 - report and continue
             print(f"ERROR {name}: {e}")
     rows.sort(reverse=True)
-    print(f"{'warm_s':>8} {'cold_s':>8}  query")
-    for warm, cold, name in rows[:top_n]:
-        print(f"{warm:8.3f} {cold:8.3f}  {name}")
-    total = sum(w for w, _, _ in rows)
+    print(f"{'warm_s':>8} {'cold_s':>8} {'jobs':>5}  query")
+    for warm, cold, jobs, name in rows[:top_n]:
+        print(f"{warm:8.3f} {cold:8.3f} {jobs:>5}  {name}")
+    total = sum(w for w, *_ in rows)
     print(f"registry construction total (warm): {total:.1f}s over {len(rows)} queries")
     spark.stop()
 

@@ -39,15 +39,12 @@ from __future__ import annotations
 import argparse
 import os
 import shutil
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
-from icenetetl_spark.queries import all_queries  # noqa: E402
 from icenetetl_spark.queries.similarity import (  # noqa: E402
     EMB_DIM,
     IVF_CENTROID_IDS,
@@ -55,6 +52,7 @@ from icenetetl_spark.queries.similarity import (  # noqa: E402
 )
 from icenetetl_spark.session import get_spark  # noqa: E402
 from icenetetl_spark.sources.testdata import load_table  # noqa: E402
+from tools import measure  # noqa: E402
 from tools.scale_stress import BASE_SF, _copies  # noqa: E402
 
 UNIFORM_DIR = "/tmp/icenetetl-ivfskew-uniform"
@@ -157,28 +155,6 @@ def cell_occupancy(spark: SparkSession, sf_dir: str, top: int = 3):
     ]
 
 
-def measure(spark: SparkSession, runs: int) -> tuple[dict, dict]:
-    queries = all_queries()
-    uni, hot = {}, {}
-    for name in IVF_QUERIES:
-        fn = queries[name]
-        u_s, s_s = [], []
-        for _ in range(runs + 1):  # interleaved; cold pair dropped
-            t0 = time.time()
-            fn(spark, UNIFORM_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            u_s.append(time.time() - t0)
-            t0 = time.time()
-            fn(spark, SKEWED_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            s_s.append(time.time() - t0)
-        uni[name] = round(statistics.median(u_s[1:]), 3)
-        hot[name] = round(statistics.median(s_s[1:]), 3)
-    return uni, hot
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factor", type=int, default=50)
@@ -189,7 +165,10 @@ def main() -> int:
     build(spark, args.factor)
     occ_u = cell_occupancy(spark, UNIFORM_DIR)
     occ_s = cell_occupancy(spark, SKEWED_DIR)
-    uni, hot = measure(spark, args.runs)
+    walls = measure.interleave(
+        spark, [UNIFORM_DIR, SKEWED_DIR], IVF_QUERIES, args.runs
+    )
+    uni, hot = walls[UNIFORM_DIR], walls[SKEWED_DIR]
     spark.stop()
 
     n_vecs = 2000 * args.factor

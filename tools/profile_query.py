@@ -1,31 +1,42 @@
 """Per-job wall breakdown for one or more registered queries (guide §1).
 
-Runs each named query through the bench methodology (construction +
-noop-sink materialization) in a session with the REST status API enabled,
-then dumps every Spark job the query issued: wall, stage count, task time,
-and the first line of each stage's callsite — so a 5s query's wall can be
-attributed to its construction-time driver jobs (counts/first/collect)
-vs the materialization's stage chain.
+Runs each named query through tools/measure.run (construction, then the
+noop sink), then lists every Spark job the last rep issued from the
+driver's status store: wall, stage count, task count and the job's
+callsite — so a 5s query's wall can be attributed to its construction-time
+driver jobs (counts/first/collect) vs the materialization's stage chain.
 
 Usage: python tools/profile_query.py [-r reps] query [query ...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import measure  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def rest(app_base: str, path: str):
-    with urllib.request.urlopen(app_base + path) as r:
-        return json.load(r)
+def _jobs_after(store, last: int) -> list:
+    """Jobs newer than ``last``, oldest first (the store lists newest first)."""
+    jobs = store.jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() <= last:
+            break
+        out.append(j)
+    return out[::-1]
+
+
+def _job_wall_s(j) -> float:
+    return (
+        j.completionTime().get().getTime() - j.submissionTime().get().getTime()
+    ) / 1e3
 
 
 def main() -> None:
@@ -38,66 +49,35 @@ def main() -> None:
 
     from icenetetl_spark.queries import all_queries
     from icenetetl_spark.session import get_spark
-    from icenetetl_spark.sources.testdata import TABLES, load_table
 
-    spark = get_spark(
-        "profile", extra_conf={"spark.ui.enabled": "true"}
-    )
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    base = f"{ui}/api/v1/applications/{app_id}"
-
+    spark = get_spark("profile")
+    store = spark.sparkContext._jsc.sc().statusStore()
     qs = all_queries()
-    # warmup: same surface as bench.py
-    for t in TABLES:
-        load_table(spark, SF_DIR, t).count()
-    from pyspark.sql import functions as F
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    li.groupBy("l_returnflag").count().count()
-    spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
-    spark.range(128).localCheckpoint(eager=True).count()
+    measure.warmup(spark, SF_DIR)
 
     for name in names:
-        fn = qs[name]
-        walls = []
-        for rep in range(reps):
-            jobs_before = {j["jobId"] for j in rest(base, "/jobs")}
-            t0 = time.time()
-            df = fn(spark, SF_DIR)
-            t_built = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            t1 = time.time()
-            walls.append((t1 - t0, t_built - t0))
-            if rep != reps - 1:
-                continue
-            jobs = [
-                j for j in rest(base, "/jobs") if j["jobId"] not in jobs_before
-            ]
-            jobs.sort(key=lambda j: j["jobId"])
-            print(f"\n=== {name}: wall {t1 - t0:.3f}s "
-                  f"(construction {t_built - t0:.3f}s, exec {t1 - t_built:.3f}s) "
-                  f"all reps: {[round(w, 3) for w, _ in walls]} "
-                  f"constr: {[round(c, 3) for _, c in walls]}")
-            total_job = 0.0
-            for j in jobs:
-                from datetime import datetime, timezone
-
-                def ts(s):
-                    return datetime.strptime(
-                        s, "%Y-%m-%dT%H:%M:%S.%f%Z"
-                    ).replace(tzinfo=timezone.utc).timestamp()
-
-                dur = ts(j["completionTime"]) - ts(j["submissionTime"])
-                total_job += dur
-                print(
-                    f"  job {j['jobId']:>4} {dur*1000:7.0f}ms "
-                    f"stages={len(j.get('stageIds', []))} "
-                    f"tasks={j.get('numTasks', '?')} "
-                    f"{(j.get('name') or '')[:90]}"
-                )
-            print(f"  sum(job walls) = {total_job:.3f}s; "
-                  f"gaps (driver/plan time) = {t1 - t0 - total_job:.3f}s")
+        recs = [measure.run(spark, qs[name], SF_DIR) for _ in range(reps - 1)]
+        newest = store.jobsList(None)
+        last_job = newest.apply(0).jobId() if newest.size() else -1
+        rec = measure.run(spark, qs[name], SF_DIR)
+        recs.append(rec)
+        jobs = _jobs_after(store, last_job)
+        print(f"\n=== {name}: wall {rec.wall:.3f}s "
+              f"(construction {rec.construct_s:.3f}s, exec {rec.execute_s:.3f}s) "
+              f"all reps: {[round(r.wall, 3) for r in recs]} "
+              f"constr: {[round(r.construct_s, 3) for r in recs]}")
+        total_job = 0.0
+        for j in jobs:
+            dur = _job_wall_s(j)
+            total_job += dur
+            print(
+                f"  job {j.jobId():>4} {dur * 1000:7.0f}ms "
+                f"stages={j.stageIds().size()} "
+                f"tasks={j.numTasks()} "
+                f"{(j.name() or '')[:90]}"
+            )
+        print(f"  sum(job walls) = {total_job:.3f}s; "
+              f"gaps (driver/plan time) = {rec.wall - total_job:.3f}s")
     spark.stop()
 
 

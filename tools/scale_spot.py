@@ -31,10 +31,9 @@ from tools.scale_stress import (  # noqa: E402
     DESIGNED_ADAPTATIONS,
     _copies,
     _perturb_text,
-    measure_interleaved,
+    measure_sizes,
     plan_shape_summary,
 )
-import tools.scale_stress as stress  # noqa: E402
 
 SPOT_QUERIES = [
     "dedup_exact",
@@ -139,7 +138,7 @@ def build_scaled_subset(spark: SparkSession, factor: int) -> str:
         "event_type", "value", "props",
     ).repartition(64).write.parquet(f"{out}/events.parquet")
 
-    # the warmup in measure() touches every registry table: link the ones
+    # measure.warmup touches every registry table: link the ones
     # this spot check does NOT scale to their 1x files (cheap to touch,
     # never read by the spot queries)
     for t in ("region", "nation", "customer", "supplier", "part",
@@ -154,10 +153,9 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
-    stress.STRESS_QUERIES = SPOT_QUERIES  # measure_interleaved iterates this
     spark = get_spark("icenetetl-scale-spot")
     scaled = build_scaled_subset(spark, args.factor)
-    base, big = measure_interleaved(spark, BASE_SF, scaled, args.runs)
+    base, big = measure_sizes(spark, BASE_SF, scaled, SPOT_QUERIES, args.runs)
     spark.stop()
 
     # Derive the headline claim FROM the measurements (the round-6 review

@@ -34,9 +34,7 @@ from __future__ import annotations
 import argparse
 import os
 import shutil
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 
 from icenetetl_spark.queries import all_queries  # noqa: E402
 from icenetetl_spark.session import get_spark  # noqa: E402
-from icenetetl_spark.sources.testdata import TABLES, load_table  # noqa: E402
+from icenetetl_spark.sources.testdata import load_table  # noqa: E402
+from tools import measure  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 SCALED_DIR = "/tmp/icenetetl-scale{factor}"
@@ -320,48 +319,29 @@ def _exchanges(df: DataFrame) -> tuple[int, int]:
     return shuffles, broadcasts
 
 
-def _warmup(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-    spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
-
-
-def _run_once(fn, spark: SparkSession, sf_dir: str) -> float:
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.time() - t0
-
-
-def measure_interleaved(
-    spark: SparkSession, base_dir: str, big_dir: str, runs: int,
-    names: list[str] | None = None,
+def measure_sizes(
+    spark: SparkSession, base_dir: str, big_dir: str, names: list[str],
+    runs: int,
 ) -> tuple[dict, dict]:
-    """Per query: one untimed warmup at each size (codegen compile + page
-    cache for THIS plan — the first execution is routinely 2-5x the steady
-    state and is not what a long-running job pays), then ``runs`` timed
-    reps ALTERNATING 1x/10x. Interleaving makes the ratio compare
+    """Per query and size: exchange counts of the physical plan, and the
+    median wall of ``runs`` reps INTERLEAVED 1x/10x after one dropped round
+    (measure.interleave). Interleaving makes the ratio compare
     temporally-adjacent samples, so minutes-scale ambient noise on this
     shared host (see SCALING.md "Same-code bench variance") inflates both
     sides instead of silently multiplying one of them — a block design
     measured dedup_paragraphs at 9x twice while the isolated warm ratio
     is 1.6x."""
+    walls = measure.interleave(spark, [base_dir, big_dir], names, runs)
     queries = all_queries()
-    _warmup(spark, base_dir)
-    _warmup(spark, big_dir)
-    base_out, big_out = {}, {}
-    for name in (names if names is not None else STRESS_QUERIES):
-        fn = queries[name]
-        for sf_dir, out in ((base_dir, base_out), (big_dir, big_out)):
-            shuffles, broadcasts = _exchanges(fn(spark, sf_dir))
-            out[name] = {"shuffles": shuffles, "broadcasts": broadcasts}
-            _run_once(fn, spark, sf_dir)  # warmup, dropped
-        base_samples, big_samples = [], []
-        for _ in range(runs):
-            base_samples.append(_run_once(fn, spark, base_dir))
-            big_samples.append(_run_once(fn, spark, big_dir))
-        base_out[name]["sec"] = round(statistics.median(base_samples), 3)
-        big_out[name]["sec"] = round(statistics.median(big_samples), 3)
-    return base_out, big_out
+    out = []
+    for d in (base_dir, big_dir):
+        sizes = {}
+        for name in names:
+            shuffles, broadcasts = _exchanges(queries[name](spark, d))
+            sizes[name] = {"shuffles": shuffles, "broadcasts": broadcasts,
+                           "sec": walls[d][name]}
+        out.append(sizes)
+    return out[0], out[1]
 
 
 def main() -> int:
@@ -381,14 +361,14 @@ def main() -> int:
     spark = get_spark("icenetetl-scale-stress")
     scaled = build_scaled(spark, args.factor)
     names = STRESS_QUERIES + (DIAGNOSTIC_QUERIES if args.diagnostics else [])
-    base, big = measure_interleaved(spark, BASE_SF, scaled, args.runs, names)
+    base, big = measure_sizes(spark, BASE_SF, scaled, names, args.runs)
 
     lines = [
         "# SCALING — measured 10x stress (tools/scale_stress.py)",
         "",
         f"Base = sf0.1 ({BASE_SF}); scaled = {args.factor}x perturbed copies "
         f"(see the tool docstring for the perturbation that keeps dedup/ANN "
-        f"candidate structure realistic). local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}], "
+        f"candidate structure realistic). local[{spark.sparkContext.defaultParallelism}], "
         f"median of {args.runs} timed runs per size after one dropped "
         f"warmup execution per (query, size), 1x/10x reps INTERLEAVED so "
         f"ambient host noise hits both sides of each ratio, noop sink. "

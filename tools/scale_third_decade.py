@@ -42,10 +42,9 @@ from icenetetl_spark.session import get_spark  # noqa: E402
 from tools.scale_stress import (  # noqa: E402
     BASE_SF,
     DESIGNED_ADAPTATIONS,
-    measure_interleaved,
+    measure_sizes,
     plan_shape_summary,
 )
-import tools.scale_stress as stress  # noqa: E402
 from tools.scale_spot import build_scaled_subset  # noqa: E402
 
 THIRD_DECADE_QUERIES = [
@@ -67,10 +66,9 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=1)
     args = ap.parse_args()
 
-    stress.STRESS_QUERIES = THIRD_DECADE_QUERIES
     spark = get_spark("icenetetl-third-decade")
     scaled = build_scaled_subset(spark, args.factor)
-    base, big = measure_interleaved(spark, BASE_SF, scaled, args.runs)
+    base, big = measure_sizes(spark, BASE_SF, scaled, THIRD_DECADE_QUERIES, args.runs)
     spark.stop()
 
     over = [

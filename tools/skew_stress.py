@@ -39,17 +39,15 @@ import argparse
 import os
 import re
 import shutil
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
-from icenetetl_spark.queries import all_queries  # noqa: E402
 from icenetetl_spark.session import get_spark  # noqa: E402
 from icenetetl_spark.sources.testdata import TABLES, load_table  # noqa: E402
+from tools import measure  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 UNIFORM_DIR = "/tmp/icenetetl-skew-uniform"
@@ -208,37 +206,6 @@ def build(spark: SparkSession, factor: int) -> None:
         df.repartition(32).write.parquet(f"{SKEWED_DIR}/{t}.parquet")
 
 
-def measure(spark: SparkSession, runs: int) -> tuple[dict, dict]:
-    """INTERLEAVED A/B in one session: per query, alternate
-    uniform/skewed reps and drop the first (cold) pair — measuring one
-    whole corpus after the other let the second benefit from a warmer
-    JVM and produced physically implausible sub-1.0 'skew ratios' (the
-    same lesson as the round-7 cosine A/B: alternate variants within a
-    session, never sequence them)."""
-    queries = all_queries()
-    for sf_dir in (UNIFORM_DIR, SKEWED_DIR):
-        for t in TABLES:
-            load_table(spark, sf_dir, t).count()
-    uni, hot = {}, {}
-    for name in SKEW_QUERIES:
-        fn = queries[name]
-        u_samples, s_samples = [], []
-        for _ in range(runs + 1):  # +1 cold pair, dropped below
-            t0 = time.time()
-            fn(spark, UNIFORM_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            u_samples.append(time.time() - t0)
-            t0 = time.time()
-            fn(spark, SKEWED_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            s_samples.append(time.time() - t0)
-        uni[name] = round(statistics.median(u_samples[1:]), 3)
-        hot[name] = round(statistics.median(s_samples[1:]), 3)
-    return uni, hot
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factor", type=int, default=10)
@@ -250,7 +217,13 @@ def main() -> int:
 
     spark = get_spark("icenetetl-skew-stress")
     build(spark, args.factor)
-    uni, hot = measure(spark, args.runs)
+    # INTERLEAVED A/B in one session: measuring one whole corpus after the
+    # other let the second benefit from a warmer JVM and produced
+    # physically implausible sub-1.0 'skew ratios'
+    walls = measure.interleave(
+        spark, [UNIFORM_DIR, SKEWED_DIR], SKEW_QUERIES, args.runs
+    )
+    uni, hot = walls[UNIFORM_DIR], walls[SKEWED_DIR]
 
     lines = [
         "## Skewed-key stress (tools/skew_stress.py)",
