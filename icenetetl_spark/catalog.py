@@ -20,16 +20,24 @@ Scale notes:
 - Tables are written ``partitionBy`` the columns declared in
   ``PARTITIONING`` — date + hemisphere, mirroring the reference's B-tree
   read-path indexes (processor.py:286-288) with layout instead of indexes.
+- Every write this class makes records the table's schema in a
+  ``<table>/_schema.json`` sidecar (data columns, then partition columns:
+  the order Spark's inference gives; Spark skips the file for its ``_``
+  prefix). ``read`` hands it to the reader, so no read starts a
+  footer-inference job; a table without the sidecar is inferred as before.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from icenetetl_spark.operators.relational import insert_missing, upsert as upsert_plan
 
@@ -37,6 +45,25 @@ PARTITIONING: dict[str, list[str]] = {
     "forecasts": ["hemisphere", "date_forecast_generated"],
     "cells": ["hemisphere"],
 }
+
+SCHEMA_FILE = "_schema.json"
+
+
+def written_schema(dt: DataType) -> DataType:
+    """The type a parquet round trip gives back for ``dt``: every field,
+    array element and map value nullable, as Spark reads parquet files."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, written_schema(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(written_schema(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(written_schema(dt.keyType), written_schema(dt.valueType), True)
+    return dt
 
 
 class ParquetCatalog:
@@ -60,8 +87,18 @@ class ParquetCatalog:
                 return True
         return False
 
+    def schema(self, name: str) -> StructType | None:
+        """The schema recorded by the last write, None without a sidecar."""
+        try:
+            with open(os.path.join(self.path(name), SCHEMA_FILE)) as f:
+                return StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return None
+
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+        schema = self.schema(name)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(name))
 
     def read_pruned(
         self, name: str, branches: Sequence[Sequence[tuple[str, str, object]]]
@@ -73,8 +110,6 @@ class ParquetCatalog:
         are listed. Shared seam with TxnParquetCatalog.read_pruned (which
         prunes at the manifest level instead), letting plan code like the
         latest-snapshot recompute stay catalog-agnostic."""
-        from pyspark.sql import functions as F
-
         from icenetetl_spark.operators.relational import PRED_OPS
 
         disj = F.lit(False)
@@ -90,42 +125,84 @@ class ParquetCatalog:
         parts = PARTITIONING.get(name)
         return w.partitionBy(*parts) if parts else w
 
+    @staticmethod
+    def _layout_schema(name: str, schema: StructType) -> StructType:
+        """``schema`` as a read of the ``_writer`` layout returns it: data
+        columns, then the partition columns in directory order."""
+        parts = PARTITIONING.get(name, [])
+        fields = {f.name: f for f in written_schema(schema).fields}
+        return StructType(
+            [f for f in fields.values() if f.name not in parts]
+            + [fields[p] for p in parts]
+        )
+
+    @staticmethod
+    def _record_schema(path: str, schema: StructType) -> None:
+        with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+            json.dump(schema.jsonValue(), f)
+
+    def _create(self, name: str, df: DataFrame) -> int:
+        """Write ``df`` as the whole table at its path; returns its rows,
+        observed on the write job itself."""
+        obs = Observation()
+        counted = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        self._writer(counted, name).mode("overwrite").parquet(self.path(name))
+        self._record_schema(self.path(name), self._layout_schema(name, df.schema))
+        return obs.get["n"]
+
+    def _swap_in(self, staging: str, name: str) -> None:
+        target = self.path(name)
+        if os.path.isdir(target):
+            shutil.rmtree(target)
+        os.rename(staging, target)
+
     def overwrite(self, name: str, df: DataFrame) -> None:
         """CREATE OR REPLACE TABLE AS SELECT — matview refresh semantics.
         Staged write + directory swap so a plan reading the old table can
         finish materializing before the old files disappear."""
         staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
         self._writer(df, name).mode("overwrite").parquet(staging)
-        target = self.path(name)
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-        os.rename(staging, target)
+        self._record_schema(staging, self._layout_schema(name, df.schema))
+        self._swap_in(staging, name)
 
     def append(self, name: str, df: DataFrame) -> None:
+        """Add ``df``'s rows to the table. The sidecar stays only when the
+        frame has the table's recorded schema: after any other append a
+        read infers again."""
+        created = not self.exists(name)
         self._writer(df, name).mode("append").parquet(self.path(name))
+        schema = self._layout_schema(name, df.schema)
+        if created:
+            self._record_schema(self.path(name), schema)
+        elif self.schema(name) not in (None, schema):
+            os.unlink(os.path.join(self.path(name), SCHEMA_FILE))
 
     def append_missing(self, name: str, df: DataFrame, keys: Sequence[str]) -> int:
         """INSERT ... ON CONFLICT DO NOTHING. Returns rows appended.
         Idempotent: replaying the same batch appends nothing."""
         if not self.exists(name):
-            self._writer(df, name).mode("overwrite").parquet(self.path(name))
-            return -1
-        fresh = insert_missing(df, self.read(name), keys)
+            return self._create(name, df)
+        # the anti join puts the keys first; keep the frame's column order
+        # so the appended files match the table's and its sidecar survives
+        fresh = insert_missing(df, self.read(name), keys).select(*df.columns)
         # Materialize to staging before appending: `fresh` reads the target
         # table lazily, and appending while scanning the same files is racy.
+        # The count rides the staging write; the append rewrite repacks the
+        # staged small files.
         staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
-        fresh.write.parquet(staging)
-        fresh_back = self.spark.read.parquet(staging)
-        n = fresh_back.count()
+        obs = Observation()
+        fresh.observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(staging)
+        n = obs.get["n"]
         if n:
-            self.append(name, fresh_back)
+            staged = self.spark.read.schema(written_schema(fresh.schema))
+            self.append(name, staged.parquet(staging))
         shutil.rmtree(staging)
         return n
 
     def upsert(self, name: str, df: DataFrame, keys: Sequence[str]) -> None:
         """INSERT ... ON CONFLICT DO UPDATE (last-writer-wins on key)."""
         if not self.exists(name):
-            self._writer(df, name).mode("overwrite").parquet(self.path(name))
+            self._create(name, df)
             return
         merged = upsert_plan(df, self.read(name), keys)
         self.overwrite(name, merged)
@@ -169,10 +246,8 @@ class ParquetCatalog:
         # plain (non-hive-partitioned) layout: clustering replaces
         # partitioning for high-cardinality columns
         clustered.write.mode("overwrite").parquet(staging)
-        target = self.path(name)
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-        os.rename(staging, target)
+        self._record_schema(staging, written_schema(clustered.schema))
+        self._swap_in(staging, name)
 
     def compact(self, name: str, target_file_bytes: int = 128 * 1024 * 1024) -> int:
         """Rewrite the table into ~target-sized files.

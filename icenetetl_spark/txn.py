@@ -10,6 +10,10 @@ gap the way lakehouse formats do publicly:
   ``_manifests/`` log. Manifest ``v{N}.json`` lists the data directories
   visible at version N; readers resolve the latest manifest and read
   exactly those files — never a raw directory listing.
+- Each manifest also records ``schema``: the table's StructType JSON at
+  that version. Readers hand it to the parquet reader, so a read starts no
+  footer-inference job; a manifest without the key (written before it
+  existed) is read by inference.
 - A commit WRITES ITS DATA FIRST (invisible until referenced), then
   attempts to create ``v{N+1}.json`` with ``O_CREAT | O_EXCL`` — the
   filesystem's compare-and-swap: exactly one contender can create a given
@@ -36,8 +40,10 @@ import time
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
+from icenetetl_spark.catalog import written_schema
 from icenetetl_spark.operators.relational import insert_missing, upsert as upsert_plan
 
 
@@ -64,6 +70,18 @@ def _json_stat(v):
     if isinstance(v, (_dt.datetime, _dt.date)):
         return v.isoformat()
     return None
+
+
+def _manifest_schema(manifest: dict) -> StructType | None:
+    schema = manifest.get("schema")
+    return None if schema is None else StructType.fromJson(schema)
+
+
+def _widen(schema: StructType, other: StructType) -> StructType:
+    """``schema`` with ``other``'s extra columns appended in order — the
+    column order a ``mergeSchema`` read of both gives."""
+    extra = [f for f in other.fields if f.name not in schema.names]
+    return StructType(list(schema.fields) + extra)
 
 
 def _may_match(minmax, op: str, value) -> bool:
@@ -226,24 +244,28 @@ class TxnParquetCatalog:
                 )
         if where:
             dirs = self._prune_dirs(manifest, where)
-        base = self._data_dir(name)
+        schema = _manifest_schema(manifest)
         if not dirs:
             # every write set pruned: empty frame with the table's schema
-            df = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*[os.path.join(base, d) for d in manifest["dirs"]])
-                .limit(0)
-            )
+            df = self._scan(name, manifest["dirs"], schema).limit(0)
         else:
-            # mergeSchema: write sets appended after a column was added
-            # union cleanly (older sets read the new column as NULL) —
-            # Delta-style additive schema evolution
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(base, d) for d in dirs]
-            )
+            df = self._scan(name, dirs, schema)
         for col, op, value in where or []:
             df = df.filter(_PRED_OPS[op](F.col(col), F.lit(value)))
         return df
+
+    def _scan(
+        self, name: str, dirs: Sequence[str], schema: StructType | None
+    ) -> DataFrame:
+        """Parquet scan of the write sets ``dirs``. A known table schema
+        skips footer inference, and sets written before a column was added
+        read it as NULL; without one, mergeSchema infers the same union —
+        Delta-style additive schema evolution either way."""
+        reader = self.spark.read.option("mergeSchema", "true")
+        if schema is not None:
+            reader = reader.schema(schema)
+        base = self._data_dir(name)
+        return reader.parquet(*[os.path.join(base, d) for d in dirs])
 
     def read_pruned(
         self, name: str, branches: Sequence[Sequence[tuple[str, str, object]]]
@@ -289,22 +311,22 @@ class TxnParquetCatalog:
     ) -> tuple[str, int, dict]:
         """Materialize ``df`` as a new immutable write set; returns
         (dir-name, row-count, {col: [min, max]}). Invisible until a
-        manifest references it. Count and statistics come from ONE agg job
-        over the written files — stats collection adds no extra pass."""
+        manifest references it. Count and statistics are an Observation on
+        the write job itself: collecting them reads nothing back and starts
+        no job of its own."""
         d = f"ws-{uuid.uuid4().hex}"
-        full = os.path.join(self._data_dir(name), d)
-        df.write.parquet(full)
-        back = self.spark.read.parquet(full)
-        cols = [c for c in stats_cols if c in back.columns]
-        aggs = [F.count(F.lit(1))]
-        for c in cols:
-            aggs += [F.min(c), F.max(c)]
-        row = back.agg(*aggs).collect()[0]
+        cols = [c for c in stats_cols if c in df.columns]
+        aggs = [F.count(F.lit(1)).alias("n")]
+        for i, c in enumerate(cols):
+            aggs += [F.min(c).alias(f"min{i}"), F.max(c).alias(f"max{i}")]
+        obs = Observation()
+        df.observe(obs, *aggs).write.parquet(os.path.join(self._data_dir(name), d))
+        row = obs.get
         stats = {
-            c: [_json_stat(row[1 + 2 * i]), _json_stat(row[2 + 2 * i])]
+            c: [_json_stat(row[f"min{i}"]), _json_stat(row[f"max{i}"])]
             for i, c in enumerate(cols)
         }
-        return d, row[0], stats
+        return d, row["n"], stats
 
     def _drop_write_set(self, name: str, d: str) -> None:
         shutil.rmtree(os.path.join(self._data_dir(name), d), ignore_errors=True)
@@ -316,6 +338,7 @@ class TxnParquetCatalog:
         dirs: list[str],
         op: str,
         stats: dict[str, dict] | None = None,
+        schema: StructType | None = None,
     ) -> None:
         """CAS: publish v{base+1} if and only if nobody else has. The body
         is fully written (and fsynced) to a hidden temp file first, then
@@ -334,6 +357,7 @@ class TxnParquetCatalog:
                 "op": op,
                 "ts": time.time(),
                 "stats": {d: s for d, s in (stats or {}).items() if d in dirs},
+                "schema": None if schema is None else schema.jsonValue(),
             }
         )
         tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:8]}")
@@ -359,10 +383,16 @@ class TxnParquetCatalog:
         Blind write — no read-set to validate, so a conflict just means
         re-CAS at the next version (data files are already durable)."""
         ws, _, st = self._write_set(name, df, self._stats_for(name, stats_cols))
+        schema = written_schema(df.schema)
         for _ in range(self.max_retries):
             try:
                 self._try_commit(
-                    name, self.current_version(name), [ws], "overwrite", {ws: st}
+                    name,
+                    self.current_version(name),
+                    [ws],
+                    "overwrite",
+                    {ws: st},
+                    schema,
                 )
                 return
             except CommitConflict:
@@ -389,12 +419,15 @@ class TxnParquetCatalog:
             if base < 0:
                 ws, n, st = self._write_set(name, df, self._stats_for(name, stats_cols))
                 try:
-                    self._try_commit(name, -1, [ws], "create", {ws: st})
+                    self._try_commit(
+                        name, -1, [ws], "create", {ws: st}, written_schema(df.schema)
+                    )
                     return n
                 except CommitConflict:
                     self._drop_write_set(name, ws)
                     continue
-            fresh = insert_missing(df, self.read(name, base), keys)
+            existing = self.read(name, base)
+            fresh = insert_missing(df, existing, keys)
             ws, n, st = self._write_set(name, fresh, self._stats_for(name, stats_cols))
             if n == 0:
                 self._drop_write_set(name, ws)
@@ -408,8 +441,11 @@ class TxnParquetCatalog:
             prior = self._load_manifest(name, base)
             dirs = prior["dirs"] + [ws]
             merged_stats = {**prior.get("stats", {}), ws: st}
+            schema = _widen(existing.schema, written_schema(fresh.schema))
             try:
-                self._try_commit(name, base, dirs, "append_missing", merged_stats)
+                self._try_commit(
+                    name, base, dirs, "append_missing", merged_stats, schema
+                )
                 return n
             except CommitConflict:
                 self._drop_write_set(name, ws)
@@ -434,7 +470,9 @@ class TxnParquetCatalog:
             if base < 0:
                 ws, _, st = self._write_set(name, df, self._stats_for(name, stats_cols))
                 try:
-                    self._try_commit(name, -1, [ws], "create", {ws: st})
+                    self._try_commit(
+                        name, -1, [ws], "create", {ws: st}, written_schema(df.schema)
+                    )
                     return
                 except CommitConflict:
                     self._drop_write_set(name, ws)
@@ -442,7 +480,9 @@ class TxnParquetCatalog:
             merged = upsert_plan(df, self.read(name, base), keys)
             ws, _, st = self._write_set(name, merged, self._stats_for(name, stats_cols))
             try:
-                self._try_commit(name, base, [ws], "upsert", {ws: st})
+                self._try_commit(
+                    name, base, [ws], "upsert", {ws: st}, written_schema(merged.schema)
+                )
                 return
             except CommitConflict:
                 self._drop_write_set(name, ws)
@@ -489,10 +529,8 @@ class TxnParquetCatalog:
             kept = [d for d in manifest["dirs"] if d not in touched]
             if not touched:
                 return 0
-            bdir = self._data_dir(name)
-            affected = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(bdir, d) for d in touched]
-            )
+            schema = _manifest_schema(manifest)
+            affected = self._scan(name, touched, schema)
             keep_pred = None
             for col, op, value in where:
                 c = _PRED_OPS[op](F.col(col), F.lit(value))
@@ -501,11 +539,12 @@ class TxnParquetCatalog:
             # predicate (e.g. a column added by schema evolution that old
             # write sets read as NULL) must KEEP the row — a bare
             # ~keep_pred would drop it under three-valued logic
-            survivors = affected.filter(
-                ~F.coalesce(keep_pred, F.lit(False))
-            )
-            n_before = affected.count()
+            before = Observation()
+            survivors = affected.observe(
+                before, F.count(F.lit(1)).alias("n")
+            ).filter(~F.coalesce(keep_pred, F.lit(False)))
             ws, n_after, st = self._write_set(name, survivors, stats_cols)
+            n_before = before.get["n"]
             if n_after == n_before:
                 # stats said "may match" but nothing actually did
                 self._drop_write_set(name, ws)
@@ -523,7 +562,7 @@ class TxnParquetCatalog:
             }
             stats[ws] = st
             try:
-                self._try_commit(name, base, dirs, "delete", stats)
+                self._try_commit(name, base, dirs, "delete", stats, schema)
                 return n_before - n_after
             except CommitConflict:
                 self._drop_write_set(name, ws)
@@ -567,15 +606,17 @@ class TxnParquetCatalog:
         m2 = self._load_manifest(name, v2)
         d1, d2 = set(m1["dirs"]), set(m2["dirs"])
         only1, only2 = sorted(d1 - d2), sorted(d2 - d1)
-        base = self._data_dir(name)
-        # schema source: the differing write sets only — shared sets are
-        # not even footer-read. Under additive evolution the newest sets
-        # (always in the diff of a changing table) carry the union schema;
-        # the same-version case falls back to the v2 manifest.
+        # schema source: both manifests' schemas; for older manifests
+        # without one, inference over the differing write sets only —
+        # shared sets are not even footer-read. Under additive evolution
+        # the newest sets (always in the diff of a changing table) carry
+        # the union schema; the same-version case falls back to the v2
+        # manifest.
+        s1, s2 = _manifest_schema(m1), _manifest_schema(m2)
+        schema = _widen(s2, s1) if s1 is not None and s2 is not None else None
         src = (only1 + only2) or m2["dirs"]
         empty = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(base, d) for d in src])
+            self._scan(name, src, schema)
             .limit(0)
             .withColumn("_change_type", F.lit(""))
         )
@@ -586,9 +627,7 @@ class TxnParquetCatalog:
         def _subset(dirs: list[str]) -> DataFrame:
             if not dirs:
                 return empty.select(*ordered)
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(base, d) for d in dirs]
-            )
+            df = self._scan(name, dirs, schema)
             for c in ordered:
                 if c not in df.columns:
                     df = df.withColumn(
@@ -652,6 +691,7 @@ class TxnParquetCatalog:
                     list(old["dirs"]),
                     f"restore:v{version}",
                     dict(old.get("stats", {})),
+                    _manifest_schema(old),
                 )
                 return base + 1
             except CommitConflict:
@@ -769,7 +809,7 @@ class TxnParquetCatalog:
                 )
             try:
                 self._try_commit(
-                    name, base, list(write_sets), "compact", write_sets
+                    name, base, list(write_sets), "compact", write_sets, current.schema
                 )
                 return
             except CommitConflict:

@@ -316,3 +316,69 @@ def test_txn_pipeline_concurrent_ingest_loses_no_rows(spark, tmp_path):
     key = ["hemisphere", "date_forecast_generated", "date_forecast_for", "cell_id"]
     forecasts = cat.read("forecasts")
     assert forecasts.select(*key).distinct().count() == forecasts.count()
+
+
+TABLES = ["cells", "forecasts", "forecast_latest", "forecast_meta"]
+
+
+def _catalogs(spark, tmp_path):
+    from icenetetl_spark.plans.icenet import make_txn_catalog
+
+    return {
+        "plain": ParquetCatalog(spark, str(tmp_path / "plain")),
+        "txn": make_txn_catalog(spark, str(tmp_path / "txn")),
+    }
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` starts: a diff of the status store's job list."""
+    from perfbench.trace import SparkCounters
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    counters = SparkCounters(spark)
+    fn()
+    bus.waitUntilEmpty()
+    return int(counters.stop()["jobs"])
+
+
+def test_warm_drop_job_budget(spark, tmp_path):
+    """A repeat run of a landed drop takes its schemas from table metadata
+    and its counts from the writes: no inference, read-back or count jobs.
+    With schemas inferred on every read and counts read back after every
+    write, the same run took 44 (plain) and 50 (txn) jobs."""
+    budget = {"plain": 30, "txn": 30}
+    f, a = make_raw_file(spark, "2024-03-01", "north", grid_side=6, seed=1)
+    for label, cat in _catalogs(spark, tmp_path).items():
+        pipe = IceNetPipeline(cat)
+        pipe.run(f, a)
+        jobs = _jobs(spark, lambda: pipe.run(f, a))
+        assert jobs <= budget[label], (label, jobs)
+
+
+@pytest.mark.parametrize("drop", ["all_nan", "zero_rows"])
+def test_empty_drop_leaves_warehouse_unchanged(spark, tmp_path, drop):
+    """An all-NaN grid and a zero-row drop, landed on a warehouse holding
+    one drop, insert nothing and change no table's content."""
+    f1, a1 = make_raw_file(spark, "2024-03-01", "north", grid_side=6, seed=1)
+    f2, a2 = make_raw_file(spark, "2024-03-08", "north", grid_side=6, seed=2)
+    if drop == "all_nan":
+        nan = F.lit(float("nan")).cast("float")
+        f2 = f2.withColumn("sic_mean", nan).withColumn("sic_stddev", nan)
+    else:
+        f2 = f2.limit(0)
+    for label, cat in _catalogs(spark, tmp_path).items():
+        pipe = IceNetPipeline(cat)
+        pipe.run(f1, a1)
+        before = {t: table_fingerprint(cat.read(t)) for t in TABLES}
+        inserted = []
+        append_missing = cat.append_missing
+
+        def recording(*args, _orig=append_missing, **kwargs):
+            inserted.append(_orig(*args, **kwargs))
+            return inserted[-1]
+
+        cat.append_missing = recording
+        pipe.run(f2, a2)
+        assert inserted == [0, 0], label
+        assert {t: table_fingerprint(cat.read(t)) for t in TABLES} == before, label

@@ -621,3 +621,49 @@ def test_spread_requires_hash_keys(spark):
 
     with pytest.raises(ValueError, match="hash key"):
         spread(spark.range(3).coalesce(1))
+
+
+def test_catalog_schema_sidecar_matches_inference(spark, tmp_path):
+    """Every ParquetCatalog write leaves a ``_schema.json`` sidecar equal to
+    the schema Spark infers from the table's files, or none at all."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from icenetetl_spark.catalog import ParquetCatalog
+
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+
+    def rows(lo, hi, tag):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            F.lit(tag).alias("hemisphere"),
+            F.lit(datetime.date(2024, 3, 1)).alias("date_forecast_generated"),
+            F.array(F.col("id")).alias("arr"),
+        )
+
+    def check(name, op):
+        assert cat.schema(name) is not None, op
+        assert cat.read(name).schema == spark.read.parquet(cat.path(name)).schema, op
+
+    # "forecasts" is hive-partitioned (PARTITIONING), "t" is not
+    for name in ("forecasts", "t"):
+        assert cat.append_missing(name, rows(0, 10, "north"), ["k"]) == 10
+        check(name, "create")
+        assert cat.append_missing(name, rows(5, 15, "south"), ["k"]) == 5
+        check(name, "append_missing")
+        cat.upsert(name, rows(12, 20, "south"), ["k"])
+        check(name, "upsert")
+        cat.append(name, rows(20, 30, "north"))
+        check(name, "append")
+        cat.compact(name)
+        check(name, "compact")
+        assert cat.read(name).count() == 30
+    cat.cluster_by("t", ["k"], num_files=2)
+    check("t", "cluster_by")
+    assert sorted(r["k"] for r in cat.read("t").collect()) == list(range(30))
+
+    # an append with another schema leaves no sidecar: reads infer again
+    cat.append("t", rows(30, 40, "north").withColumn("extra", F.lit(1)))
+    assert cat.schema("t") is None
+    assert cat.read("t").count() == 40

@@ -143,11 +143,11 @@ def test_conflict_raises_after_retry_budget(spark, tmp_path, monkeypatch):
 
     real = cat._try_commit
 
-    def always_lose(name, base, dirs, op, stats=None):
+    def always_lose(name, base, dirs, op, stats=None, schema=None):
         # a competing writer claims the slot with ITS OWN snapshot (the
         # base's dirs), then our CAS loses
         base_dirs = cat._load_manifest(name, base)["dirs"] if base >= 0 else []
-        real(name, base, base_dirs, op + "-sniped")
+        real(name, base, base_dirs, op + "-sniped", schema=schema)
         raise CommitConflict("sniped")
 
     monkeypatch.setattr(cat, "_try_commit", always_lose)
@@ -435,14 +435,14 @@ def test_compact_retries_from_fresh_snapshot_on_conflict(
     real = cat._try_commit
     state = {"injected": False}
 
-    def racy(name, base, dirs, op, stats=None):
+    def racy(name, base, dirs, op, stats=None, schema=None):
         if op == "compact" and not state["injected"]:
             state["injected"] = True
             other = TxnParquetCatalog(spark, cat.warehouse)
             other.append_missing(
                 "t", _rows(spark, 100, 110, "b"), ["k"], stats_cols=["k"]
             )
-        return real(name, base, dirs, op, stats)
+        return real(name, base, dirs, op, stats, schema)
 
     monkeypatch.setattr(cat, "_try_commit", racy)
     cat.compact("t", num_files=2, cluster_by=["k"])
@@ -602,3 +602,109 @@ def test_restore_survives_vacuum_of_newer_history(spark, tmp_path):
     assert {r["v"] for r in cat.read("t").collect()} == {"a"}
     assert cat.read("t").count() == 5
     assert removed >= 0
+
+
+# -- metadata from the write itself ----------------------------------------
+
+
+def _inferred(spark, cat, name):
+    """The schema Spark infers from the files the head manifest lists."""
+    m = cat._load_manifest(name, cat.current_version(name))
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(cat.path(name), "data", d) for d in m["dirs"]]
+    ).schema
+
+
+def test_manifest_schema_matches_inference_after_every_op(spark, tmp_path):
+    cat = _cat(spark, tmp_path)
+
+    def check(op):
+        m = cat._load_manifest("t", cat.current_version("t"))
+        assert m["schema"] is not None, op
+        assert cat.read("t").schema == _inferred(spark, cat, "t"), op
+
+    cat.append_missing("t", _rows(spark, 0, 10, "a"), ["k"], stats_cols=["k"])
+    check("create")
+    widened = _rows(spark, 10, 20, "b").withColumn("extra", F.lit(7))
+    cat.append_missing("t", widened, ["k"], stats_cols=["k"])
+    check("append_missing with an added column")
+    assert cat.read("t").columns == ["k", "v", "extra"]
+    cat.upsert(
+        "t", _rows(spark, 5, 25, "c").withColumn("extra", F.lit(8)), ["k"]
+    )
+    check("upsert")
+    cat.delete_where("t", [("k", "<", 3)])
+    check("delete_where")
+    cat.compact("t", num_files=1)
+    check("compact")
+    cat.compact("t", num_files=2, cluster_by=["k"])
+    check("clustered compact")
+    cat.restore("t", 0)
+    check("restore")
+    assert cat.read("t").columns == ["k", "v"]
+    # an all-pruned read keeps the table's schema
+    assert cat.read("t", where=[("k", ">", 10_000)]).schema == _inferred(
+        spark, cat, "t"
+    )
+
+
+def test_write_counts_match_rows_read_back(spark, tmp_path):
+    cat = _cat(spark, tmp_path)
+    counts = [
+        cat.append_missing("t", _rows(spark, 0, 30, "a"), ["k"], stats_cols=["k"]),
+        cat.append_missing("t", _rows(spark, 20, 45, "b"), ["k"], stats_cols=["k"]),
+        cat.append_missing("t", _rows(spark, 0, 45, "c"), ["k"], stats_cols=["k"]),
+    ]
+    sizes = [cat.read("t", version=v).count() for v in range(2)]
+    assert counts == [sizes[0], sizes[1] - sizes[0], 0] == [30, 15, 0]
+    v = cat.current_version("t")
+    deleted = cat.delete_where("t", [("k", ">=", 10), ("k", "<", 22)])
+    assert deleted == cat.read("t", version=v).count() - cat.read("t").count() == 12
+    # the rewritten set's statistics still come from its own rows
+    m = cat._load_manifest("t", cat.current_version("t"))
+    assert sorted(m["stats"][d]["k"] for d in m["dirs"]) == [[0, 29], [30, 44]]
+
+
+def test_first_append_missing_returns_rows_on_both_catalogs(spark, tmp_path):
+    from icenetetl_spark.catalog import ParquetCatalog
+
+    for cat in (
+        _cat(spark, tmp_path),
+        ParquetCatalog(spark, str(tmp_path / "plainwh")),
+    ):
+        n = cat.append_missing("t", _rows(spark, 0, 17, "a"), ["k"])
+        assert n == cat.read("t").count() == 17, type(cat).__name__
+
+
+def test_manifest_without_schema_reads_by_inference(spark, tmp_path):
+    """Manifests written before the schema key existed still read the same
+    rows and columns, added columns included, through inference."""
+    cat = _cat(spark, tmp_path)
+    cat.append_missing("t", _rows(spark, 0, 10, "a"), ["k"], stats_cols=["k"])
+    widened = _rows(spark, 10, 20, "b").withColumn("extra", F.lit(7))
+    cat.append_missing("t", widened, ["k"], stats_cols=["k"])
+
+    def snapshot():
+        df = cat.read("t")
+        rows = sorted(tuple(r) for r in df.select("k", "v", "extra").collect())
+        changes = sorted(
+            tuple(r) for r in cat.table_changes("t", 0, 1, keys=["k"]).collect()
+        )
+        empty = cat.read("t", where=[("k", ">", 10_000)])
+        return df.columns, rows, changes, empty.columns, empty.count()
+
+    with_schema = snapshot()
+    mdir = os.path.join(cat.path("t"), "_manifests")
+    for f in os.listdir(mdir):
+        path = os.path.join(mdir, f)
+        with open(path) as src:
+            m = json.load(src)
+        del m["schema"]
+        with open(path, "w") as out:
+            json.dump(m, out)
+    assert snapshot() == with_schema
+    # a commit over a schema-less manifest records the schema again
+    cat.append_missing("t", _rows(spark, 20, 25, "c"), ["k"])
+    m = cat._load_manifest("t", cat.current_version("t"))
+    assert m["schema"] is not None
+    assert cat.read("t").schema == _inferred(spark, cat, "t")
