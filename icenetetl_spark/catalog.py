@@ -39,7 +39,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
-from icenetetl_spark.operators.relational import insert_missing, upsert as upsert_plan
+from icenetetl_spark.operators.relational import (
+    insert_missing,
+    predicate,
+    upsert as upsert_plan,
+)
+from icenetetl_spark.operators.scale import cluster
 
 PARTITIONING: dict[str, list[str]] = {
     "forecasts": ["hemisphere", "date_forecast_generated"],
@@ -107,18 +112,12 @@ class ParquetCatalog:
         list of ``(col, op, value)``): one scan with the literal disjunction
         pushed into it — Catalyst turns equality branches on layout columns
         into hive PartitionFilters, so only matching partition directories
-        are listed. Shared seam with TxnParquetCatalog.read_pruned (which
-        prunes at the manifest level instead), letting plan code like the
-        latest-snapshot recompute stay catalog-agnostic."""
-        from icenetetl_spark.operators.relational import PRED_OPS
-
-        disj = F.lit(False)
-        for branch in branches:
-            conj = F.lit(True)
-            for col, op, value in branch:
-                conj = conj & PRED_OPS[op](F.col(col), F.lit(value))
-            disj = disj | conj
-        return self.read(name).filter(disj)
+        are listed. Branches may overlap; a row matching several is read
+        once. Shared seam with TxnParquetCatalog.read_pruned (which skips
+        write sets by manifest statistics, then runs the same one filtered
+        scan), letting plan code like the latest-snapshot recompute stay
+        catalog-agnostic."""
+        return self.read(name).filter(predicate(branches))
 
     def _writer(self, df: DataFrame, name: str):
         w = df.write
@@ -228,20 +227,7 @@ class ParquetCatalog:
         df = self.read(name)
         if num_files is None:
             num_files = max(8, df.rdd.getNumPartitions())
-        if zorder:
-            from icenetetl_spark.operators.scale import zorder_key
-
-            key = zorder_key(df, cols).alias("__z")
-            clustered = (
-                df.withColumn("__z", key)
-                .repartitionByRange(num_files, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-        else:
-            clustered = df.repartitionByRange(num_files, *cols).sortWithinPartitions(
-                *cols
-            )
+        clustered = cluster(df, cols, num_files, zorder)
         staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
         # plain (non-hive-partitioned) layout: clustering replaces
         # partitioning for high-cardinality columns

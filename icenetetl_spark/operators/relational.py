@@ -25,6 +25,23 @@ PRED_OPS = {
 }
 
 
+def predicate(branches: Sequence[Sequence[tuple[str, str, object]]]) -> Column:
+    """The OR of ``branches``, each an AND of ``(col, op, value)`` triples,
+    as one Column: an empty branch list is false, an empty branch true.
+    Raises ValueError on an op outside ``PRED_OPS`` before any scan starts."""
+    disj = F.lit(False)
+    for branch in branches:
+        conj = F.lit(True)
+        for col, op, value in branch:
+            if op not in PRED_OPS:
+                raise ValueError(
+                    f"unsupported predicate op {op!r}; use one of {sorted(PRED_OPS)}"
+                )
+            conj = conj & PRED_OPS[op](F.col(col), F.lit(value))
+        disj = disj | conj
+    return disj
+
+
 def rename_normalize(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
     """Conditionally rename columns that are present — old-format input
     compatibility, reference processor.py:125-133 (mean->sic_mean etc.).

@@ -402,6 +402,24 @@ def zorder_key(
     return morton_code(buckets[0], buckets[1])
 
 
+def cluster(
+    df: DataFrame, cols: Sequence[str], num_parts: int, zorder: bool = False
+) -> DataFrame:
+    """``df`` range-partitioned into ``num_parts`` partitions and sorted
+    within each, on ``cols`` or, with ``zorder=True`` (exactly 2 cols), on
+    their ``zorder_key``. Each partition then covers a disjoint range of the
+    leading column (linear) or a small rectangle of both (Z-order), so
+    per-file or per-write-set min/max statistics become tight."""
+    if not zorder:
+        return df.repartitionByRange(num_parts, *cols).sortWithinPartitions(*cols)
+    return (
+        df.withColumn("__zk", zorder_key(df, list(cols)))
+        .repartitionByRange(num_parts, "__zk")
+        .sortWithinPartitions("__zk")
+        .drop("__zk")
+    )
+
+
 def spread(df: DataFrame, *keys: str, factor: int = 1) -> DataFrame:
     """Hash-repartition a CPU-dense frame up to cluster parallelism before
     an expensive per-row projection — and a NO-OP when the frame is already

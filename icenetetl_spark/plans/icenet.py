@@ -240,9 +240,10 @@ class IceNetPipeline:
         per_hemi_max = forecasts.groupBy("hemisphere").agg(
             F.max("date_forecast_generated").alias("__latest")
         )
-        # read_pruned is the catalog seam: ParquetCatalog pushes the
-        # disjunction into one scan (hive PartitionFilters); the txn
-        # catalog prunes write sets at the MANIFEST level per branch —
+        # read_pruned is the catalog seam: both catalogs run one scan
+        # filtered by the disjunction. ParquetCatalog lists only matching
+        # partitions (hive PartitionFilters); the txn catalog opens only
+        # write sets whose manifest statistics may match some branch —
         # either way the recompute reads only the max-date data.
         branches = [
             [

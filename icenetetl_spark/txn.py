@@ -14,13 +14,19 @@ gap the way lakehouse formats do publicly:
   that version. Readers hand it to the parquet reader, so a read starts no
   footer-inference job; a manifest without the key (written before it
   existed) is read by inference.
-- A commit WRITES ITS DATA FIRST (invisible until referenced), then
-  attempts to create ``v{N+1}.json`` with ``O_CREAT | O_EXCL`` — the
-  filesystem's compare-and-swap: exactly one contender can create a given
-  name. The loser deletes its orphaned write set and RETRIES against the
+- Every write op runs through ONE commit loop, ``_commit``: read the base
+  version and its manifest, let the op compute its attempt against that
+  snapshot (writing its data first — invisible until referenced), then
+  try to create ``v{N+1}.json`` with a hard link — the filesystem's
+  compare-and-swap: exactly one contender can create a given name. The
+  loser deletes the write sets its attempt made and RETRIES against the
   new snapshot, re-running its anti-join/merge so its decision is always
   based on the state it serialized after. (On HDFS the same CAS is atomic
   rename-without-overwrite; on S3, put-if-absent.)
+- Every read runs through ONE pruned scan: a disjunction of predicate
+  conjunctions drops the write sets whose manifest min/max statistics
+  rule out every branch, scans the rest once and applies the disjunction
+  as a residual row filter. ``read(where=...)`` is its one-branch case.
 
 This gives serializable append_missing/upsert under concurrent writers:
 every committed version is derived from the immediately preceding one, so
@@ -33,29 +39,46 @@ metadata, independent of data size; readers cost one small JSON read.
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
 import shutil
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from icenetetl_spark.catalog import written_schema
-from icenetetl_spark.operators.relational import insert_missing, upsert as upsert_plan
+from icenetetl_spark.operators.relational import (
+    insert_missing,
+    predicate,
+    upsert as upsert_plan,
+)
+from icenetetl_spark.operators.scale import cluster
+
+Where = Sequence[tuple[str, str, object]]
 
 
 class CommitConflict(Exception):
     """Another writer committed the version this transaction targeted."""
 
 
-import datetime as _dt  # noqa: E402
+class _Attempt(NamedTuple):
+    """One write op's outcome against one base snapshot. ``op=None`` means
+    nothing to commit: ``result`` stands if the base is still current.
+    ``new`` lists the write sets this attempt wrote, dropped if it loses
+    the CAS or commits nothing."""
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from icenetetl_spark.operators.relational import PRED_OPS as _PRED_OPS  # noqa: E402
+    result: object
+    op: str | None = None
+    dirs: Sequence[str] = ()
+    stats: dict[str, dict] | None = None
+    schema: StructType | None = None
+    new: Sequence[str] = ()
 
 
 def _json_stat(v):
@@ -75,6 +98,12 @@ def _json_stat(v):
 def _manifest_schema(manifest: dict) -> StructType | None:
     schema = manifest.get("schema")
     return None if schema is None else StructType.fromJson(schema)
+
+
+def _stats_columns(manifest: dict) -> list[str]:
+    """Columns any write set of ``manifest`` keeps statistics on: rewrites
+    carry them over so the table keeps its data-skipping metadata."""
+    return sorted({c for s in manifest.get("stats", {}).values() for c in s})
 
 
 def _widen(schema: StructType, other: StructType) -> StructType:
@@ -230,29 +259,37 @@ class TxnParquetCatalog:
                 raise ValueError("pass either version or as_of_ts, not both")
             version = self.version_at(name, as_of_ts)
         v = self.current_version(name) if version is None else version
-        if v < 0:
+        return self._pruned_scan(name, v, [where] if where else None)
+
+    def read_pruned(self, name: str, branches: Sequence[Where]) -> DataFrame:
+        """Read restricted to an OR of predicate conjunctions: one scan over
+        the write sets whose manifest statistics let ANY branch match, with
+        the disjunction as the residual row filter. Branches may overlap; a
+        row matching several is read once. The ParquetCatalog twin pushes
+        the same disjunction into one hive-partitioned scan; both sides of
+        the seam return an EMPTY frame for an empty disjunction (OR of
+        nothing is false)."""
+        return self._pruned_scan(name, self.current_version(name), branches)
+
+    def _pruned_scan(
+        self, name: str, version: int, branches: Sequence[Where] | None
+    ) -> DataFrame:
+        """Version ``version`` of the table, filtered by the disjunction
+        ``branches`` (None: unfiltered). An all-pruned read is an empty
+        frame with the table's schema."""
+        if version < 0:
             raise FileNotFoundError(f"table {name!r} has no committed version")
-        manifest = self._load_manifest(name, v)
-        dirs = manifest["dirs"]
-        if not dirs:
-            raise FileNotFoundError(f"table {name!r} v{v} is empty")
-        for _, op, _ in where or []:
-            if op not in _PRED_OPS:
-                raise ValueError(
-                    f"unsupported predicate op {op!r}; use one of "
-                    f"{sorted(_PRED_OPS)}"
-                )
-        if where:
-            dirs = self._prune_dirs(manifest, where)
+        manifest = self._load_manifest(name, version)
+        if not manifest["dirs"]:
+            raise FileNotFoundError(f"table {name!r} v{version} is empty")
         schema = _manifest_schema(manifest)
+        if branches is None:
+            return self._scan(name, manifest["dirs"], schema)
+        cond = predicate(branches)
+        dirs = self._prune_dirs(manifest, branches)
         if not dirs:
-            # every write set pruned: empty frame with the table's schema
-            df = self._scan(name, manifest["dirs"], schema).limit(0)
-        else:
-            df = self._scan(name, dirs, schema)
-        for col, op, value in where or []:
-            df = df.filter(_PRED_OPS[op](F.col(col), F.lit(value)))
-        return df
+            return self._scan(name, manifest["dirs"], schema).limit(0).filter(cond)
+        return self._scan(name, dirs, schema).filter(cond)
 
     def _scan(
         self, name: str, dirs: Sequence[str], schema: StructType | None
@@ -267,42 +304,23 @@ class TxnParquetCatalog:
         base = self._data_dir(name)
         return reader.parquet(*[os.path.join(base, d) for d in dirs])
 
-    def read_pruned(
-        self, name: str, branches: Sequence[Sequence[tuple[str, str, object]]]
-    ) -> DataFrame:
-        """Read restricted to an OR of predicate conjunctions: each branch
-        runs through ``read(..., where=branch)`` (manifest-level write-set
-        skipping per branch) and the branches union. Callers must pass
-        DISJOINT branches (e.g. per-hemisphere conjunctions) — the union
-        would duplicate rows matching two branches. The ParquetCatalog twin
-        pushes the same disjunction into one hive-partitioned scan; both
-        sides of the seam return an EMPTY frame for an empty disjunction
-        (OR of nothing is false)."""
-        if not branches:
-            return self.read(name).filter(F.lit(False))
-        dfs = [self.read(name, where=list(b)) for b in branches]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
     @staticmethod
-    def _prune_dirs(
-        manifest: dict, where: Sequence[tuple[str, str, object]]
-    ) -> list[str]:
-        """Write-set names that MAY satisfy every conjunct. A dir without
-        statistics for a predicate's column is always kept (pruning must
-        never change results)."""
+    def _prune_dirs(manifest: dict, branches: Sequence[Where]) -> list[str]:
+        """Write-set names that MAY satisfy every conjunct of some branch. A
+        dir without statistics for a predicate's column is always kept
+        (pruning must never change results)."""
         stats = manifest.get("stats", {})
-        kept = []
-        for d in manifest["dirs"]:
-            dstats = stats.get(d, {})
-            if all(
-                _may_match(dstats.get(col), op, value)
-                for col, op, value in where
-            ):
-                kept.append(d)
-        return kept
+        return [
+            d
+            for d in manifest["dirs"]
+            if any(
+                all(
+                    _may_match(stats.get(d, {}).get(col), op, value)
+                    for col, op, value in branch
+                )
+                for branch in branches
+            )
+        ]
 
     # -- commit machinery -------------------------------------------------
 
@@ -374,6 +392,49 @@ class TxnParquetCatalog:
         finally:
             os.unlink(tmp)
 
+    def _commit(
+        self,
+        name: str,
+        attempt: Callable[[int, dict], _Attempt],
+        create: Callable[[], _Attempt] | None = None,
+    ):
+        """The optimistic-commit loop every write op runs through: read the
+        base version and its manifest, compute ``attempt(base, manifest)``
+        against that snapshot, CAS it as v{base+1} through ``_try_commit``
+        and return its result. A lost CAS drops the attempt's new write
+        sets and retries against the winner's snapshot. An absent table is
+        created by ``create``; ops without one need a committed version."""
+        for _ in range(self.max_retries):
+            base = self.current_version(name)
+            if base >= 0:
+                a = attempt(base, self._load_manifest(name, base))
+            elif create is not None:
+                a = create()
+            else:
+                raise FileNotFoundError(f"table {name!r} has no committed version")
+            if a.op is None:
+                for ws in a.new:
+                    self._drop_write_set(name, ws)
+                # nothing to commit relative to `base`; a concurrent
+                # overwrite or delete could have changed that, so the
+                # answer stands only while `base` is still current
+                if self.current_version(name) == base:
+                    return a.result
+                continue
+            try:
+                self._try_commit(name, base, a.dirs, a.op, a.stats, a.schema)
+                return a.result
+            except CommitConflict:
+                for ws in a.new:
+                    self._drop_write_set(name, ws)
+        raise CommitConflict(f"{name}: commit exceeded {self.max_retries} retries")
+
+    def _create(self, name: str, df: DataFrame, stats_cols: Sequence[str]) -> _Attempt:
+        """The first commit of ``append_missing``/``upsert``: ``df`` as
+        the table's only write set."""
+        ws, n, st = self._write_set(name, df, self._stats_for(name, stats_cols))
+        return _Attempt(n, "create", [ws], {ws: st}, written_schema(df.schema), [ws])
+
     # -- public write ops -------------------------------------------------
 
     def overwrite(
@@ -381,24 +442,15 @@ class TxnParquetCatalog:
     ) -> None:
         """CREATE OR REPLACE: new snapshot referencing only this write set.
         Blind write — no read-set to validate, so a conflict just means
-        re-CAS at the next version (data files are already durable)."""
+        re-CAS at the next version (data files are already durable); the
+        write set is dropped only when the retry budget runs out."""
         ws, _, st = self._write_set(name, df, self._stats_for(name, stats_cols))
-        schema = written_schema(df.schema)
-        for _ in range(self.max_retries):
-            try:
-                self._try_commit(
-                    name,
-                    self.current_version(name),
-                    [ws],
-                    "overwrite",
-                    {ws: st},
-                    schema,
-                )
-                return
-            except CommitConflict:
-                continue
-        self._drop_write_set(name, ws)
-        raise CommitConflict(f"{name}: overwrite exceeded {self.max_retries} retries")
+        blind = _Attempt(None, "overwrite", [ws], {ws: st}, written_schema(df.schema))
+        try:
+            self._commit(name, lambda base, manifest: blind, lambda: blind)
+        except CommitConflict:
+            self._drop_write_set(name, ws)
+            raise
 
     def append_missing(
         self,
@@ -414,44 +466,24 @@ class TxnParquetCatalog:
         from the winner's snapshot — so two writers inserting the same key
         concurrently commit it exactly once, whichever order they land.
         Returns rows actually appended (idempotent replay returns 0)."""
-        for _ in range(self.max_retries):
-            base = self.current_version(name)
-            if base < 0:
-                ws, n, st = self._write_set(name, df, self._stats_for(name, stats_cols))
-                try:
-                    self._try_commit(
-                        name, -1, [ws], "create", {ws: st}, written_schema(df.schema)
-                    )
-                    return n
-                except CommitConflict:
-                    self._drop_write_set(name, ws)
-                    continue
+
+        def attempt(base: int, manifest: dict) -> _Attempt:
             existing = self.read(name, base)
             fresh = insert_missing(df, existing, keys)
             ws, n, st = self._write_set(name, fresh, self._stats_for(name, stats_cols))
             if n == 0:
-                self._drop_write_set(name, ws)
-                # nothing to add relative to `base`; a later version can
-                # only contain MORE keys for these semantics (appends) —
-                # but an interleaved overwrite could have removed rows, so
-                # only short-circuit when still current
-                if self.current_version(name) == base:
-                    return 0
-                continue
-            prior = self._load_manifest(name, base)
-            dirs = prior["dirs"] + [ws]
-            merged_stats = {**prior.get("stats", {}), ws: st}
-            schema = _widen(existing.schema, written_schema(fresh.schema))
-            try:
-                self._try_commit(
-                    name, base, dirs, "append_missing", merged_stats, schema
-                )
-                return n
-            except CommitConflict:
-                self._drop_write_set(name, ws)
-                continue
-        raise CommitConflict(
-            f"{name}: append_missing exceeded {self.max_retries} retries"
+                return _Attempt(0, new=[ws])
+            return _Attempt(
+                n,
+                "append_missing",
+                manifest["dirs"] + [ws],
+                {**manifest.get("stats", {}), ws: st},
+                _widen(existing.schema, written_schema(fresh.schema)),
+                [ws],
+            )
+
+        return self._commit(
+            name, attempt, lambda: self._create(name, df, stats_cols)
         )
 
     def upsert(
@@ -465,29 +497,15 @@ class TxnParquetCatalog:
         serializable: the merge is recomputed against the exact snapshot
         the CAS extends, so concurrent upserts of disjoint keys both
         survive and same-key races resolve to the later committed merge."""
-        for _ in range(self.max_retries):
-            base = self.current_version(name)
-            if base < 0:
-                ws, _, st = self._write_set(name, df, self._stats_for(name, stats_cols))
-                try:
-                    self._try_commit(
-                        name, -1, [ws], "create", {ws: st}, written_schema(df.schema)
-                    )
-                    return
-                except CommitConflict:
-                    self._drop_write_set(name, ws)
-                    continue
+
+        def attempt(base: int, manifest: dict) -> _Attempt:
             merged = upsert_plan(df, self.read(name, base), keys)
             ws, _, st = self._write_set(name, merged, self._stats_for(name, stats_cols))
-            try:
-                self._try_commit(
-                    name, base, [ws], "upsert", {ws: st}, written_schema(merged.schema)
-                )
-                return
-            except CommitConflict:
-                self._drop_write_set(name, ws)
-                continue
-        raise CommitConflict(f"{name}: upsert exceeded {self.max_retries} retries")
+            return _Attempt(
+                None, "upsert", [ws], {ws: st}, written_schema(merged.schema), [ws]
+            )
+
+        self._commit(name, attempt, lambda: self._create(name, df, stats_cols))
 
     def delete_where(
         self,
@@ -506,70 +524,44 @@ class TxnParquetCatalog:
         only the affected write sets, not the table."""
         if not where:
             raise ValueError("delete_where requires at least one predicate")
-        for _, op, _ in where:
-            if op not in _PRED_OPS:
-                raise ValueError(
-                    f"unsupported predicate op {op!r}; use one of "
-                    f"{sorted(_PRED_OPS)}"
-                )
-        for _ in range(self.max_retries):
-            base = self.current_version(name)
-            if base < 0:
-                raise FileNotFoundError(
-                    f"table {name!r} has no committed version"
-                )
-            manifest = self._load_manifest(name, base)
-            if not stats_cols:
-                # keep the table's data-skipping metadata alive across
-                # deletes (the compact convention)
-                stats_cols = sorted(
-                    {c for s in manifest.get("stats", {}).values() for c in s}
-                )
-            touched = self._prune_dirs(manifest, where)
-            kept = [d for d in manifest["dirs"] if d not in touched]
+        # SQL DELETE removes rows where the predicate is TRUE; a NULL
+        # predicate (e.g. a column added by schema evolution that old
+        # write sets read as NULL) must KEEP the row — a bare ~pred would
+        # drop it under three-valued logic
+        survives = ~F.coalesce(predicate([where]), F.lit(False))
+
+        def attempt(base: int, manifest: dict) -> _Attempt:
+            touched = self._prune_dirs(manifest, [where])
             if not touched:
-                return 0
+                return _Attempt(0)
             schema = _manifest_schema(manifest)
-            affected = self._scan(name, touched, schema)
-            keep_pred = None
-            for col, op, value in where:
-                c = _PRED_OPS[op](F.col(col), F.lit(value))
-                keep_pred = c if keep_pred is None else keep_pred & c
-            # SQL DELETE removes rows where the predicate is TRUE; a NULL
-            # predicate (e.g. a column added by schema evolution that old
-            # write sets read as NULL) must KEEP the row — a bare
-            # ~keep_pred would drop it under three-valued logic
             before = Observation()
-            survivors = affected.observe(
-                before, F.count(F.lit(1)).alias("n")
-            ).filter(~F.coalesce(keep_pred, F.lit(False)))
-            ws, n_after, st = self._write_set(name, survivors, stats_cols)
-            n_before = before.get["n"]
-            if n_after == n_before:
+            survivors = (
+                self._scan(name, touched, schema)
+                .observe(before, F.count(F.lit(1)).alias("n"))
+                .filter(survives)
+            )
+            ws, n_after, st = self._write_set(
+                name, survivors, stats_cols or _stats_columns(manifest)
+            )
+            deleted = before.get["n"] - n_after
+            if deleted == 0:
                 # stats said "may match" but nothing actually did
-                self._drop_write_set(name, ws)
-                if self.current_version(name) == base:
-                    return 0
-                continue
+                return _Attempt(0, new=[ws])
             # the rewritten set is referenced even when empty: its 0-row
             # parquet carries the schema, so a delete-everything leaves a
             # readable, appendable empty table instead of dirs=[]
-            dirs = kept + [ws]
-            stats = {
-                d: s
-                for d, s in manifest.get("stats", {}).items()
-                if d in kept
-            }
-            stats[ws] = st
-            try:
-                self._try_commit(name, base, dirs, "delete", stats, schema)
-                return n_before - n_after
-            except CommitConflict:
-                self._drop_write_set(name, ws)
-                continue
-        raise CommitConflict(
-            f"{name}: delete_where exceeded {self.max_retries} retries"
-        )
+            kept = [d for d in manifest["dirs"] if d not in touched]
+            return _Attempt(
+                deleted,
+                "delete",
+                kept + [ws],
+                {**manifest.get("stats", {}), ws: st},
+                schema,
+                [ws],
+            )
+
+        return self._commit(name, attempt)
 
     # -- maintenance ------------------------------------------------------
 
@@ -677,28 +669,18 @@ class TxnParquetCatalog:
         The restored manifest re-references the old write sets BY NAME, so
         no data is copied and vacuum keeps them alive as long as a
         retained manifest points at them."""
-        old = self._load_manifest(name, version)
-        for _ in range(self.max_retries):
-            base = self.current_version(name)
-            if base < 0:
-                raise FileNotFoundError(
-                    f"table {name!r} has no committed version"
-                )
-            try:
-                self._try_commit(
-                    name,
-                    base,
-                    list(old["dirs"]),
-                    f"restore:v{version}",
-                    dict(old.get("stats", {})),
-                    _manifest_schema(old),
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"{name}: restore exceeded {self.max_retries} retries"
-        )
+
+        def attempt(base: int, manifest: dict) -> _Attempt:
+            old = self._load_manifest(name, version)
+            return _Attempt(
+                base + 1,
+                f"restore:v{version}",
+                list(old["dirs"]),
+                dict(old.get("stats", {})),
+                _manifest_schema(old),
+            )
+
+        return self._commit(name, attempt)
 
     def vacuum(
         self, name: str, keep_versions: int = 1, min_age_s: float = 3600.0
@@ -790,12 +772,9 @@ class TxnParquetCatalog:
         snapshot, so no concurrently committed rows are ever dropped
         (a re-CAS of the stale rewrite at the next version would silently
         erase the interleaved commit)."""
-        for _ in range(self.max_retries):
-            base = self.current_version(name)
-            manifest = self._load_manifest(name, base)
-            stats_cols = sorted(
-                {c for s in manifest.get("stats", {}).values() for c in s}
-            )
+
+        def attempt(base: int, manifest: dict) -> _Attempt:
+            stats_cols = _stats_columns(manifest)
             current = self.read(name, base)
             if not cluster_by:
                 ws, _, st = self._write_set(
@@ -803,49 +782,24 @@ class TxnParquetCatalog:
                 )
                 write_sets = {ws: st}
             else:
-                stats_cols = sorted(set(stats_cols) | set(cluster_by))
                 write_sets = self._clustered_write_sets(
-                    name, current, num_files, cluster_by, zorder, stats_cols
+                    name,
+                    cluster(current, cluster_by, num_files, zorder),
+                    sorted(set(stats_cols) | set(cluster_by)),
                 )
-            try:
-                self._try_commit(
-                    name, base, list(write_sets), "compact", write_sets, current.schema
-                )
-                return
-            except CommitConflict:
-                for ws in write_sets:
-                    self._drop_write_set(name, ws)
-                continue
-        raise CommitConflict(f"{name}: compact exceeded {self.max_retries} retries")
+            new = list(write_sets)
+            return _Attempt(None, "compact", new, write_sets, current.schema, new)
+
+        self._commit(name, attempt)
 
     def _clustered_write_sets(
-        self,
-        name: str,
-        current: DataFrame,
-        num_files: int,
-        cluster_by: Sequence[str],
-        zorder: bool,
-        stats_cols: Sequence[str],
+        self, name: str, clustered: DataFrame, stats_cols: Sequence[str]
     ) -> dict[str, dict]:
         """Materialize the clustered rewrite: ONE write job produces every
         range partition as its own directory (partitionBy keys the layout
         on __pid); each becomes an independent write set so manifest stats
         describe disjoint ranges. Stats for all sets come from one grouped
         agg pass."""
-        if zorder:
-            from icenetetl_spark.operators.scale import zorder_key
-
-            key = zorder_key(current, list(cluster_by))
-            clustered = (
-                current.withColumn("__zk", key)
-                .repartitionByRange(num_files, F.col("__zk"))
-                .sortWithinPartitions("__zk")
-                .drop("__zk")
-            )
-        else:
-            clustered = current.repartitionByRange(
-                num_files, *cluster_by
-            ).sortWithinPartitions(*cluster_by)
         clustered = clustered.withColumn("__pid", F.spark_partition_id())
         staging = os.path.join(
             self.path(name), "_staging", f"compact-{uuid.uuid4().hex}"

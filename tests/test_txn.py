@@ -708,3 +708,190 @@ def test_manifest_without_schema_reads_by_inference(spark, tmp_path):
     m = cat._load_manifest("t", cat.current_version("t"))
     assert m["schema"] is not None
     assert cat.read("t").schema == _inferred(spark, cat, "t")
+
+
+# -- one commit loop, one pruned scan ----------------------------------------
+
+
+def test_absent_table_gives_the_same_error_for_every_op(spark, tmp_path):
+    cat = _cat(spark, tmp_path)
+    ops = {
+        "read": lambda: cat.read("t"),
+        "compact": lambda: cat.compact("t"),
+        "restore": lambda: cat.restore("t", 0),
+        "delete_where": lambda: cat.delete_where("t", [("k", "<", 3)]),
+    }
+    for op, call in ops.items():
+        with pytest.raises(FileNotFoundError) as err:
+            call()
+        assert str(err.value) == "table 't' has no committed version", op
+
+
+def test_read_pruned_overlapping_branches_read_each_row_once(spark, tmp_path):
+    from icenetetl_spark.catalog import ParquetCatalog
+
+    txn = _cat(spark, tmp_path)
+    txn.append_missing("t", _rows(spark, 0, 10, "a"), ["k"], stats_cols=["k"])
+    plain = ParquetCatalog(spark, str(tmp_path / "plainwh"))
+    plain.overwrite("t", _rows(spark, 0, 10, "a"))
+    branches = [[("k", "<", 6)], [("k", ">=", 4)]]
+    for cat in (txn, plain):
+        got = sorted(r["k"] for r in cat.read_pruned("t", branches).collect())
+        assert got == list(range(10)), type(cat).__name__
+
+
+def _unreferenced(cat, name):
+    """Write sets no manifest lists, plus anything left under _staging."""
+    mdir = os.path.join(cat.path(name), "_manifests")
+    listed = set()
+    for f in os.listdir(mdir):
+        if f.endswith(".json"):
+            with open(os.path.join(mdir, f)) as m:
+                listed |= set(json.load(m)["dirs"])
+    data = os.listdir(os.path.join(cat.path(name), "data"))
+    staging = os.path.join(cat.path(name), "_staging")
+    left = os.listdir(staging) if os.path.isdir(staging) else []
+    return sorted(d for d in data if d.startswith("ws-") and d not in listed) + left
+
+
+_WRITE_OPS = {
+    "overwrite": lambda cat, spark: cat.overwrite("t", _rows(spark, 40, 45, "o")),
+    "append_missing": lambda cat, spark: cat.append_missing(
+        "t", _rows(spark, 15, 30, "n"), ["k"]
+    ),
+    "upsert": lambda cat, spark: cat.upsert("t", _rows(spark, 15, 30, "u"), ["k"]),
+    "delete_where": lambda cat, spark: cat.delete_where("t", [("k", "<", 3)]),
+    "restore": lambda cat, spark: cat.restore("t", 0),
+    "compact": lambda cat, spark: cat.compact("t", num_files=1),
+    "compact_cluster_by": lambda cat, spark: cat.compact(
+        "t", num_files=2, cluster_by=["k"]
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_WRITE_OPS))
+def test_every_write_op_gives_up_after_retry_budget_cleanly(
+    spark, tmp_path, monkeypatch, op
+):
+    """Each op that keeps losing the CAS raises CommitConflict, leaves the
+    table reading its earlier rows and leaves no write set or staging
+    directory that no manifest references."""
+    cat = TxnParquetCatalog(spark, str(tmp_path / "wh"), max_retries=2)
+    cat.append_missing("t", _rows(spark, 0, 10, "a"), ["k"], stats_cols=["k"])
+    cat.append_missing("t", _rows(spark, 10, 20, "b"), ["k"], stats_cols=["k"])
+    before = sorted(tuple(r) for r in cat.read("t").collect())
+    real = cat._try_commit
+
+    def always_lose(name, base, dirs, op, stats=None, schema=None):
+        base_dirs = cat._load_manifest(name, base)["dirs"] if base >= 0 else []
+        real(name, base, base_dirs, op + "-sniped", schema=schema)
+        raise CommitConflict("sniped")
+
+    monkeypatch.setattr(cat, "_try_commit", always_lose)
+    with pytest.raises(CommitConflict):
+        _WRITE_OPS[op](cat, spark)
+    assert sorted(tuple(r) for r in cat.read("t").collect()) == before
+    assert _unreferenced(cat, "t") == []
+
+
+def test_manifest_op_of_every_write(spark, tmp_path):
+    cat = _cat(spark, tmp_path)
+
+    def op():
+        return cat._load_manifest("t", cat.current_version("t"))["op"]
+
+    cat.append_missing("t", _rows(spark, 0, 10, "a"), ["k"], stats_cols=["k"])
+    assert op() == "create"
+    cat.append_missing("t", _rows(spark, 5, 15, "b"), ["k"], stats_cols=["k"])
+    assert op() == "append_missing"
+    cat.upsert("t", _rows(spark, 10, 20, "c"), ["k"], stats_cols=["k"])
+    assert op() == "upsert"
+    cat.overwrite("t", _rows(spark, 0, 30, "d"), stats_cols=["k"])
+    assert op() == "overwrite"
+    cat.delete_where("t", [("k", "<", 5)])
+    assert op() == "delete"
+    cat.compact("t", num_files=1)
+    assert op() == "compact"
+    cat.restore("t", 1)
+    assert op() == "restore:v1"
+    cat.upsert("u", _rows(spark, 0, 5, "a"), ["k"])
+    assert cat._load_manifest("u", 0)["op"] == "create"
+    cat.overwrite("o", _rows(spark, 0, 5, "a"))
+    assert cat._load_manifest("o", 0)["op"] == "overwrite"
+
+
+_TASK_RETRY_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from icenetetl_spark.catalog import ParquetCatalog
+from icenetetl_spark.session import get_spark
+from icenetetl_spark.txn import TxnParquetCatalog
+
+spark = get_spark("task-retry", master="local[4,2]", shuffle_partitions=4)
+
+
+@F.udf("long")
+def flaky(k):
+    # the first attempt of every task fails on its partition's last row,
+    # so the rows before it are already processed when the attempt dies
+    if TaskContext.get().attemptNumber() == 0 and k % 1000 == 999:
+        raise RuntimeError("first task attempt fails")
+    return k
+
+
+def rows(lo, hi, tag, udf=False):
+    ids = spark.range(lo, hi, numPartitions=4)
+    k = flaky("id") if udf else F.col("id")
+    return ids.select(k.alias("k"), F.lit(tag).alias("v"))
+
+
+out = {}
+for cat in (
+    TxnParquetCatalog(spark, sys.argv[2] + "/txn"),
+    ParquetCatalog(spark, sys.argv[2] + "/plain"),
+):
+    kind = type(cat).__name__
+    stats = {"stats_cols": ["k"]} if kind == "TxnParquetCatalog" else {}
+    cat.append_missing("t", rows(0, 100, "a"), ["k"], **stats)
+    v0 = cat.current_version("t") if kind == "TxnParquetCatalog" else None
+    n = cat.append_missing("t", rows(0, 4000, "b", udf=True), ["k"], **stats)
+    back = cat.read("t").agg(
+        F.count("*").alias("rows"), F.countDistinct("k").alias("keys")
+    ).first()
+    res = {"n": n, "rows": back["rows"], "keys": back["keys"]}
+    if kind == "TxnParquetCatalog":
+        m = cat._load_manifest("t", cat.current_version("t"))
+        res["commits"] = cat.current_version("t") - v0
+        res["stats"] = m["stats"][m["dirs"][-1]]["k"]
+    out[kind] = res
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_append_missing_is_exactly_once_under_task_retries(tmp_path):
+    """A write task that fails once and succeeds on retry must not leave
+    its failed attempt's rows in the table, the returned count or the
+    manifest statistics. The shared test session never retries a task, so
+    this runs in a session of its own at local[4,2]."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _TASK_RETRY_SCRIPT, repo, str(tmp_path)],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    txn = out["TxnParquetCatalog"]
+    assert txn == {
+        "n": 3900, "rows": 4000, "keys": 4000, "commits": 1, "stats": [100, 3999]
+    }
+    assert out["ParquetCatalog"] == {"n": 3900, "rows": 4000, "keys": 4000}
