@@ -128,6 +128,21 @@ def _median(xs) -> float:
     return round(statistics.median(xs), 3)
 
 
+def reps_over_1p5x(reps: list[float]) -> int:
+    """Probe reps slower than 1.5x the probe median: ambient bursts that
+    the median alone hides."""
+    med = statistics.median(reps)
+    return sum(r > 1.5 * med for r in reps)
+
+
+def fit_sec(walls: list[float]) -> float | None:
+    """A trained query's fit time: its first pass, which fits, minus the
+    median of the warm passes the session memo serves. None with one pass."""
+    if len(walls) < 2:
+        return None
+    return round(walls[0] - statistics.median(walls[1:]), 3)
+
+
 def _layers(records: list[measure.RunRecord]) -> dict:
     """Per-field medians of one query's run records."""
     out = {
@@ -185,9 +200,8 @@ def main() -> None:
     # the extended suite reports alongside it
     total = round(sum(timings[n] for n in BENCH_QUERIES), 3)
     total_ext = round(sum(timings.values()), 3)
-    probe = round(
-        statistics.median(sorted(probe_pre + probe_mid + probe_post)), 3
-    )
+    probe_reps = probe_pre + probe_mid + probe_post
+    probe = _median(probe_reps)
     print(
         json.dumps(
             {
@@ -211,6 +225,12 @@ def main() -> None:
                 # for every suite query that trains a model — absent keys
                 # ran no fit. Disk artifacts are disabled for the suite.
                 "fit_cache": fit_cache,
+                # per *_trained query: pass-1 wall minus the warm median
+                "fit_sec": {
+                    n: fit_sec([r.wall for r in s])
+                    for n, s in samples.items()
+                    if n.endswith("_trained")
+                },
                 # ambient calibration: fixed synthetic probe (see
                 # _ambient_probe). Compare `value / ambient_probe.median`
                 # across rounds to separate host drift from code drift.
@@ -219,6 +239,7 @@ def main() -> None:
                     "mid": probe_mid,
                     "post": probe_post,
                     "median": probe,
+                    "reps_over_1p5x": reps_over_1p5x(probe_reps),
                     "total_per_probe": round(total / probe, 2)
                     if probe > 0
                     else None,

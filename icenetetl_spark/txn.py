@@ -785,6 +785,7 @@ class TxnParquetCatalog:
                 write_sets = self._clustered_write_sets(
                     name,
                     cluster(current, cluster_by, num_files, zorder),
+                    num_files,
                     sorted(set(stats_cols) | set(cluster_by)),
                 )
             new = list(write_sets)
@@ -793,32 +794,45 @@ class TxnParquetCatalog:
         self._commit(name, attempt)
 
     def _clustered_write_sets(
-        self, name: str, clustered: DataFrame, stats_cols: Sequence[str]
+        self,
+        name: str,
+        clustered: DataFrame,
+        num_parts: int,
+        stats_cols: Sequence[str],
     ) -> dict[str, dict]:
         """Materialize the clustered rewrite: ONE write job produces every
         range partition as its own directory (partitionBy keys the layout
         on __pid); each becomes an independent write set so manifest stats
-        describe disjoint ranges. Stats for all sets come from one grouped
-        agg pass."""
+        describe disjoint ranges. ``clustered`` has ``num_parts`` range
+        partitions (``scale.cluster``). As in ``_write_set``, counts and
+        stats are an Observation on the write job — a count per range
+        partition, a min and max per (range partition, column) — so
+        nothing is read back."""
         clustered = clustered.withColumn("__pid", F.spark_partition_id())
+        aggs = []
+        for p in range(num_parts):
+            hit = F.col("__pid") == p
+            aggs.append(F.count(F.when(hit, 1)).alias(f"n{p}"))
+            for i, c in enumerate(stats_cols):
+                v = F.when(hit, F.col(c))
+                aggs += [F.min(v).alias(f"min{p}_{i}"), F.max(v).alias(f"max{p}_{i}")]
         staging = os.path.join(
             self.path(name), "_staging", f"compact-{uuid.uuid4().hex}"
         )
-        clustered.write.partitionBy("__pid").parquet(staging)
-        back = self.spark.read.parquet(staging)
-        aggs = [F.count(F.lit(1))]
-        for c in stats_cols:
-            aggs += [F.min(c), F.max(c)]
-        stat_rows = back.groupBy("__pid").agg(*aggs).collect()
+        obs = Observation()
+        clustered.observe(obs, *aggs).write.partitionBy("__pid").parquet(staging)
+        row = obs.get
         write_sets: dict[str, dict] = {}
-        for row in sorted(stat_rows, key=lambda r: r["__pid"]):
+        for p in range(num_parts):
+            if not row[f"n{p}"]:
+                continue  # an empty range partition writes no directory
             ws = f"ws-{uuid.uuid4().hex}"
             os.rename(
-                os.path.join(staging, f"__pid={row['__pid']}"),
+                os.path.join(staging, f"__pid={p}"),
                 os.path.join(self._data_dir(name), ws),
             )
             write_sets[ws] = {
-                c: [_json_stat(row[2 + 2 * i]), _json_stat(row[3 + 2 * i])]
+                c: [_json_stat(row[f"min{p}_{i}"]), _json_stat(row[f"max{p}_{i}"])]
                 for i, c in enumerate(stats_cols)
             }
         shutil.rmtree(staging, ignore_errors=True)

@@ -23,5 +23,23 @@ def spark():
 
 
 @pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)``: the Spark jobs ``fn`` starts, a diff of the
+    status store's job list."""
+    from perfbench.trace import SparkCounters
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def count(fn) -> int:
+        bus.waitUntilEmpty()
+        counters = SparkCounters(spark)
+        fn()
+        bus.waitUntilEmpty()
+        return int(counters.stop()["jobs"])
+
+    return count
+
+
+@pytest.fixture()
 def warehouse(tmp_path):
     return str(tmp_path / "warehouse")

@@ -330,19 +330,7 @@ def _catalogs(spark, tmp_path):
     }
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` starts: a diff of the status store's job list."""
-    from perfbench.trace import SparkCounters
-
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    bus.waitUntilEmpty()
-    counters = SparkCounters(spark)
-    fn()
-    bus.waitUntilEmpty()
-    return int(counters.stop()["jobs"])
-
-
-def test_warm_drop_job_budget(spark, tmp_path):
+def test_warm_drop_job_budget(spark, tmp_path, count_jobs):
     """A repeat run of a landed drop takes its schemas from table metadata
     and its counts from the writes: no inference, read-back or count jobs.
     With schemas inferred on every read and counts read back after every
@@ -352,7 +340,7 @@ def test_warm_drop_job_budget(spark, tmp_path):
     for label, cat in _catalogs(spark, tmp_path).items():
         pipe = IceNetPipeline(cat)
         pipe.run(f, a)
-        jobs = _jobs(spark, lambda: pipe.run(f, a))
+        jobs = count_jobs(lambda: pipe.run(f, a))
         assert jobs <= budget[label], (label, jobs)
 
 

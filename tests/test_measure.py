@@ -59,3 +59,43 @@ def test_ab_side_imports_package_from_tree_and_measure_from_head(tmp_path):
     assert seen["PKG"] == str(tree / "icenetetl_spark" / "__init__.py")
     assert seen["MEASURE"] == os.path.join(REPO, "tools", "measure.py")
     assert seen["TRACE"] == os.path.join(REPO, "perfbench", "trace.py")
+
+
+def test_warm_pass_compiles_nothing(spark):
+    """The session's codegen cache holds a whole working set, so a second
+    pass of the same queries compiles no class. These 20 bench queries
+    compile about 200 classes; with Spark's default cache of 100 the
+    second pass compiled 197 of them again. icenet_pipeline_latest is left
+    out: it compiles a few new classes on every pass, cache or not."""
+    import bench
+    from icenetetl_spark.queries import all_queries
+    from tools.check_oracle import SF_DIR
+
+    queries = all_queries()
+    names = [n for n in bench.BENCH_QUERIES if n != "icenet_pipeline_latest"]
+
+    def compiles() -> int:
+        recs = [measure.run(spark, queries[n], SF_DIR) for n in names]
+        return sum(
+            r.construct["codegen_compiles"] + r.execute["codegen_compiles"]
+            for r in recs
+        )
+
+    compiles()
+    assert compiles() == 0
+
+
+def test_bench_probe_reps_over_1p5x():
+    import bench
+
+    assert bench.reps_over_1p5x([2.0, 2.1, 1.9, 3.0, 3.2]) == 1
+    assert bench.reps_over_1p5x([1.0, 1.0, 1.0, 1.5, 1.51]) == 1
+    assert bench.reps_over_1p5x([2.0]) == 0
+
+
+def test_bench_fit_sec_is_first_pass_over_warm_median():
+    import bench
+
+    assert bench.fit_sec([9.5, 2.0, 2.5, 2.25]) == 7.25
+    assert bench.fit_sec([3.0, 3.5]) == -0.5
+    assert bench.fit_sec([4.0]) is None

@@ -332,6 +332,60 @@ def test_zorder_compact_prunes_on_both_dimensions(spark, tmp_path):
     assert zo_k2 < lin_k2
 
 
+@pytest.mark.parametrize(
+    "cluster_by, zorder, jobs",
+    [((), False, 1), (["k"], False, 3), (["k", "j"], True, 5)],
+    ids=["plain", "range", "zorder"],
+)
+def test_compact_stats_are_observed_on_the_write(
+    spark, tmp_path, count_jobs, cluster_by, zorder, jobs
+):
+    """Every compacted write set's manifest stats equal a grouped agg over
+    the rows it holds, and the compact runs only its write job: clustering
+    adds the range shuffle's sample and map-stage jobs, Z-order also the
+    two jobs of the key bounds' aggregate. Reading the staged rewrite back
+    for a grouped agg took 6 jobs (range) and 8 (Z-order)."""
+    import datetime as dt
+
+    from icenetetl_spark.txn import _json_stat
+
+    cat = _cat(spark, tmp_path)
+    for b in range(4):
+        df = spark.range(b * 1000, (b + 1) * 1000).select(
+            ((F.col("id") * 7919) % 4000).alias("k"),
+            (F.col("id") % 37).alias("j"),
+            F.when(F.col("id") % 5 != 0, F.col("id") / 8).alias("x"),
+            F.date_add(F.lit(dt.date(2024, 1, 1)), (F.col("id") % 90).cast("int"))
+            .alias("d"),
+        )
+        cat.append_missing("t", df, ["k"], stats_cols=["k", "x", "d"])
+    assert count_jobs(
+        lambda: cat.compact("t", num_files=4, cluster_by=cluster_by, zorder=zorder)
+    ) == jobs
+
+    manifest = cat._load_manifest("t", cat.current_version("t"))
+    cols = sorted({"k", "x", "d", *cluster_by})
+    ws = F.regexp_extract(F.input_file_name(), r"/data/(ws-[0-9a-f]+)/", 1)
+    rows = (
+        cat.read("t")
+        .groupBy(ws.alias("ws"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.min(c).alias(f"min_{c}") for c in cols],
+            *[F.max(c).alias(f"max_{c}") for c in cols],
+        )
+        .collect()
+    )
+    assert sum(r["n"] for r in rows) == 4000
+    assert manifest["stats"] == {
+        r["ws"]: {
+            c: [_json_stat(r[f"min_{c}"]), _json_stat(r[f"max_{c}"])] for c in cols
+        }
+        for r in rows
+    }
+    assert sorted(manifest["dirs"]) == sorted(manifest["stats"])
+
+
 def test_schema_evolution_additive_append(spark, tmp_path):
     """A later write set may carry a new column; reads union with NULLs
     for older sets (Delta-style additive evolution)."""
