@@ -27,14 +27,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# r14 (VERDICT r13 #2): neutralize the cross-run fit-artifact DISK cache
-# for the timed suite — a prior process's persisted artifacts must not
-# decide whether a *_trained query's first pass pays its fit. The
-# in-session memo still applies from pass 2 on (so the per-query MEDIAN of
-# 3 passes measures the warm path exactly as in rounds <= 13 — numbers
-# stay comparable), and the per-pass "fit_cache" field below labels which
-# passes computed a fit vs rode the memo. Must be set before the
-# icenetetl imports (operators/kmeans.py reads it at import).
+# Turn off the cross-run fit-artifact DISK cache for the timed suite: a
+# prior process's persisted artifacts must not decide whether a *_trained
+# query's first pass pays its fit. The session memo still applies from
+# pass 2 on, so the per-query MEDIAN of 3 passes measures the warm path,
+# and the per-pass "fit_cache" field below labels which passes computed a
+# fit and which rode the memo. Must be set before the icenetetl imports
+# (operators/kmeans.py reads it at import).
 os.environ["ICENETETL_FIT_CACHE_DIR"] = ""
 
 from icenetetl_spark.queries import all_queries  # noqa: E402
@@ -175,7 +174,7 @@ def main() -> None:
     # burst that lands mid-suite. One probe rep between suite passes makes
     # the denominator sample the same window the queries ran in.
     probe_mid: list[float] = []
-    # r14: per-pass trained-fit resolution log (kmeans.FIT_EVENTS) — each
+    # per-pass trained-fit resolution log (kmeans.FIT_EVENTS): each
     # *_trained query's timing is stamped with whether its fit was
     # computed ("fit") or served from the session memo ("memo"); the disk
     # layer is disabled above so "disk" cannot appear in a bench run.

@@ -120,33 +120,33 @@ def fit_bpe(
     materialization job, and lineage never accumulates across merges (the
     previous cache is only unpersisted after its successor is populated).
 
-    r13: the fitted merge table is MEMOIZED per corpus-content signature
-    (the kmeans/pq fit-cache contract, operators/kmeans.corpus_signature):
-    the merges are O(num_merges) driver state — a trained tokenizer, like
-    a trained quantizer's centroids — and every consumer construction was
-    re-running the num_merges one-job-per-merge fit. Content-keyed, so a
-    regenerated corpus refits; non-file-backed frames (constant
-    signature) skip the memo entirely, as in fit_pq_codebooks_lloyd.
-
-    r14 (ADVICE r13 #1): memoization now ALSO requires a caller-supplied
-    ``cache_key`` uniquely identifying the corpus FRAME — the full kmeans
-    contract. corpus_signature sees only inputFiles(), not the plan, so
-    two different frames over the same parquet (e.g. a filtered subset of
-    documents) would collide and silently serve merges trained on other
-    data. ``cache_key=None`` (the default) disables the memo.
+    ``cache_key``, when given, must uniquely identify the corpus FRAME
+    (the kmeans.lloyd_fit contract): the merge table is then memoized in
+    the session (kmeans.memoized_fit), so every consumer construction
+    after the first skips the one-job-per-merge fit. The key also folds
+    the corpus' content signature, so a regenerated corpus refits. The
+    caller's key is required because corpus_signature sees only
+    inputFiles(), not the plan: two different frames over the same parquet
+    (a filtered subset of documents, say) would otherwise collide and
+    serve merges trained on other data. ``cache_key=None`` (the default)
+    always fits. Callers get their own copy of the memoized table.
     """
-    from icenetetl_spark.operators.kmeans import FIT_EVENTS, corpus_signature
+    from icenetetl_spark.operators.kmeans import memoized_fit
 
-    key = None
-    if cache_key is not None:
-        sig = corpus_signature(docs)
-        if sig != ("nofiles",):
-            key = (cache_key, sig, num_merges, text_col, min_count)
-            hit = _BPE_FIT_MEMO.pop(key, None)
-            if hit is not None:
-                _BPE_FIT_MEMO[key] = hit  # LRU: re-insert as most recent
-                FIT_EVENTS.append(("bpe", "memo"))
-                return [dict(m) for m in hit]
+    merges = memoized_fit(
+        "bpe",
+        docs,
+        cache_key,
+        (num_merges, text_col, min_count),
+        lambda: _fit_merges(docs, num_merges, text_col, min_count),
+    )
+    return [dict(m) for m in merges]
+
+
+def _fit_merges(
+    docs: DataFrame, num_merges: int, text_col: str, min_count: int
+) -> list[dict]:
+    """The fit behind :func:`fit_bpe`."""
     vocab = (
         word_freqs(docs, text_col)
         .withColumn("syms", symbolize(F.col("word")))
@@ -194,15 +194,7 @@ def fit_bpe(
         vocab.unpersist()
         if prev is not None:
             prev.unpersist()
-    FIT_EVENTS.append(("bpe", "fit"))
-    if key is not None:
-        if len(_BPE_FIT_MEMO) >= 64:  # LRU bound (ADVICE r13 #4)
-            _BPE_FIT_MEMO.pop(next(iter(_BPE_FIT_MEMO)))
-        _BPE_FIT_MEMO[key] = [dict(m) for m in merges]
     return merges
-
-
-_BPE_FIT_MEMO: dict[tuple, list[dict]] = {}
 
 
 def apply_merges(syms: Column, merges: list[dict]) -> Column:

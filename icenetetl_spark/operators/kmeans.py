@@ -1,11 +1,11 @@
-"""Deterministic, engine-portable Lloyd's k-means (round-10 verdict #2).
+"""Deterministic, engine-portable Lloyd's k-means.
 
 MLlib's KMeans is seeded but NOT reproducible across engines (treeAggregate
 float sums depend on partition order), which forced the trained-quantizer
 queries (``knn_ivf``, ``knn_pq_trained``, ``dedup_semantic_trained``) into
 rows-only correctness gates. This module replaces the fit with a fixed-point
 Lloyd iteration over a FIXED init — the same construction that made BPE
-hash-gateable in round 8:
+hash-gateable:
 
 - init = k corpus rows selected by id (both engines read the same rows);
 - assignment = exact nearest centroid (cosine argmax or L2 argmin, ties to
@@ -35,49 +35,34 @@ chained CTEs (the pagerank/minhash generator pattern).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, functions as F
 
 from icenetetl_spark.operators.similarity import dot
+from icenetetl_spark.session import memoized
 
 LLOYD_SCALE = 9  # 10^9 fixed point: |v| <= ~10 and 10^9 rows/cell fit BIGINT
 
-# Session-lifetime memo of fitted centroid lists (round-10 verdict #2: the
-# trained-quantizer gates each re-ran the same 3-5 iteration fit from
-# scratch — 16-20s per gate). The fit is a DETERMINISTIC pure function of
-# (corpus, init, params), so given a caller-supplied key identifying the
-# (corpus, init) pair, the O(k*d) result list can be cached exactly like
-# the BPE vocab-sized driver cache (operators/bpe.py). Keys append the
-# full parameter tuple, so the same corpus fitted with different
-# iterations/metric/scale never collides.
-_FIT_CACHE: dict[tuple, list] = {}
-
-# Second-level PERSISTED memo (r11 verdict #3: a cold single-query session
-# re-paid the whole deterministic fit, ~19s of the knn_ivf gate's 21s).
-# Trained quantizers are offline artifacts in production — FAISS trains a
-# codebook once and every job loads it — so the fitted list is also
-# spilled to a small JSON file keyed by sha256(full key), where the full
-# key already folds the corpus content signature (size+mtime of every
-# backing file): a regenerated corpus or changed fit parameter misses by
-# construction, while a new PROCESS over unchanged data rides the
-# artifact. Set ICENETETL_FIT_CACHE_DIR="" to disable. The default dir is
-# PER-USER (uid suffix — r12 advice #1: a shared world-writable dir lets
-# one user's artifacts shadow another's), and the on-disk hash folds a
-# FORMAT VERSION — bump _FIT_FORMAT_VERSION on any fit-semantics or
-# artifact-shape change so artifacts written by older code miss instead of
-# being silently served. (The in-memory _FIT_CACHE dies with the process,
-# so only the disk layer needs the version.)
+# Persisted fit artifacts (see memoized_fit). The artifact name hashes the
+# full key and _FIT_FORMAT_VERSION: bump the version on any change to fit
+# semantics, key shape or artifact shape, so older artifacts miss instead
+# of being served. The default directory is per user, so one user's
+# artifacts cannot shadow another's in a shared world-writable /tmp.
 import hashlib as _hashlib
 import json as _json
 import os as _os
 
-_FIT_FORMAT_VERSION = 2
+_FIT_FORMAT_VERSION = 3
 
-# r14 (VERDICT r13 #2): append-only log of trained-fit resolutions —
-# ("lloyd"|"pq_lloyd"|"bpe", "memo"|"disk"|"fit") — so bench.py can stamp
-# each *_trained query's timing with whether its fit was computed or
-# served from a cache layer (self-describing trained-query walls).
-# Driver-side bookkeeping only; cleared by reset_fit_cache().
+# Append-only log of trained-fit resolutions, (family, "memo"|"disk"|"fit"),
+# so bench.py can stamp each *_trained query's timing with whether its fit
+# ran or was served from a cache layer. Cleared by reset_fit_cache().
 FIT_EVENTS: list[tuple[str, str]] = []
+
+# Folded into every memo key; reset_fit_cache() bumps it, so fits memoized
+# before the reset miss in every session and age out of its memo.
+_fit_epoch = 0
 
 
 def _default_cache_dir() -> str:
@@ -102,13 +87,11 @@ def _disk_path(full_key: tuple) -> str | None:
     return _os.path.join(_FIT_CACHE_DIR, f"{h}.json")
 
 
-def _disk_get(full_key: tuple, arity: int = 2):
-    """Load a persisted fit artifact, validating the decoded SHAPE: a list
-    of ``arity``-element rows, integer ids first and a numeric vector
-    last. Any malformed artifact — wrong JSON type, wrong row arity,
-    non-numeric fields — is a MISS (refit), never a crash (r12 advice #1:
-    the old try only guarded json.load, so a valid-JSON artifact with an
-    unexpected shape crashed the caller's unpack)."""
+def _disk_get(full_key: tuple, arity: int) -> list[tuple] | None:
+    """Load a persisted fit artifact as a list of ``arity``-tuples: integer
+    ids first, a list of floats last. Any malformed artifact (wrong JSON
+    type, wrong row arity, non-numeric fields) is a miss, so the caller
+    refits instead of crashing on the unpack."""
     path = _disk_path(full_key)
     if path is None:
         return None
@@ -130,10 +113,11 @@ def _disk_get(full_key: tuple, arity: int = 2):
             for x in vec
         ):
             return None
-    return rows
+    # JSON round-trips doubles exactly (repr-based)
+    return [(*ids, [float(x) for x in vec]) for *ids, vec in rows]
 
 
-def _disk_put(full_key: tuple, cents) -> None:
+def _disk_put(full_key: tuple, rows: list) -> None:
     path = _disk_path(full_key)
     if path is None:
         return
@@ -141,16 +125,17 @@ def _disk_put(full_key: tuple, cents) -> None:
         _os.makedirs(_FIT_CACHE_DIR, exist_ok=True)
         tmp = f"{path}.tmp.{_os.getpid()}"
         with open(tmp, "w", encoding="utf-8") as f:
-            _json.dump(cents, f)
+            _json.dump(rows, f)
         _os.replace(tmp, path)  # atomic: concurrent fitters race benignly
     except OSError:
         pass
 
 
 def reset_fit_cache(disk: bool = False) -> None:
-    """Test hook: drop memoized fits (``disk=True`` also clears the
-    persisted artifacts)."""
-    _FIT_CACHE.clear()
+    """Test hook: drop memoized fits in every session and clear
+    FIT_EVENTS (``disk=True`` also clears the persisted artifacts)."""
+    global _fit_epoch
+    _fit_epoch += 1
     FIT_EVENTS.clear()
     if disk and _FIT_CACHE_DIR and _os.path.isdir(_FIT_CACHE_DIR):
         for f in _os.listdir(_FIT_CACHE_DIR):
@@ -161,11 +146,58 @@ def reset_fit_cache(disk: bool = False) -> None:
                     pass
 
 
+def memoized_fit(
+    family: str,
+    corpus: DataFrame,
+    cache_key: tuple | str | None,
+    params: tuple,
+    fit: Callable[[], list],
+    disk_arity: int | None = None,
+) -> list:
+    """A deterministic fit of ``corpus`` from the session memo, else the
+    disk artifact, else ``fit()``; logs the source in FIT_EVENTS.
+
+    Trained fits are pure functions of (corpus, init, params) that cost
+    Spark jobs per iteration, so given a caller ``cache_key`` naming the
+    (corpus, init) pair, chained queries pay one fit instead of one per
+    query; without one it always fits. The key adds ``family``,
+    :func:`corpus_signature` and ``params`` (every fit parameter).
+    ``disk_arity`` (fields per row: ids, then a float vector) also
+    persists the rows as JSON, the FAISS train-once pattern, so a new
+    process loads them; ``ICENETETL_FIT_CACHE_DIR=""`` turns that off.
+    Only file-backed corpora reach the disk: an in-memory frame signs as
+    a constant and would collide across processes."""
+    if cache_key is None:
+        rows = fit()
+        FIT_EVENTS.append((family, "fit"))
+        return rows
+    sig = corpus_signature(corpus)
+    key = (cache_key, family, sig, *params)
+    on_disk = disk_arity is not None and sig != ("nofiles",)
+    src = "memo"
+
+    def build() -> list:
+        nonlocal src
+        rows = _disk_get(key, disk_arity) if on_disk else None
+        if rows is not None:
+            src = "disk"
+            return rows
+        src = "fit"
+        rows = fit()
+        if on_disk:
+            _disk_put(key, rows)
+        return rows
+
+    rows = memoized(corpus.sparkSession, ("fit", _fit_epoch, *key), build)
+    FIT_EVENTS.append((family, src))
+    return rows
+
+
 def corpus_signature(df: DataFrame) -> tuple:
     """Best-effort CONTENT signature of the frame's backing files, folded
-    into the fit-memo keys (r11 advice #2: the caller-supplied cache_key
-    names the path, so regenerating the parquet under the same path
-    mid-session silently served a stale fit). Local files contribute
+    into the fit-memo keys: the caller-supplied cache_key names the path,
+    so without it a parquet regenerated under the same path mid-session
+    would be served a stale fit. Local files contribute
     (path, size, mtime_ns); non-local URIs contribute the path list alone
     (object stores have no cheap driver-side stat here — the documented
     cache_key contract carries the burden); a non-file-backed plan
@@ -179,8 +211,8 @@ def corpus_signature(df: DataFrame) -> tuple:
         files = []
     if not files:
         # in-memory / non-file-backed plan: a CONSTANT, not content —
-        # callers must not let this signature reach the cross-process
-        # disk layer (lloyd_fit/fit_pq_codebooks_lloyd skip it)
+        # it must not reach the cross-process disk layer (memoized_fit
+        # skips it)
         return ("nofiles",)
     sig = []
     for f in files:
@@ -219,16 +251,15 @@ def _vmax_agg(vcol):
 def _check_quantized_bound(rows, scale: int, where: str) -> None:
     """Raise when any cell's quantized BIGINT sum COULD have wrapped.
 
-    r11 advice #3: the previous guard assumed the documented |v| <= 10
-    envelope, so vectors with larger components could wrap silently while
-    the cell count stayed under its threshold — reintroducing the
-    Spark(wraps, ANSI off)/DuckDB(raises) divergence the guard exists to
-    prevent. The bound now derives from the observed max |element|
-    aggregated in the same groupBy: each quantized term satisfies
-    |floor(v*10^s + .5)| <= vmax*10^s + 1, so a cell of n rows is bounded
-    by n*(vmax*10^s + 1). n (COUNT) and vmax (MAX over doubles) are exact
-    and cannot themselves wrap, which keeps the check sound even though
-    it runs after the sums were computed."""
+    A bound that assumed the documented |v| <= 10 envelope would let
+    vectors with larger components wrap silently while the cell count
+    stayed under its threshold — the Spark(wraps, ANSI off)/DuckDB(raises)
+    divergence the guard exists to prevent. So the bound derives from the
+    observed max |element| aggregated in the same groupBy: each quantized
+    term satisfies |floor(v*10^s + .5)| <= vmax*10^s + 1, so a cell of n
+    rows is bounded by n*(vmax*10^s + 1). n (COUNT) and vmax (MAX over
+    doubles) are exact and cannot themselves wrap, which keeps the check
+    sound even though it runs after the sums were computed."""
     import math
 
     q = 10**scale
@@ -238,7 +269,7 @@ def _check_quantized_bound(rows, scale: int, where: str) -> None:
         if not math.isfinite(vmax):
             # F.max propagates NaN/Inf; without this guard math.ceil
             # raises a bare "cannot convert float NaN to integer" that
-            # points nowhere near the data (r12 advice #5)
+            # points nowhere near the data
             raise ValueError(
                 f"{where}: non-finite embedding component (cell max "
                 f"|element| = {vmax}); filter or impute non-finite "
@@ -270,7 +301,7 @@ def lloyd_fit(
     fixed-centroid plans (knn_ivf_fixed_centroids, semdedup, pq encode).
 
     ``init`` must be a ``(centroid_id, cvec)`` frame of k rows (collected
-    immediately — O(k*d) driver state). ``metric='cosine'`` assigns by
+    by the fit — O(k*d) driver state). ``metric='cosine'`` assigns by
     cosine argmax (ties -> smaller id), ``'l2'`` by squared-euclidean
     argmin via the three-dot identity — each matching the downstream
     consumer's own assignment expression so fit and use share float
@@ -282,70 +313,48 @@ def lloyd_fit(
     (:func:`corpus_signature` — size+mtime for local files, so a parquet
     regenerated under the same path stales the memo) are appended
     automatically. The fitted centroid list is then memoized for the
-    session (deterministic fit -> identical result), so chained
-    gate/stress runs pay one fit instead of one per query."""
+    session and persisted (:func:`memoized_fit`), so chained gate/stress
+    runs pay one fit instead of one per query."""
     if metric not in ("cosine", "l2"):
         raise ValueError(f"unknown metric {metric!r}")
     spark = corpus.sparkSession
-    full_key = None
-    disk_ok = False
-    if cache_key is not None:
-        sig = corpus_signature(corpus)
-        full_key = (
-            cache_key, sig,
-            iterations, id_col, vec_col, dim, metric, scale,
+
+    def fit() -> list:
+        cents = sorted(
+            (int(r["centroid_id"]), [float(x) for x in r["cvec"]])
+            for r in init.select("centroid_id", "cvec").collect()
         )
-        # a non-file-backed frame signs as a constant: the session memo is
-        # still sound (same process, caller-owned cache_key), but the DISK
-        # layer would collide two different in-memory corpora sharing a
-        # cache_key across processes — skip it (r12 advice #1)
-        disk_ok = sig != ("nofiles",)
-        cached = _FIT_CACHE.get(full_key)
-        src = "memo"
-        if cached is None and disk_ok:
-            disk = _disk_get(full_key)
-            if disk is not None:
-                # JSON round-trips doubles exactly (repr-based); normalize
-                # the list-of-lists shape back to the session-memo shape
-                cached = [(int(c), [float(x) for x in v]) for c, v in disk]
-                _FIT_CACHE[full_key] = cached
-                src = "disk"
-        if cached is not None:
-            FIT_EVENTS.append(("lloyd", src))
-            return spark.createDataFrame(
-                cached, "centroid_id BIGINT, cvec ARRAY<DOUBLE>"
+        # ``__sn`` hoists the per-vector self-dot out of the k-way
+        # crossJoin (the assign_cells_fixed trick): the hot N*k projection
+        # evaluates ONE dot instead of three. Value-identical — same
+        # operands, same order, sqrt/add merely hoisted.
+        self_dot = dot("__v", "__v", dim)
+        # persist the projected corpus ACROSS iterations (the MLlib-KMeans
+        # pattern): every iteration's crossJoin re-reads it, so without the
+        # cache each Lloyd round pays the source scan + projection again.
+        # MEMORY_AND_DISK via .persist() default; freed in the finally.
+        pre = corpus.select(
+            F.col(id_col).alias("__id"),
+            F.col(vec_col).cast("array<double>").alias("__v"),
+            (F.sqrt(self_dot) if metric == "cosine" else self_dot).alias(
+                "__sn"
+            ),
+        ).persist()
+        try:
+            return _lloyd_iterate(
+                spark, pre, cents, iterations, dim, metric, scale
             )
-    cents = [
-        (int(r["centroid_id"]), [float(x) for x in r["cvec"]])
-        for r in init.select("centroid_id", "cvec").collect()
-    ]
-    cents.sort()
-    # ``__sn`` hoists the per-vector self-dot out of the k-way crossJoin
-    # (the assign_cells_fixed trick): the hot N*k projection evaluates ONE
-    # dot instead of three. Value-identical — same operands, same order,
-    # sqrt/add merely hoisted.
-    self_dot = dot("__v", "__v", dim)
-    # persist the projected corpus ACROSS iterations (r11 verdict #3's
-    # "persist the corpus" lever — the MLlib-KMeans pattern): every
-    # iteration's crossJoin re-reads it, so without the cache each Lloyd
-    # round pays the source scan + projection again. MEMORY_AND_DISK via
-    # .persist() default; freed in the finally below.
-    pre = corpus.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-        (F.sqrt(self_dot) if metric == "cosine" else self_dot).alias("__sn"),
-    ).persist()
-    try:
-        cents = _lloyd_iterate(
-            spark, pre, cents, iterations, dim, metric, scale
-        )
-    finally:
-        pre.unpersist(blocking=False)
-    FIT_EVENTS.append(("lloyd", "fit"))
-    if full_key is not None:
-        _FIT_CACHE[full_key] = cents
-        if disk_ok:
-            _disk_put(full_key, cents)
+        finally:
+            pre.unpersist(blocking=False)
+
+    cents = memoized_fit(
+        "lloyd",
+        corpus,
+        cache_key,
+        (iterations, id_col, vec_col, dim, metric, scale),
+        fit,
+        disk_arity=2,
+    )
     return spark.createDataFrame(
         cents, "centroid_id BIGINT, cvec ARRAY<DOUBLE>"
     )

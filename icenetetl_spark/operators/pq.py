@@ -38,23 +38,6 @@ from pyspark.sql.window import Window
 
 from icenetetl_spark.operators.similarity import cosine, dot
 
-# session-lifetime memo of deterministic codebook fits (the
-# operators/kmeans._FIT_CACHE pattern; see fit_pq_codebooks_lloyd)
-_PQ_FIT_CACHE: dict[tuple, list] = {}
-
-
-def reset_fit_cache() -> None:
-    """Test hook: drop memoized codebook fits."""
-    _PQ_FIT_CACHE.clear()
-
-
-def _fit_events() -> list:
-    """The shared trained-fit resolution log (kmeans.FIT_EVENTS) — one
-    list so bench.py reads a single stream across fit families."""
-    from icenetetl_spark.operators.kmeans import FIT_EVENTS
-
-    return FIT_EVENTS
-
 # fixed-point scale for the order-independent cross-subspace ADC sum:
 # distances are quantized to integers with floor(d * 10^12 + 0.5) —
 # identical IEEE ops on both engines — then summed exactly as BIGINTs.
@@ -141,7 +124,7 @@ def encode_pq(
     shuffle, so the exchange carries N*M rows, not N*M*K."""
     from icenetetl_spark.operators.scale import spread
 
-    # r13 (guide §2.5): the N*M*K scoring projection below runs map-side
+    # the N*M*K scoring projection below runs map-side
     # on the corpus partitioning; spread() keeps a row-group-bound scan
     # from serializing it (no-op once parallel — operators/scale.py)
     corpus = spread(corpus, id_col)
@@ -231,9 +214,9 @@ def fit_pq_codebooks_lloyd(
     the ``init_ids`` seed rows' subvector slices. Unlike
     :func:`fit_pq_codebooks` (MLlib, partition-order-dependent sums),
     this fit is bit-reproducible and has a DuckDB CTE twin, which is what
-    lets the knn_pq_trained QUERY carry a value-hash gate (round 10).
+    lets the knn_pq_trained QUERY carry a value-hash gate.
 
-    ALL m subspaces fit in ONE job per iteration (round 11): the corpus
+    ALL m subspaces fit in ONE job per iteration: the corpus
     explodes to (id, subspace, subvector) once, each iteration
     equi-joins the m*k broadcast centroid frame on the subspace index,
     and one groupBy carries every subspace's argmin + quantized sums —
@@ -246,50 +229,48 @@ def fit_pq_codebooks_lloyd(
 
     Returns the (m, code_id, csub) shape of :func:`pq_codebook`; code_id
     keeps the seed row's id (the encode argmin only needs distinct ids).
-    ``cache_key`` memoizes the fitted codebook for the session (the
-    lloyd_fit contract: key must identify the (corpus, init) pair). At
+    ``cache_key`` memoizes and persists the fitted codebook
+    (kmeans.memoized_fit; the lloyd_fit contract: the key must identify
+    the (corpus, init) pair). At
     scale sample upstream with a deterministic id-hash predicate the
     oracle replays."""
+    from icenetetl_spark.operators.kmeans import memoized_fit
+
+    rows = memoized_fit(
+        "pq_lloyd",
+        corpus,
+        cache_key,
+        (m, iterations, id_col, vec_col, width, tuple(init_ids)),
+        lambda: _fit_codebooks_lloyd(
+            corpus, init_ids, m, iterations, id_col, vec_col, width
+        ),
+        disk_arity=3,
+    )
+    return corpus.sparkSession.createDataFrame(
+        rows, "m INT, code_id INT, csub ARRAY<DOUBLE>"
+    )
+
+
+def _fit_codebooks_lloyd(
+    corpus: DataFrame,
+    init_ids: list[int],
+    m: int,
+    iterations: int,
+    id_col: str,
+    vec_col: str,
+    width: int | None,
+) -> list[tuple]:
+    """The fit behind :func:`fit_pq_codebooks_lloyd`: (m, code_id, csub)
+    rows."""
     from icenetetl_spark.operators.kmeans import (
         LLOYD_SCALE,
         _cfold,
         _check_quantized_bound,
-        _disk_get,
-        _disk_put,
         _quantized_sums,
         _vmax_agg,
-        corpus_signature,
     )
     spark = corpus.sparkSession
     w = _sub_width(width or _vector_width(corpus, vec_col), m)
-    full_key = None
-    disk_ok = False
-    if cache_key is not None:
-        sig = corpus_signature(corpus)
-        full_key = (
-            cache_key, "pq_lloyd", sig, m,
-            iterations, id_col, vec_col, w, tuple(init_ids),
-        )
-        # non-file-backed corpora sign as a constant: keep the session
-        # memo, skip the cross-process DISK layer (kmeans r12 advice #1)
-        disk_ok = sig != ("nofiles",)
-        cached = _PQ_FIT_CACHE.get(full_key)
-        src = "memo"
-        if cached is None and disk_ok:
-            disk = _disk_get(full_key, arity=3)
-            if disk is not None:
-                # same persisted-artifact contract as kmeans._FIT_CACHE
-                cached = [
-                    (int(mi), int(c), [float(x) for x in v])
-                    for mi, c, v in disk
-                ]
-                _PQ_FIT_CACHE[full_key] = cached
-                src = "disk"
-        if cached is not None:
-            _fit_events().append(("pq_lloyd", src))
-            return spark.createDataFrame(
-                cached, "m INT, code_id INT, csub ARRAY<DOUBLE>"
-            )
     q = float(10**LLOYD_SCALE)
     # init slices: collect the k seed vectors once, slice driver-side —
     # no arithmetic, so the values equal Spark's F.slice of the cast array
@@ -321,7 +302,7 @@ def fit_pq_codebooks_lloyd(
     # pattern): every iteration's equi-join re-reads the exploded
     # (id, subspace, subvector) projection otherwise. Unpersisted in the
     # finally below so the overflow-raise path (or any mid-loop failure)
-    # frees the blocks too, mirroring lloyd_fit (r12 advice #4).
+    # frees the blocks too, mirroring lloyd_fit.
     pre = (
         corpus.select(
             F.col(id_col).alias("__id"),
@@ -386,17 +367,9 @@ def fit_pq_codebooks_lloyd(
             }
     finally:
         pre.unpersist(blocking=False)
-    _fit_events().append(("pq_lloyd", "fit"))
-    out_rows = [
+    return [
         (mi, int(cid), cvec) for mi in range(m) for cid, cvec in cents[mi]
     ]
-    if full_key is not None:
-        _PQ_FIT_CACHE[full_key] = out_rows
-        if disk_ok:
-            _disk_put(full_key, out_rows)
-    return spark.createDataFrame(
-        out_rows, "m INT, code_id INT, csub ARRAY<DOUBLE>"
-    )
 
 
 def knn_pq_trained(
@@ -496,7 +469,7 @@ def _knn_pq_with_codebook(
     refined = (
         # candidates are k*refine_factor per query (bounded): broadcast the
         # whole candidate+qv subtree so the corpus vectors never shuffle.
-        # r14 (VERDICT r13 #1): the re-rank cosine uses the FOLD, not the
+        # the re-rank cosine uses the FOLD, not the
         # unrolled 3-dot — this is the family's measured scoring dispatch
         # (queries/similarity.py note: 3-dot-per-pair unrolled runs ~3x
         # SLOWER than the interpreted fold on scoring joins), and the
@@ -555,14 +528,14 @@ def knn_ivfpq_fixed(
     from icenetetl_spark.functions.portable import fsum_col
     from icenetetl_spark.operators.ivf import assign_cells_fixed
 
-    # r13: ``dim`` (statically-declared width) skips the one-row
-    # _vector_width probe job — construction-time driver work, guide §7.3
+    # ``dim`` (statically-declared width) skips the one-row
+    # _vector_width probe job, driver work paid at construction
     width = dim or _vector_width(corpus, vec_col)
     w = _sub_width(width, m)
     codebook = pq_codebook(corpus, code_ids, m, id_col, vec_col, width)
     codes = encode_pq(corpus, codebook, m, id_col, vec_col, width)
 
-    # r13: thread ``dim`` through so the corpus-side cell assignment rides
+    # thread ``dim`` through so the corpus-side cell assignment rides
     # the codegen-unrolled dot (bit-identical values — similarity.py
     # contract) instead of the interpreted aggregate/zip_with fold, which
     # was costing ~90us/row on the one corpus-sized projection of this
@@ -574,7 +547,7 @@ def knn_ivfpq_fixed(
         corpus, centroids, id_col, vec_col, out_id="neighbor_id", dim=dim,
         attach_vector=False,
     ).select("neighbor_id", "cell")
-    # r14 (VERDICT r13 #1): probe scoring in the hoisted-norm single-dot
+    # probe scoring in the hoisted-norm single-dot
     # form — ||q|| once per query, ||c|| once per centroid, ONE unrolled
     # dot in the |Q| x k crossJoin projection instead of the 3-dot
     # unrolled cosine (same stage SHAPE as assign_cells_fixed and
@@ -642,7 +615,7 @@ def knn_ivfpq_fixed(
         # candidates are k*refine_factor per query (bounded): broadcast the
         # whole candidate+qv subtree so the corpus vectors never shuffle.
         # Fold-form re-rank cosine — the family's measured scoring
-        # dispatch; see the _knn_pq_with_codebook refine note (r14).
+        # dispatch; see the _knn_pq_with_codebook refine note.
         F.broadcast(candidates.join(F.broadcast(qv), "query_id"))
         .join(cv, "neighbor_id")
         .select(

@@ -10,6 +10,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from icenetetl_spark.session import memoized
+
 
 def salted_join(
     skewed: DataFrame,
@@ -182,7 +184,7 @@ def bloom_bitmap_df(
             # is 64*size(bm) by construction, and k_hashes rides in the
             # column METADATA (schema-level, no extra job) so a probe can
             # never silently test different bits than the build set —
-            # bloom_prefilter refuses a conflicting k (ADVICE r7).
+            # bloom_prefilter refuses a conflicting k.
             F.transform(F.col("s"), lambda x: x["word"]).alias(
                 "__bloom_bm", metadata={"bloom_k": k_hashes}
             )
@@ -305,7 +307,7 @@ def bloom_semi_join(
         # power-of-two round-up usually absorbs an underestimate, but not
         # when the true count sits just above a boundary — headroom makes
         # the boundary case pick the next size instead of silently
-        # shipping a partially saturated filter (ADVICE r7)
+        # shipping a partially saturated filter
         target = max(64, int(bits_per_key * max(int(n), 1) * 1.1))
         m_bits = min(1 << (target - 1).bit_length(), max_bits)
     bitmap = bloom_bitmap_df(build, key, m_bits=m_bits, k_hashes=k_hashes)
@@ -425,9 +427,9 @@ def spread(df: DataFrame, *keys: str, factor: int = 1) -> DataFrame:
     an expensive per-row projection — and a NO-OP when the frame is already
     at least that parallel.
 
-    Why it exists (r13, guide §2.5 stragglers): a parquet scan can never be
-    more parallel than its row-group count, so a small single-row-group
-    input serializes every downstream map-side stage regardless of cores —
+    Why it exists: a parquet scan can never be more parallel than its
+    row-group count, so a small single-row-group input serializes every
+    downstream map-side stage regardless of cores —
     the md5-per-position stage of ``dedup_substring_spans`` ran as ONE task
     (95% of the query wall at sf0.1), and the same shape throttled the
     MinHash shingle, SimHash word, and embedding-dot projections. Per-row
@@ -452,30 +454,20 @@ def spread(df: DataFrame, *keys: str, factor: int = 1) -> DataFrame:
             "spread() needs at least one hash key: keyless RoundRobin "
             "placement is not retry-stable (see salted_join docstring)"
         )
-    # Construction-time memo (guide §7.3): the partition probe triggers
-    # physical planning (~30-80ms of driver time); composed queries pass
-    # the SAME plan handle repeatedly (load_table memoizes handles), so
-    # key on plan identity + the spread signature. Returning one shared
-    # repartitioned frame also lets ReuseExchange share the exchange
-    # across consumers. Holding df in the value pins its id().
-    memo_key = (id(df), target, keys)
-    hit = _SPREAD_MEMO.pop(memo_key, None)
-    if hit is not None:
-        _SPREAD_MEMO[memo_key] = hit  # LRU: re-insert as most recent
-        return hit[1]
-    # Physical-plan probe only (no job): row-group-bound scans report their
-    # real split count here. Skip the exchange when already parallel.
-    out = df
-    if df.rdd.getNumPartitions() < target:
-        out = df.repartition(target, *[F.col(k) for k in keys])
-    if len(_SPREAD_MEMO) >= 256:  # LRU-bound the pinned handles (r13 #8:
-        # evict oldest, not wholesale clear — no thundering refill)
-        _SPREAD_MEMO.pop(next(iter(_SPREAD_MEMO)))
-    _SPREAD_MEMO[memo_key] = (df, out)
-    return out
+    # The partition probe below plans the frame (30-80 ms of driver time)
+    # and composed queries pass the same handle repeatedly (load_table
+    # memoizes handles), so memoize on plan identity and the spread
+    # signature. One shared repartitioned frame also lets ReuseExchange
+    # share the exchange across consumers. The value holds df, which pins
+    # its id().
+    def probe() -> tuple[DataFrame, DataFrame]:
+        # physical-plan probe only (no job): row-group-bound scans report
+        # their real split count here; skip the exchange when parallel
+        if df.rdd.getNumPartitions() < target:
+            return df, df.repartition(target, *[F.col(k) for k in keys])
+        return df, df
 
-
-_SPREAD_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+    return memoized(df.sparkSession, ("spread", id(df), target, keys), probe)[1]
 
 
 def write_bucketed(

@@ -124,7 +124,7 @@ def surrogate_cell_id() -> F.Column:
 def portable_cell_id() -> F.Column:
     """Bit-packed natural cell key ((centroid_x << 32) | centroid_y) —
     the SQL-reproducible surrogate used by the hash-gated queries (see
-    latest_view_plan's portable_ids note). Collision-free for two int32s,
+    latest_view_plan's cell_id note). Collision-free for two int32s,
     pure codegen arithmetic."""
     return F.shiftleft(F.col("centroid_x").cast("long"), 32).bitwiseOR(
         F.col("centroid_y").cast("long").bitwiseAND(F.lit(0xFFFFFFFF))
@@ -364,26 +364,23 @@ def make_txn_catalog(spark, warehouse: str):
     return TxnParquetCatalog(spark, warehouse, default_stats=stats)
 
 
-def latest_view_plan(
-    raw: DataFrame, hemisphere: str, portable_ids: bool = False
-) -> DataFrame:
+def latest_view_plan(raw: DataFrame, hemisphere: str) -> DataFrame:
     """Pure-transform (no table layer) version of the flagship chain:
     normalize -> grid -> cell assign -> latest snapshot -> enrich -> number.
     Used by the ``icenet_pipeline_latest`` driver query.
 
-    ``portable_ids=True`` swaps the xxhash64 surrogate cell id for a
-    BIT-PACKED natural key ((centroid_x << 32) | centroid_y as int64) that
-    DuckDB reproduces exactly — the driver's hash gate compares cell_id
-    values, and DuckDB has no xxhash64. A surrogate key only needs
-    determinism + uniqueness, and the pack is both by construction (two
-    int32s, collision-free) while staying pure codegen arithmetic — an
-    md5-based portable hash measured ~2x on this query from expression
-    compile alone. Production keeps the default (hemisphere-qualified
-    xxhash64, one table across hemispheres).
+    cell_id is the BIT-PACKED natural key ((centroid_x << 32) | centroid_y
+    as int64), not the catalog's xxhash64 surrogate: DuckDB reproduces it
+    exactly, and the driver's hash gate compares cell_id values (DuckDB
+    has no xxhash64). A surrogate key only needs determinism + uniqueness,
+    and the pack is both by construction (two int32s, collision-free)
+    while staying pure codegen arithmetic — an md5-based portable hash
+    measured ~2x on this query from expression compile alone. The
+    catalog's cells table keeps the hemisphere-qualified xxhash64 (one
+    table across hemispheres).
     """
     forecasts = normalize_forecasts(raw, hemisphere)
     xs, ys = raw_axes(raw)
-    cell_id = portable_cell_id() if portable_ids else surrogate_cell_id()
     # The grid subtree is recomputed by each downstream job (latest-max
     # aggregate, range-partition sampling, prefix-sum pin). That is the
     # right trade here: the subtree is O(grid-side^2) rows of pure codegen
@@ -394,7 +391,7 @@ def latest_view_plan(
     cells = (
         build_cell_grid(xs, ys)
         .withColumn("hemisphere", F.lit(hemisphere))
-        .withColumn("cell_id", cell_id)
+        .withColumn("cell_id", portable_cell_id())
     )
     facts = forecasts.join(
         F.broadcast(cells),

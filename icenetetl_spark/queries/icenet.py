@@ -70,8 +70,8 @@ except OSError:
 def icenet_pipeline_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full chain on the deterministic fixture: normalize -> grid/WKT ->
     broadcast cell-assign -> latest snapshot -> enrich -> deterministic
-    sequential id. ``portable_ids`` so cell_id is the bit-packed key DuckDB
-    reproduces (production default is xxhash64 — same plan). sf_dir is
+    sequential id. cell_id is the bit-packed key DuckDB reproduces (the
+    catalog's cells table uses xxhash64 — same plan). sf_dir is
     unused: the input is the IceNet-shaped fixture, not a testdata table.
 
     The Spark side builds the frame in-memory (Arrow local relation — the
@@ -84,7 +84,7 @@ def icenet_pipeline_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ensure_fixture()  # oracle twin; raises clearly if truly unwritable
     raw, _ = make_raw_file(spark, GEN_DATE, "north", grid_side=GRID_SIDE, seed=42)
-    return latest_view_plan(raw, "north", portable_ids=True)
+    return latest_view_plan(raw, "north")
 
 
 QUERIES = {"icenet_pipeline_latest": icenet_pipeline_latest}
@@ -283,7 +283,7 @@ def icenet_zarr_pipeline_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     melted = melt_zarr_stores(spark, [_ZARR_STORE_PATH])
     _assert_melt_matches_twin(melted, spark)
-    return latest_view_plan(melted, "north", portable_ids=True)
+    return latest_view_plan(melted, "north")
 
 
 QUERIES["icenet_zarr_pipeline_latest"] = icenet_zarr_pipeline_latest
@@ -356,7 +356,7 @@ def icenet_zarr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw, _ = make_raw_file(
         spark, GEN_DATE, "north", grid_side=GRID_SIDE, seed=42
     )
-    latest = latest_view_plan(raw, "north", portable_ids=True)
+    latest = latest_view_plan(raw, "north")
     forecasts = latest.select(
         "hemisphere",
         "date_forecast_generated",

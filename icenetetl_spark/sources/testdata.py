@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from icenetetl_spark.session import memoized
+
 TABLES = [
     "region",
     "nation",
@@ -25,41 +27,28 @@ TABLES = [
 ]
 
 
-# r13 (guide §7.3): PLAN-handle memo — each spark.read.parquet() call costs
-# a parquet footer job (~30-45ms) plus py4j reader-construction chatter,
-# paid once per load_table CALL; a composed query like knn_recall_report
-# (7 ANN arms + the brute-force baseline) paid it 8 times for the same
-# file. Keyed on (session, path, size, mtime_ns) so a regenerated file
-# never serves a stale file listing (the InMemoryFileIndex inside the
-# handle pins the listing at creation). This memoizes the LAZY PLAN only —
-# every execution still scans the parquet input; no values are cached.
-# value holds the session object itself (not an id() — ids are reused
-# after GC, so an id-keyed hit could hand a dead session's plan to a new
-# one); the identity compare below makes a recreated session miss cleanly.
-_HANDLE_MEMO: dict[tuple, tuple[SparkSession, DataFrame]] = {}
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table's lazy plan handle, memoized in ``spark``'s session memo.
 
-
-def _memo_key(path: str) -> tuple:
+    Each ``spark.read.parquet`` call costs a parquet footer job (30-45 ms)
+    plus py4j reader construction, and a composed query such as
+    knn_recall_report (seven ANN arms and a brute-force baseline) reads
+    the same file eight times. Repeat calls return the same frame, so warm
+    passes also reuse its plans and generated classes. The key folds the
+    file's size and mtime, so a regenerated file gets a fresh handle: the
+    handle's file index pins the listing it was built with. Only the plan
+    is memoized; every execution still scans the file."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(path)
-        stat_part: tuple = (st.st_size, st.st_mtime_ns)
+        stat: tuple = (st.st_size, st.st_mtime_ns)
     except OSError:
-        stat_part = ("nostat",)
-    return (path, *stat_part)
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = _memo_key(os.path.join(sf_dir, f"{name}.parquet"))
-    hit = _HANDLE_MEMO.pop(key, None)
-    if hit is not None and hit[0] is spark:
-        _HANDLE_MEMO[key] = hit  # LRU: re-insert as most recent
-        return hit[1]
-    df = _load_table_uncached(spark, sf_dir, name)
-    if len(_HANDLE_MEMO) >= 64:  # LRU-bound pinned handles (r13 #8: evict
-        # oldest, not wholesale clear — no thundering refill)
-        _HANDLE_MEMO.pop(next(iter(_HANDLE_MEMO)))
-    _HANDLE_MEMO[key] = (spark, df)
-    return df
+        stat = ("nostat",)
+    return memoized(
+        spark,
+        ("table", path, *stat),
+        lambda: _load_table_uncached(spark, sf_dir, name),
+    )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Deterministic fixed-point Lloyd's (operators/kmeans.py, round 10).
+"""Deterministic fixed-point Lloyd's (operators/kmeans.py).
 
 What made the trained-quantizer queries rows-only was the FIT, not the
 search: MLlib KMeans's treeAggregate float sums depend on partition order.
@@ -146,13 +146,17 @@ def test_lloyd_objective_improves_over_init(spark):
     assert cos_obj(C_cos) >= cos_obj(C0)
 
 
-def test_fit_memoization_identical_and_single_fit(spark):
-    """cache_key memoizes the fitted centroid list for the session
-    (round-10 verdict #2: each trained-quantizer gate re-ran the same
-    deterministic fit, 16-20s per gate). The cached result must be
-    value-identical and the second call must not re-run Lloyd jobs."""
+def test_fit_memoization_identical_and_single_fit(
+    spark, tmp_path, monkeypatch
+):
+    """cache_key memoizes the fitted centroid list for the session (each
+    trained-quantizer gate would otherwise re-run the same deterministic
+    fit, 16-20s per gate). The cached result must be value-identical and
+    the second call must not re-run Lloyd jobs."""
     from icenetetl_spark.operators import kmeans as km
 
+    # an empty artifact dir: an earlier run's artifact would read "disk"
+    monkeypatch.setattr(km, "_FIT_CACHE_DIR", str(tmp_path / "fc"))
     km.reset_fit_cache()
     emb = load_table(spark, SF_DIR, "embeddings")
     init = emb.filter(F.col("vec_id").isin(IDS)).select(
@@ -166,12 +170,12 @@ def test_fit_memoization_identical_and_single_fit(spark):
             emb, init, iterations=2, dim=64, cache_key=key
         ).collect()
     }
-    assert len(km._FIT_CACHE) == 1
+    assert km.FIT_EVENTS == [("lloyd", "fit")]
     # poison the init argument (NOT part of the memo key): a true cache
     # hit never evaluates it — a miss would refit from the empty init and
     # return an empty frame. The corpus argument itself IS touched on a
-    # hit since r12 (corpus_signature reads its backing-file metadata),
-    # so it must be a live frame over the unchanged path.
+    # hit (corpus_signature reads its backing-file metadata), so it must
+    # be a live frame over the unchanged path.
     warm = {
         r["centroid_id"]: list(r["cvec"])
         for r in lloyd_fit(
@@ -179,10 +183,60 @@ def test_fit_memoization_identical_and_single_fit(spark):
         ).collect()
     }
     assert warm == cold
+    assert km.FIT_EVENTS[-1] == ("lloyd", "memo")
     # different params under the same corpus key must MISS (no collision)
     miss = lloyd_fit(emb, init, iterations=1, dim=64, cache_key=key)
-    assert len(km._FIT_CACHE) == 2
+    assert km.FIT_EVENTS[-1] == ("lloyd", "fit")
     assert miss.count() == len(IDS)
+    # both fits are now memoized, side by side
+    for iterations in (1, 2):
+        lloyd_fit(
+            emb, init.limit(0), iterations=iterations, dim=64, cache_key=key
+        )
+    assert km.FIT_EVENTS == [("lloyd", "fit"), ("lloyd", "memo")] * 2 + [
+        ("lloyd", "memo")
+    ]
+    km.reset_fit_cache()
+
+
+@pytest.mark.parametrize("family", ["lloyd", "pq_lloyd", "bpe"])
+def test_fit_memo_hit_starts_no_jobs(spark, count_jobs, monkeypatch, family):
+    """Every trained-fit family resolves a repeat call with the same
+    cache_key from the session memo: value-identical, logged as "memo",
+    and without starting a Spark job."""
+    from icenetetl_spark.operators import kmeans as km
+    from icenetetl_spark.operators.bpe import fit_bpe
+    from icenetetl_spark.operators.pq import fit_pq_codebooks_lloyd
+
+    monkeypatch.setattr(km, "_FIT_CACHE_DIR", "")  # session memo only
+    km.reset_fit_cache()
+    emb = load_table(spark, SF_DIR, "embeddings")
+    init = emb.filter(F.col("vec_id").isin(IDS)).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("cvec"),
+    )
+    fit = {
+        "lloyd": lambda: lloyd_fit(
+            emb, init, iterations=1, dim=64, cache_key=(SF_DIR, tuple(IDS))
+        ),
+        "pq_lloyd": lambda: fit_pq_codebooks_lloyd(
+            emb, IDS[:4], m=8, iterations=1, cache_key=(SF_DIR, "emb")
+        ),
+        "bpe": lambda: fit_bpe(
+            load_table(spark, SF_DIR, "documents"), 3,
+            cache_key=(SF_DIR, "documents"),
+        ),
+    }[family]
+
+    def values(out):
+        return out if family == "bpe" else [tuple(r) for r in out.collect()]
+
+    cold = values(fit())
+    assert km.FIT_EVENTS == [(family, "fit")]
+    warm = []
+    assert count_jobs(lambda: warm.append(fit())) == 0
+    assert values(warm[0]) == cold
+    assert km.FIT_EVENTS == [(family, "fit"), (family, "memo")]
     km.reset_fit_cache()
 
 
@@ -191,7 +245,9 @@ def test_fit_without_cache_key_never_caches(spark):
 
     km.reset_fit_cache()
     _spark_fit(spark, "cosine", iterations=1)
-    assert km._FIT_CACHE == {}
+    _spark_fit(spark, "cosine", iterations=1)
+    # the repeat refits: nothing was memoized or persisted
+    assert km.FIT_EVENTS == [("lloyd", "fit")] * 2
 
 
 def test_overflow_guard_raises_instead_of_wrapping(spark):
@@ -211,7 +267,7 @@ def test_overflow_guard_raises_instead_of_wrapping(spark):
 
 
 def test_overflow_guard_uses_observed_magnitude(spark):
-    """r11 advice #3: the guard's bound derives from the OBSERVED max
+    """The guard's bound derives from the OBSERVED max
     |element| (aggregated in the same groupBy), not the documented
     |v|<=10 envelope. Mixed-sign components far above the envelope at
     the DEFAULT scale: the actual running sum stays near zero (so ANSI
@@ -231,11 +287,11 @@ def test_overflow_guard_uses_observed_magnitude(spark):
 
 
 def test_fit_disk_memo_survives_session_reset(spark, tmp_path, monkeypatch):
-    """r11 verdict #3: the fitted centroid list is a persisted artifact
-    (the FAISS train-once pattern) — a NEW process over unchanged data
-    must ride the disk memo instead of re-paying the fit. Simulated here
-    by clearing the in-memory cache (what a new session starts with) and
-    poisoning the init argument: a disk hit never refits."""
+    """The fitted centroid list is a persisted artifact (the FAISS
+    train-once pattern) — a NEW process over unchanged data must ride the
+    disk memo instead of re-paying the fit. Simulated here by dropping the
+    memoized fits (what a new session starts with) and poisoning the init
+    argument: a disk hit never refits."""
     from icenetetl_spark.operators import kmeans as km
 
     monkeypatch.setattr(km, "_FIT_CACHE_DIR", str(tmp_path / "fitcache"))
@@ -255,28 +311,30 @@ def test_fit_disk_memo_survives_session_reset(spark, tmp_path, monkeypatch):
         emb, init, iterations=1, dim=2, metric="l2", cache_key=key
     ).collect()
     assert [list(r["cvec"]) for r in cold] == [[2.0, 0.0]]
-    # "new session": in-memory memo gone, disk artifact remains
+    assert km.FIT_EVENTS == [("lloyd", "fit")]
+    # "new session": memoized fits gone, disk artifact remains
     km.reset_fit_cache()
-    assert km._FIT_CACHE == {}
+    assert km.FIT_EVENTS == []
     warm = lloyd_fit(
         emb, init.limit(0), iterations=1, dim=2, metric="l2", cache_key=key
     ).collect()
     assert [list(r["cvec"]) for r in warm] == [[2.0, 0.0]]
+    assert km.FIT_EVENTS == [("lloyd", "disk")]
     # wiping the artifacts too brings the refit back (empty init -> empty)
     km.reset_fit_cache(disk=True)
     refit = lloyd_fit(
         emb, init.limit(0), iterations=1, dim=2, metric="l2", cache_key=key
     ).collect()
     assert refit == []
+    assert km.FIT_EVENTS == [("lloyd", "fit")]
     km.reset_fit_cache(disk=True)
 
 
 def test_fit_cache_stales_on_corpus_regeneration(spark, tmp_path):
-    """r11 advice #2 / r11 verdict #7: the memo key folds a content
-    signature of the corpus' backing files (size+mtime for local parquet),
-    so regenerating the data under the SAME path and the same caller
-    cache_key must MISS and refit — not silently serve the previous
-    corpus' centroids."""
+    """The memo key folds a content signature of the corpus' backing files
+    (size+mtime for local parquet), so regenerating the data under the
+    SAME path and the same caller cache_key must MISS and refit — not
+    silently serve the previous corpus' centroids."""
     from icenetetl_spark.operators import kmeans as km
 
     km.reset_fit_cache()
@@ -304,14 +362,17 @@ def test_fit_cache_stales_on_corpus_regeneration(spark, tmp_path):
     assert fit() == [[2.0, 0.0]]
     write(8.0)
     assert fit() == [[4.0, 0.0]]  # stale fit would still read [[2.0, 0.0]]
-    assert len(km._FIT_CACHE) == 2
+    assert km.FIT_EVENTS == [("lloyd", "fit")] * 2
+    # the regenerated corpus' fit is memoized in turn
+    assert fit() == [[4.0, 0.0]]
+    assert km.FIT_EVENTS[-1] == ("lloyd", "memo")
     km.reset_fit_cache()
 
 
 def test_disk_artifact_isolated_per_corpus_and_versioned(
     spark, tmp_path, monkeypatch
 ):
-    """r12 verdict #8: two distinct corpora (distinct content signatures)
+    """Two distinct corpora (distinct content signatures)
     must never read each other's persisted artifact, and the on-disk key
     must fold a format version so artifacts written by older fit code
     miss after a bump instead of being silently served."""
@@ -364,7 +425,7 @@ def test_disk_artifact_isolated_per_corpus_and_versioned(
 def test_disk_artifact_corruption_degrades_to_refit(
     spark, tmp_path, monkeypatch
 ):
-    """r12 verdict #8 + advice #1: a truncated or shape-mangled artifact
+    """A truncated or shape-mangled artifact
     file must read as a MISS (refit), never crash lloyd_fit's unpack."""
     import json
     import os
@@ -412,7 +473,7 @@ def test_disk_artifact_corruption_degrades_to_refit(
 
 
 def test_nonfile_corpus_never_touches_disk_layer(spark, tmp_path, monkeypatch):
-    """r12 advice #1: a non-file-backed frame signs as a constant, so two
+    """A non-file-backed frame signs as a constant, so two
     DIFFERENT in-memory corpora sharing a cache_key would collide across
     processes via the disk artifact — the disk layer must be skipped
     (session memo only) for ("nofiles",) signatures."""
@@ -431,11 +492,13 @@ def test_nonfile_corpus_never_touches_disk_layer(spark, tmp_path, monkeypatch):
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("cvec"),
     )
-    out = lloyd_fit(
-        emb, init, iterations=1, dim=2, metric="l2", cache_key=("mem",)
-    )
-    assert [list(r["cvec"]) for r in out.collect()] == [[2.0, 0.0]]
-    assert len(km._FIT_CACHE) == 1  # session memo still works
+    for _ in range(2):
+        out = lloyd_fit(
+            emb, init, iterations=1, dim=2, metric="l2", cache_key=("mem",)
+        )
+        assert [list(r["cvec"]) for r in out.collect()] == [[2.0, 0.0]]
+    # session memo still works
+    assert km.FIT_EVENTS == [("lloyd", "fit"), ("lloyd", "memo")]
     assert not os.path.isdir(km._FIT_CACHE_DIR) or not os.listdir(
         km._FIT_CACHE_DIR
     )

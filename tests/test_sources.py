@@ -43,7 +43,7 @@ def test_netcdf_gate(spark, tmp_path):
 
 
 def test_load_table_handle_memo_and_staleness(spark, tmp_path):
-    """r13: load_table memoizes the LAZY plan handle per (session, path,
+    """load_table memoizes the LAZY plan handle per (session, path,
     size, mtime) — repeated calls return the same object (no repeated
     footer job), while a regenerated file under the same path gets a
     FRESH handle (no stale file listing)."""
@@ -66,3 +66,29 @@ def test_load_table_handle_memo_and_staleness(spark, tmp_path):
     c = load_table(spark, p, "region")
     assert c is not a
     assert c.count() == 9
+
+
+def test_load_table_handle_memo_is_per_session(spark, tmp_path):
+    """Each session keeps its own memo: two sessions alternating
+    load_table on one path each get back their own first handle (neither
+    evicts the other's), and spread() on each handle returns that
+    session's memoized frame."""
+    from icenetetl_spark.operators.scale import spread
+    from icenetetl_spark.sources.testdata import load_table
+
+    p = str(tmp_path)
+    spark.range(5).toDF("x").write.parquet(os.path.join(p, "region.parquet"))
+    s1, s2 = spark, spark.newSession()
+    a = load_table(s1, p, "region")
+    b = load_table(s2, p, "region")
+    a2 = load_table(s1, p, "region")
+    b2 = load_table(s2, p, "region")
+    assert a is a2
+    assert b is b2
+    assert a is not b
+    assert a.sparkSession is s1 and b.sparkSession is s2
+    sa, sb = spread(a, "x"), spread(b, "x")
+    assert sa.sparkSession is s1 and sb.sparkSession is s2
+    assert spread(a2, "x") is sa
+    assert spread(b2, "x") is sb
+    assert sa.count() == sb.count() == 5
