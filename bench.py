@@ -174,10 +174,11 @@ def main() -> None:
     # burst that lands mid-suite. One probe rep between suite passes makes
     # the denominator sample the same window the queries ran in.
     probe_mid: list[float] = []
-    # per-pass trained-fit resolution log (kmeans.FIT_EVENTS): each
-    # *_trained query's timing is stamped with whether its fit was
-    # computed ("fit") or served from the session memo ("memo"); the disk
-    # layer is disabled above so "disk" cannot appear in a bench run.
+    # trained-fit resolution log (kmeans.FIT_EVENTS), cleared before each
+    # query and read whole after it: each *_trained query's timing is
+    # stamped with whether its fit was computed ("fit") or served from the
+    # session memo ("memo"); the disk layer is disabled above so "disk"
+    # cannot appear in a bench run.
     from icenetetl_spark.operators.kmeans import FIT_EVENTS
 
     fit_cache: dict[str, list[str]] = {}
@@ -185,11 +186,11 @@ def main() -> None:
         if i > 0:
             probe_mid += _ambient_probe(spark, reps=1)
         for name in suite:
-            n_ev = len(FIT_EVENTS)
+            FIT_EVENTS.clear()
             samples[name].append(measure.run(spark, queries[name], sf_dir))
-            if len(FIT_EVENTS) > n_ev:
+            if FIT_EVENTS:
                 fit_cache.setdefault(name, []).append(
-                    "+".join(f"{k}:{src}" for k, src in FIT_EVENTS[n_ev:])
+                    "+".join(f"{k}:{src}" for k, src in FIT_EVENTS)
                 )
 
     probe_post = _ambient_probe(spark)

@@ -32,7 +32,7 @@ __all__ = [
 # icenetetl_spark.operators` light:
 #   .dedup       exact / ngram-jaccard / minhash+lsh / simhash / components
 #   .similarity  cosine knn (exact, sign-LSH)
-#   .ivf         KMeans-quantized ANN
+#   .ivf         IVF ANN over a fixed or Lloyd-fitted centroid table
 #   .text        lang-id / quality / tokens / fingerprints
 #   .multimodal  binary payloads, Arrow decode plumbing
 #   .quality     profiling / expectations

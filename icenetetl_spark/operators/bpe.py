@@ -11,7 +11,7 @@ Implements the Sennrich et al. (ACL 2016, public) algorithm Spark-first:
 - Each merge step runs two vocab-sized jobs: an adjacent-pair count
   (arrays_zip over the symbol arrays, explode, sum of word freq) whose
   argmax is a 1-row collect (O(1) model state on the driver, same pattern
-  as operators/pq.fit_pq_codebooks), and a symbol-array rewrite expressed
+  as operators/pq.fit_pq_codebooks_lloyd), and a symbol-array rewrite expressed
   as a JVM higher-order fold (F.aggregate) — greedy left-to-right merge
   with correct run semantics ("aaaa" + (a,a) -> [aa, aa]), zero Python in
   the data path.

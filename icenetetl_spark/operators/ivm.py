@@ -6,7 +6,7 @@ Materialize/timely-dataflow's delta-join idea, all public).
 
 Cost model at 100 TB: a full refresh rescans the fact table; these
 operators touch O(|delta|) rows — the delta joins against the dimension
-(broadcast when small) or collapses to per-group adjustments that merge
+(broadcast) or collapses to per-group adjustments that merge
 into the k-row aggregate state. Exactness is testable because every
 aggregate here is an exact count or fixed-point BIGINT sum: applying the
 delta yields bit-identical results to recomputing from scratch
@@ -29,13 +29,13 @@ def apply_join_delta(
     right: DataFrame,
     keys: Sequence[str],
     on: Sequence[str],
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Maintain ``view = left JOIN right ON on`` under a change feed for
     ``left``. Removed/updated rows leave by an anti-join on the left key;
     inserted/updated rows enter by joining ONLY the delta against
-    ``right``. Equivalent to recomputing the join over the new snapshot
-    (inner-join semantics; ``right`` unchanged)."""
+    ``right``, which is broadcast (a dimension table). Equivalent to
+    recomputing the join over the new snapshot (inner-join semantics;
+    ``right`` unchanged)."""
     klist = list(keys)
     removed = changes.filter(
         F.col("_change_type").isin(*REMOVING)
@@ -43,9 +43,10 @@ def apply_join_delta(
     added = changes.filter(
         F.col("_change_type").isin(*INSERTING)
     ).drop("_change_type")
-    r = F.broadcast(right) if broadcast_right else right
     survivors = view.join(removed, klist, "leftanti")
-    return survivors.unionByName(added.join(r, list(on)), allowMissingColumns=False)
+    return survivors.unionByName(
+        added.join(F.broadcast(right), list(on)), allowMissingColumns=False
+    )
 
 
 def apply_agg_delta(

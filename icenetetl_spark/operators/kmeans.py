@@ -1,11 +1,11 @@
-"""Deterministic, engine-portable Lloyd's k-means.
+"""Deterministic, engine-portable Lloyd's k-means: the package's one
+k-means, behind every trained quantizer (``knn_ivf``, ``knn_pq_trained``,
+``dedup_semantic_trained``).
 
-MLlib's KMeans is seeded but NOT reproducible across engines (treeAggregate
-float sums depend on partition order), which forced the trained-quantizer
-queries (``knn_ivf``, ``knn_pq_trained``, ``dedup_semantic_trained``) into
-rows-only correctness gates. This module replaces the fit with a fixed-point
-Lloyd iteration over a FIXED init — the same construction that made BPE
-hash-gateable:
+A k-means whose update sums floats (a ``treeAggregate``, say) depends on
+partition order, so no SQL oracle can reproduce it. This fit is a
+fixed-point Lloyd iteration over a FIXED init — the same construction that
+made BPE hash-gateable:
 
 - init = k corpus rows selected by id (both engines read the same rows);
 - assignment = exact nearest centroid (cosine argmax or L2 argmin, ties to
@@ -23,7 +23,7 @@ assignment is the audited scalar-argmax crossJoin (k scored copies collapse
 map-side; see operators/ivf.assign_cells_fixed), and the update aggregates
 ``d`` quantized sums per cell in ONE groupBy with map-side combine — no
 N*d explode, no shuffle wider than k rows x (d+2) columns. Driver state is
-the k x d centroid matrix (the same O(k*d) bound as the MLlib fit);
+the k x d centroid matrix, O(k*d) and independent of corpus size;
 iterations run as independent jobs against literal centroid frames, so
 lineage never accumulates. At 100 TB, bound the training set with a
 deterministic id-hash sample BEFORE calling (the oracle replays the same
@@ -55,10 +55,19 @@ import os as _os
 
 _FIT_FORMAT_VERSION = 3
 
-# Append-only log of trained-fit resolutions, (family, "memo"|"disk"|"fit"),
+# Log of the latest trained-fit resolutions, (family, "memo"|"disk"|"fit"),
 # so bench.py can stamp each *_trained query's timing with whether its fit
-# ran or was served from a cache layer. Cleared by reset_fit_cache().
+# ran or was served from a cache layer. It keeps the newest
+# FIT_EVENTS_CAP entries, so a long-lived engine does not grow it without
+# bound. Cleared by reset_fit_cache().
+FIT_EVENTS_CAP = 64
 FIT_EVENTS: list[tuple[str, str]] = []
+
+
+def _log_fit(family: str, src: str) -> None:
+    FIT_EVENTS.append((family, src))
+    del FIT_EVENTS[:-FIT_EVENTS_CAP]
+
 
 # Folded into every memo key; reset_fit_cache() bumps it, so fits memoized
 # before the reset miss in every session and age out of its memo.
@@ -169,7 +178,7 @@ def memoized_fit(
     a constant and would collide across processes."""
     if cache_key is None:
         rows = fit()
-        FIT_EVENTS.append((family, "fit"))
+        _log_fit(family, "fit")
         return rows
     sig = corpus_signature(corpus)
     key = (cache_key, family, sig, *params)
@@ -189,7 +198,7 @@ def memoized_fit(
         return rows
 
     rows = memoized(corpus.sparkSession, ("fit", _fit_epoch, *key), build)
-    FIT_EVENTS.append((family, src))
+    _log_fit(family, src)
     return rows
 
 
@@ -329,9 +338,9 @@ def lloyd_fit(
         # evaluates ONE dot instead of three. Value-identical — same
         # operands, same order, sqrt/add merely hoisted.
         self_dot = dot("__v", "__v", dim)
-        # persist the projected corpus ACROSS iterations (the MLlib-KMeans
-        # pattern): every iteration's crossJoin re-reads it, so without the
-        # cache each Lloyd round pays the source scan + projection again.
+        # persist the projected corpus ACROSS iterations: every
+        # iteration's crossJoin re-reads it, so without the cache each
+        # Lloyd round pays the source scan + projection again.
         # MEMORY_AND_DISK via .persist() default; freed in the finally.
         pre = corpus.select(
             F.col(id_col).alias("__id"),

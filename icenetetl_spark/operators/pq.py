@@ -25,10 +25,11 @@ fold dot product the cosine path uses (bit-identical to DuckDB's
 list_dot_product), combined in the same operation order; the cross-subspace
 ADC sum goes through a fixed-point integer accumulator so its value is
 independent of Spark's aggregation order AND of engine rounding modes
-(see the _ADC_SCALE note). Codebooks here are FIXED corpus rows (like
-knn_ivf_fixed's centroids) so both engines read identical codes; a
-KMeans-per-subspace trained codebook is the production variant and drops
-into the same plan.
+(see the _ADC_SCALE note). Codebooks are either FIXED corpus rows
+(:func:`pq_codebook`, like knn_ivf_fixed's centroids) or per-subspace
+Lloyd fits (:func:`fit_pq_codebooks_lloyd`); both are deterministic, so
+both engines read identical codes, and both feed the same
+:func:`knn_pq_with_codebook` plan.
 """
 
 from __future__ import annotations
@@ -143,61 +144,6 @@ def encode_pq(
     ).select("neighbor_id", "m", F.col("mn.c").alias("code"))
 
 
-def fit_pq_codebooks(
-    corpus: DataFrame,
-    m: int = 8,
-    k_codes: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    width: int | None = None,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    """TRAINED codebooks: per-subspace KMeans over the corpus's subvector
-    slices (the production quantizer; Jégou TPAMI'11 trains exactly this).
-    Returns the same (m, code_id, csub) shape as :func:`pq_codebook`, so
-    it drops into the identical encode/ADC/refine plan — mirroring the
-    knn_ivf (trained, rows-only) vs knn_ivf_fixed (hash-gated) split.
-    Driver state is M codebooks of k x (d/M) floats — O(d * k), corpus-
-    size-independent. Seeded => deterministic locally; not reproducible
-    in a SQL oracle, so callers gate recall via tests.
-
-    Training cost: ONE corpus scan total, not M — the (optionally sampled)
-    vector column is persisted once and all M subspace fits read the
-    cached slices. ``sample_fraction`` bounds the training set the way
-    FAISS trains its quantizers on a sample: k-means centroid error decays
-    like O(1/sqrt(n_train)), so ~max(10^4, 256*k) sampled rows per
-    subspace saturate quality and training cost stops scaling with the
-    corpus. At 100 TB you pass e.g. 1e-5; the full-corpus default exists
-    for small-data determinism tests."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    w = _sub_width(width or _vector_width(corpus, vec_col), m)
-    train = corpus.select(F.col(vec_col).cast("array<double>").alias("__v"))
-    if sample_fraction is not None:
-        train = train.sample(fraction=sample_fraction, seed=seed)
-    train = train.persist()
-    try:
-        rows = []
-        for mi in range(m):
-            sub = train.select(
-                array_to_vector(
-                    F.slice(F.col("__v"), mi * w + 1, w)
-                ).alias("__features")
-            )
-            model = KMeans(
-                k=k_codes, seed=seed + mi, featuresCol="__features", maxIter=20
-            ).fit(sub)
-            for ci, center in enumerate(model.clusterCenters()):
-                rows.append((mi, ci, [float(x) for x in center]))
-    finally:
-        train.unpersist()
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        rows, "m INT, code_id INT, csub ARRAY<DOUBLE>"
-    )
-
-
 def fit_pq_codebooks_lloyd(
     corpus: DataFrame,
     init_ids: list[int],
@@ -211,10 +157,10 @@ def fit_pq_codebooks_lloyd(
     """DETERMINISTIC trained codebooks: fixed-point Lloyd (the
     operators/kmeans construction, metric='l2' — the same
     squared-euclidean three-dot identity the encode step ranks by) from
-    the ``init_ids`` seed rows' subvector slices. Unlike
-    :func:`fit_pq_codebooks` (MLlib, partition-order-dependent sums),
-    this fit is bit-reproducible and has a DuckDB CTE twin, which is what
-    lets the knn_pq_trained QUERY carry a value-hash gate.
+    the ``init_ids`` seed rows' subvector slices. The update sums
+    fixed-point integers, so the fit is independent of partitioning,
+    bit-reproducible and has a DuckDB CTE twin, which is what lets the
+    knn_pq_trained QUERY carry a value-hash gate.
 
     ALL m subspaces fit in ONE job per iteration: the corpus
     explodes to (id, subspace, subvector) once, each iteration
@@ -298,9 +244,9 @@ def _fit_codebooks_lloyd(
             for mi in range(m)
         ]
     )
-    # persisted across iterations like kmeans.lloyd_fit's pre (the MLlib
-    # pattern): every iteration's equi-join re-reads the exploded
-    # (id, subspace, subvector) projection otherwise. Unpersisted in the
+    # persisted across iterations like kmeans.lloyd_fit's pre: every
+    # iteration's equi-join re-reads the exploded (id, subspace,
+    # subvector) projection otherwise. Unpersisted in the
     # finally below so the overflow-raise path (or any mid-loop failure)
     # frees the blocks too, mirroring lloyd_fit.
     pre = (
@@ -372,32 +318,6 @@ def _fit_codebooks_lloyd(
     ]
 
 
-def knn_pq_trained(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    m: int = 8,
-    k_codes: int = 16,
-    refine_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    train_sample_fraction: float | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """PQ ANN with the trained quantizer — identical plan to
-    :func:`knn_pq`, codebook swapped for :func:`fit_pq_codebooks`
-    (pass ``train_sample_fraction`` at scale; see its docstring)."""
-    width = dim or _vector_width(corpus, vec_col)
-    codebook = fit_pq_codebooks(
-        corpus, m, k_codes, vec_col, seed, width, train_sample_fraction
-    )
-    return _knn_pq_with_codebook(
-        queries, corpus, codebook, k, m, refine_factor, id_col, vec_col, width,
-        dim=dim,
-    )
-
-
 def knn_pq(
     queries: DataFrame,
     corpus: DataFrame,
@@ -416,13 +336,12 @@ def knn_pq(
     output contract so the oracle and recall tests compose."""
     width = dim or _vector_width(corpus, vec_col)  # dim skips the probe job
     codebook = pq_codebook(corpus, code_ids, m, id_col, vec_col, width)
-    return _knn_pq_with_codebook(
-        queries, corpus, codebook, k, m, refine_factor, id_col, vec_col, width,
-        dim=dim,
+    return knn_pq_with_codebook(
+        queries, corpus, codebook, k, m, refine_factor, id_col, vec_col, width
     )
 
 
-def _knn_pq_with_codebook(
+def knn_pq_with_codebook(
     queries: DataFrame,
     corpus: DataFrame,
     codebook: DataFrame,
@@ -431,11 +350,16 @@ def _knn_pq_with_codebook(
     refine_factor: int,
     id_col: str,
     vec_col: str,
-    width: int | None = None,
-    dim: int | None = None,
+    width: int,
 ) -> DataFrame:
-    w = _sub_width(width or _vector_width(corpus, vec_col), m)
-    codes = encode_pq(corpus, codebook, m, id_col, vec_col, width=w * m)
+    """The PQ search plan over a given ``(m, code_id, csub)`` codebook:
+    encode the corpus, score ADC candidates, re-rank the top
+    ``k * refine_factor`` per query by exact cosine. :func:`knn_pq` feeds
+    it fixed corpus-row codes, the knn_pq_trained registry query
+    Lloyd-fitted ones (:func:`fit_pq_codebooks_lloyd`); ``width`` is the
+    vector dimensionality."""
+    w = _sub_width(width, m)
+    codes = encode_pq(corpus, codebook, m, id_col, vec_col, width=width)
 
     q_sub = _subvectors(queries, "query_id", m, w, id_col, vec_col)
     adc_table = q_sub.join(F.broadcast(codebook), "m").select(
@@ -615,7 +539,7 @@ def knn_ivfpq_fixed(
         # candidates are k*refine_factor per query (bounded): broadcast the
         # whole candidate+qv subtree so the corpus vectors never shuffle.
         # Fold-form re-rank cosine — the family's measured scoring
-        # dispatch; see the _knn_pq_with_codebook refine note.
+        # dispatch; see the knn_pq_with_codebook refine note.
         F.broadcast(candidates.join(F.broadcast(qv), "query_id"))
         .join(cv, "neighbor_id")
         .select(

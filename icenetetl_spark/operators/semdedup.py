@@ -24,20 +24,19 @@ Spark-first realization, reusing the existing machinery:
 - Keep policy: per component, argmin(similarity-to-centroid), ties to the
   smaller id — one partial-aggregated min over a struct.
 
-The fixed-centroid variant (centroid rows read from the corpus itself,
-like ``knn_ivf_fixed``) is SQL-reproducible and hash-gated; the trained
-variant fits MLlib KMeans and feeds the centroids through the IDENTICAL
-plan (rows-only gate; seeded KMeans has no SQL twin).
+Centroids are a ``(centroid_id, cvec)`` table: fixed corpus rows (like
+``knn_ivf_fixed``) or the deterministic Lloyd fit of
+operators/kmeans.lloyd_fit (the paper's trained clustering). Both are
+SQL-reproducible, so both registry queries (``dedup_semantic`` and
+``dedup_semantic_trained``) are hash-gated on the IDENTICAL plan.
 """
 
 from __future__ import annotations
 
-import numpy as np
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from icenetetl_spark.operators.dedup import connected_components
-from icenetetl_spark.operators.ivf import assign_cells_fixed, fit_coarse_quantizer
+from icenetetl_spark.operators.ivf import assign_cells_fixed
 from icenetetl_spark.operators.similarity import cosine, dot
 
 
@@ -71,14 +70,14 @@ def _stage_cells(
     """Add the pair stage's derived columns to an assignment frame ONCE:
     ``__blk`` (the deterministic block re-split rank, when ``cell_cap``)
     and ``__nrm`` (the hoisted member norm, when ``dim``). Split out of
-    :func:`_pairs_from_cells` (r14) so :func:`semdedup_from_cells` can
+    :func:`_pairs_from_cells` so :func:`semdedup_from_cells` can
     materialize ONE staged frame that the pair self-join's two sides AND
-    the keep policy all read — previously the Window ranking and norm
-    projection were re-evaluated per join side on top of the cells
+    the keep policy all read — otherwise the Window ranking and norm
+    projection are re-evaluated per join side on top of the cells
     checkpoint (two extra stages per query; values identical either way,
     the rank and norm are pure functions of the cell contents).
 
-    __nrm rationale (the ivf.py round-8 lesson, unchanged from r9-r13):
+    __nrm rationale (the same hoist as ivf.knn_ivf_fixed_centroids):
     cosine(va, vb) unrolled at d=64 is three 64-term dots inside the
     join's consume method, which overflows the JVM's 64 KB method limit
     and drops the pair stage out of codegen; with norms precomputed once
@@ -126,7 +125,7 @@ def _pairs_from_cells(
 ) -> DataFrame:
     """Within-cell (optionally within-block) pairs above ``threshold``.
 
-    ``cell_cap`` is the scale lever (VERDICT r7 #2): with a fixed cell
+    ``cell_cap`` is the scale lever: with a fixed cell
     count the self-join is quadratic in cell occupancy, and occupancy
     grows with the corpus — measured 44s of a 59s run at 10x data, with
     a skew-dense cell materializing 8.1M above-threshold pairs. The cap
@@ -233,7 +232,7 @@ def assign_cells_two_level(
     n_probe: int = 2,
 ) -> DataFrame:
     """Hierarchical nearest-FINE-centroid assignment — the N^1.25 escape
-    from flat assignment's N*k (r12; the SemDeDup cap study measured the
+    from flat assignment's N*k (the SemDeDup cap study measured the
     flat N x k crossJoin, not the capped pair stage, as the second-decade
     bottleneck, and Theta(N^1.5) is flat clustering's balanced floor).
 
@@ -265,8 +264,8 @@ def assign_cells_two_level(
     guarantee it by making the coarse rows a SUBSET of the fine rows —
     a centroid's nearest coarse centroid is then itself (cos = 1.0, the
     maximum). The precise precondition that makes self-routing WIN the
-    (sim DESC, id ASC) tie-break (r12 advice #2 — cos 1.0 means positive
-    collinearity, not equality): no coarse centroid may be positively
+    (sim DESC, id ASC) tie-break (cos 1.0 means positive collinearity,
+    not equality): no coarse centroid may be positively
     COLLINEAR with a distinct smaller-id coarse centroid (a scaled copy
     also scores 1.0 and a smaller id would out-rank self), and no coarse
     centroid may have zero norm (0/0 -> NaN sims route nowhere). The
@@ -297,13 +296,13 @@ def assign_cells_two_level(
     cents1 = F.broadcast(
         coarse.withColumn("__cn", F.sqrt(dot("cvec", "cvec", dim)))
     )
-    # r13 (guide §2.5): the N x k1 routing projection runs map-side on
+    # The N x k1 routing projection runs map-side on
     # this frame's partitioning; spread() keeps a row-group-bound scan
     # from serializing it (no-op once parallel — operators/scale.py)
     from icenetetl_spark.operators.scale import spread
 
     vectors = spread(vectors, id_col)
-    # r14 (VERDICT r13 #1): MATERIALIZE the (id, v, ||v||) projection —
+    # MATERIALIZE the (id, v, ||v||) projection —
     # the plan references ``pre`` THREE times (the N x k1 coarse-routing
     # crossJoin, the vector re-join inside vrouted, and the final
     # reattach), and without the cut each consumer re-evaluated the
@@ -354,7 +353,7 @@ def assign_cells_two_level(
         )
     )
     # same reattach-by-key as assign_cells_fixed (array columns stay out
-    # of the fanout agg — the round-9 dead-weight lesson)
+    # of the fanout agg: each of the k scored copies would carry one)
     return assigned.join(
         pre.select(out_id, "v"), out_id
     ).select(out_id, "v", "cell", "csim")
@@ -401,18 +400,18 @@ def semdedup_from_cells(
     # (memory with disk spill), never driver state. eager=False so merely
     # CONSTRUCTING the DataFrame stays free (bench median-of-N and
     # parametrized tests build the plan repeatedly; eager=True ran the full
-    # N x k assignment job per construction and pinned the blocks until GC
-    # — ADVICE r8); the blocks materialize on the first action, which is
+    # N x k assignment job per construction and pinned the blocks until
+    # GC); the blocks materialize on the first action, which is
     # the only pass that needs them. Tradeoff (deliberate): a
     # localCheckpoint cannot be recomputed after executor loss — on a real
     # cluster a lost executor fails the query and the retry re-runs it from
     # source, which for this one-job operator is the same cost profile as
     # no checkpoint at all.
     #
-    # r14: the checkpoint moved AFTER the _stage_cells derivations (__blk
-    # rank + __nrm) so the Window ranking runs ONCE — previously both
-    # pair-join sides re-ran Sort+Window+Filter on top of the raw-cells
-    # checkpoint (one reused exchange, two window stages). Same single
+    # The checkpoint sits AFTER the _stage_cells derivations (__blk
+    # rank + __nrm) so the Window ranking runs ONCE: checkpointing the raw
+    # cells instead makes both pair-join sides re-run Sort+Window+Filter
+    # on top of it (one reused exchange, two window stages). Same single
     # materialization, one fewer evaluated window + one fewer codegen
     # stage; values identical (the rank is a pure function of the cell
     # contents, __nrm of the vector).
@@ -455,32 +454,10 @@ def semdedup_two_level(
     """SemDeDup over the hierarchical assignment
     (:func:`assign_cells_two_level`): identical pair/component/keep
     semantics per fine cell, assignment cost Theta(N^1.25) instead of
-    flat Theta(N^1.5) — the second-decade path the r12 cap study
+    flat Theta(N^1.5) — the second-decade path the SemDeDup cap study
     motivated. Coarse rows must be a subset of the fine rows (see the
     assignment contract)."""
     cells = assign_cells_two_level(
         emb, coarse, fine, id_col, vec_col, dim=dim, n_probe=n_probe
     )
     return semdedup_from_cells(cells, threshold, dim=dim, cell_cap=cell_cap)
-
-
-def semdedup_trained(
-    emb: DataFrame,
-    n_cells: int = 16,
-    threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    cell_cap: int | None = None,
-) -> DataFrame:
-    """The production variant: KMeans coarse clustering (the paper's
-    choice), centroids fed through the IDENTICAL fixed-plan — mirroring the
-    knn_ivf / knn_ivf_fixed split, so only the fit sits outside the hash
-    gate. Driver state is the k×d centroid matrix, corpus-independent."""
-    fitted: np.ndarray = fit_coarse_quantizer(emb, n_cells, vec_col, seed)
-    spark = emb.sparkSession
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(fitted)],
-        "centroid_id INT, cvec ARRAY<DOUBLE>",
-    )
-    return semdedup(emb, cents, threshold, id_col, vec_col, cell_cap=cell_cap)

@@ -29,7 +29,7 @@ Both forms accumulate ``((0+x1y1)+x2y2)+...`` in double, so they are
 bit-identical to each other and to DuckDB's ``list_dot_product``
 (tests/test_similarity.py). Both are assembled as SQL text and parsed
 JVM-side in one call: a per-term Column-operator build of the 64-term sum
-cost ~2,500 py4j round-trips per dot (r13 profile: 6.7s of
+cost ~2,500 py4j round-trips per dot (profiled: 6.7s of
 dedup_semantic_two_level's 9.9s wall).
 
 Scale notes (100 TB / 10^9+ vectors):
@@ -51,7 +51,7 @@ from icenetetl_spark.operators.scale import spread
 def _qident(name: str) -> str:
     """Backtick-quote each dot-separated part of a column reference so the
     SQL text accepts any name ``F.col`` accepts (spaces, hyphens,
-    reserved words — ADVICE r13 #2). Dots keep their ``F.col`` meaning
+    reserved words). Dots keep their ``F.col`` meaning
     (qualifier / struct-field separators); embedded backticks escape by
     doubling, the standard Spark identifier rule. A reference already
     wrapped in backticks (``a.b`` quoted, for a column literally named
@@ -110,7 +110,7 @@ def knn_bruteforce(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    # r13 (guide §2.5): the per-pair cosine below runs map-side on the
+    # The per-pair cosine below runs map-side on the
     # corpus partitioning; spread() keeps a row-group-bound scan from
     # serializing it (no-op once parallel — operators/scale.py).
     c = spread(corpus, id_col).select(
@@ -146,18 +146,17 @@ def normalize_embeddings(
     vec_col: str = "embedding",
     dim: int = 64,
     out_col: str = "nv",
-    materialize: bool = True,
 ) -> DataFrame:
     """Project ``v / ||v||`` once per row — the stored-normalized-column
     plan for cosine search: after this, every pair computes ONE dot
     instead of three (dot + two norms), cutting pair-stage work ~3x at
     any scale where pairs >> rows.
 
-    ``materialize=True`` (a lazy localCheckpoint) is LOAD-BEARING, not an
-    optimization nicety: without it Catalyst collapses this projection
-    into the per-pair scoring projection downstream, recomputing the
-    whole normalization per PAIR — measured 3x slower than not
-    normalizing at all (SCALING.md "Cosine dispatch"). On a real
+    The result is materialized (a lazy localCheckpoint). That is
+    LOAD-BEARING, not an optimization nicety: without it Catalyst
+    collapses this projection into the per-pair scoring projection
+    downstream, recomputing the whole normalization per PAIR — measured
+    3x slower than not normalizing at all (SCALING.md "Cosine dispatch"). On a real
     deployment the normalized column is written to the table once
     (amortized across queries); the checkpoint is the per-query stand-in
     with the same physical property (a concrete primitive array).
@@ -178,7 +177,7 @@ def normalize_embeddings(
         ]
     )
     out = staged.select(F.col(id_col).alias(id_alias), nv.alias(out_col))
-    return out.localCheckpoint(eager=False) if materialize else out
+    return out.localCheckpoint(eager=False)
 
 
 def knn_bruteforce_prenorm(
@@ -198,7 +197,8 @@ def knn_bruteforce_prenorm(
     (different fp grouping); the oracle mirrors this form exactly."""
     q = normalize_embeddings(queries, "query_id", id_col, vec_col, dim, "qv")
     # spread before normalize: the O(N·d) normalization materializes via
-    # the localCheckpoint on the input partitioning (r13, guide §2.5)
+    # the localCheckpoint on the input partitioning, which a
+    # row-group-bound scan would serialize
     c = normalize_embeddings(
         spread(corpus, id_col), "neighbor_id", id_col, vec_col, dim, "cv"
     )
@@ -519,15 +519,15 @@ def embedding_near_duplicates(
     Production swap: seeded random hyperplanes instead of axis signs, wider
     bands — same plan shape.
     """
-    # Norms are hoisted out of every pair stage below (the ivf.py /
-    # semdedup.py round-9 lesson): cosine unrolled at d=64 inside a join's
+    # Norms are hoisted out of every pair stage below (as in ivf.py and
+    # semdedup.py): cosine unrolled at d=64 inside a join's
     # consume method is three 64-term dots, which overflows the JVM's
     # 64 KB method limit — Spark logged "Code grows beyond 64 KB" on this
     # very query's banded join and ran the stage interpreted. With ||v||
     # precomputed once per row (map-side, linear), the pair stage is one
     # dot plus a divide and compiles. Bit-identical: same operands, same
     # accumulation order, sqrt factored out of the division.
-    # r13 (guide §2.5): both the norm projections and the pair stage run
+    # Both the norm projections and the pair stage run
     # on this frame's partitioning; spread() keeps a row-group-bound scan
     # from serializing them (no-op once parallel — operators/scale.py).
     emb = spread(emb, id_col)
@@ -631,7 +631,7 @@ def mmr_select(
 
     Returns (rank, id, relevance, mmr_score) for the k selections.
 
-    r13 construction note (guide §7.3): the reference vectors are
+    Construction note: the reference vectors are
     PROJECTED as literal-array columns (``__q``, ``__s<j>``) and the
     cosines take column NAMES, riding the one-parse SQL text of
     :func:`dot`. Inlining the 64-literal array into every
@@ -641,7 +641,7 @@ def mmr_select(
     projecting it keeps the same per-row evaluation (one CreateArray,
     same fold order — values identical) at ~130 calls per vector."""
     qlit = F.array(*[F.lit(float(v)) for v in query_vec])
-    # r13 (guide §2.5): every step's scoring scan runs on this frame's
+    # Every step's scoring scan runs on this frame's
     # partitioning; spread() keeps a row-group-bound scan from
     # serializing all k steps (no-op once parallel — operators/scale.py).
     candidates = spread(candidates, id_col)

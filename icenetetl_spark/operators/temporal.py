@@ -113,7 +113,6 @@ def gapfill_locf(
     bucket_col: str,
     value_col: str,
     step: int,
-    validate: bool = True,
 ) -> DataFrame:
     """Time-bucket gap-fill with last-observation-carry-forward (the
     TimescaleDB ``time_bucket_gapfill`` + ``locf`` pair): per key, emit EVERY
@@ -131,7 +130,7 @@ def gapfill_locf(
     window per key. Every stage shuffles on the key — distributed, and the
     grid size is bounded by (span/step) per key, never |keys| x global-span.
     """
-    joined = _dense_grid(df, list(keys), bucket_col, step, validate)
+    joined = _dense_grid(df, list(keys), bucket_col, step)
     w = (
         Window.partitionBy(*keys)
         .orderBy(bucket_col)
@@ -151,7 +150,6 @@ def gapfill_interpolate(
     bucket_col: str,
     value_col: str,
     step: int,
-    validate: bool = True,
 ) -> DataFrame:
     """Gap-fill by LINEAR INTERPOLATION between the surrounding observations
     (the Timescale ``interpolate`` twin to :func:`gapfill_locf`): a missing
@@ -162,7 +160,7 @@ def gapfill_interpolate(
     last observation, so both neighbors always exist for every gap.
     """
     keys = list(keys)
-    joined = _dense_grid(df, keys, bucket_col, step, validate)
+    joined = _dense_grid(df, keys, bucket_col, step)
     fwd = (
         Window.partitionBy(*keys)
         .orderBy(bucket_col)
@@ -195,35 +193,32 @@ def _dense_grid(
     keys: list[str],
     bucket_col: str,
     step: int,
-    validate: bool,
 ) -> DataFrame:
     """Shared gap-fill machinery: per-key bounds -> sequence+explode dense
     bucket grid -> left join actuals. Missing buckets surface as NULL
     ``value`` rows for the fill strategy to resolve."""
-    if validate:
-        # A bucket off the mn + k*step lattice would MISS the generated grid
-        # in the left join — the observed row silently vanishes. Alignment
-        # to the lattice ⟺ all buckets within a key share one residue mod
-        # step, so one aggregation over the (already aggregated, small)
-        # input catches it. Opt out with validate=False once the producer
-        # is trusted (e.g. epoch_bucket output, residue 0 by construction).
-        bad = (
-            df.groupBy(*keys)
-            .agg(
-                F.countDistinct(F.pmod(F.col(bucket_col), F.lit(step))).alias(
-                    "__r"
-                )
+    # A bucket off the mn + k*step lattice would MISS the generated grid
+    # in the left join — the observed row silently vanishes. Alignment
+    # to the lattice ⟺ all buckets within a key share one residue mod
+    # step, so one aggregation over the (already aggregated, small)
+    # input catches it; cheap enough to run on every call.
+    bad = (
+        df.groupBy(*keys)
+        .agg(
+            F.countDistinct(F.pmod(F.col(bucket_col), F.lit(step))).alias(
+                "__r"
             )
-            .filter(F.col("__r") > 1)
-            .limit(1)
-            .count()
         )
-        if bad:
-            raise ValueError(
-                f"gapfill: {bucket_col} values are not aligned to a "
-                f"step-{step} lattice within every key — off-lattice rows "
-                "would be silently dropped by the grid join"
-            )
+        .filter(F.col("__r") > 1)
+        .limit(1)
+        .count()
+    )
+    if bad:
+        raise ValueError(
+            f"gapfill: {bucket_col} values are not aligned to a "
+            f"step-{step} lattice within every key — off-lattice rows "
+            "would be silently dropped by the grid join"
+        )
     bounds = df.groupBy(*keys).agg(
         F.min(bucket_col).alias("__mn"), F.max(bucket_col).alias("__mx")
     )

@@ -216,7 +216,6 @@ def contamination(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_benchmark: bool = True,
 ):
     """Benchmark decontamination: per training document, how many of its
     distinct word n-gram shingles also occur anywhere in the benchmark set
@@ -226,12 +225,11 @@ def contamination(
     Plan: ONE pass over the training shingles — left join against the
     DISTINCT benchmark shingle set (marker column), then a single
     groupBy(doc_id) counting rows and markers together. Benchmark suites
-    are small relative to the corpus, so the marked set broadcasts by
-    default: each training shingle is touched exactly once and the only
-    corpus-side shuffle is the final per-doc aggregation; set
-    ``broadcast_benchmark=False`` to fall back to a hash join when the
-    benchmark itself is huge. Clean documents keep n_contaminated = 0
-    (left-join semantics, count of a null marker is 0).
+    are small relative to the corpus, so the marked set is broadcast:
+    each training shingle is touched exactly once and the only
+    corpus-side shuffle is the final per-doc aggregation. Clean documents
+    keep n_contaminated = 0 (left-join semantics, count of a null marker
+    is 0).
     """
     from icenetetl_spark.operators.dedup import word_shingles
 
@@ -242,10 +240,8 @@ def contamination(
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    if broadcast_benchmark:
-        bsh = F.broadcast(bsh)
     return (
-        tsh.join(bsh, "shingle", "left")
+        tsh.join(F.broadcast(bsh), "shingle", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),

@@ -108,15 +108,14 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Deterministic Lloyd training (operators/kmeans.py): 3 iterations from
-# the same 16 spread seed rows the fixed twin reads. Makes the TRAINED
-# quantizer hash-gateable (round-10; the BPE construction) — MLlib KMeans
-# stayed rows-only because treeAggregate float sums depend on partition
-# order. The MLlib path (operators/ivf.knn_ivf) remains the production
-# alternative; recall vs brute force for both is in tests/test_ivf.py.
+# the same 16 spread seed rows the fixed twin reads. The update sums
+# fixed-point integers, so the fit is independent of partition order and
+# the TRAINED quantizer is hash-gateable (the BPE construction); recall vs
+# brute force is in tests/test_ivf.py.
 LLOYD_ITERS = 3
 # probe count shared by knn_ivf's Spark plan and its oracle construction
-# (round-10 advice: a bare literal duplicated on both sides desyncs the
-# hash-gated pair on edit; mirrors the IVF_N_PROBE pattern)
+# (a bare literal duplicated on both sides desyncs the hash-gated pair on
+# edit; mirrors the IVF_N_PROBE pattern)
 LLOYD_N_PROBE = 6
 
 
@@ -125,7 +124,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd fit (operators/kmeans.lloyd_fit) feeding the identical
     probe/assign/re-rank plan as knn_ivf_fixed. Hash-gated: the oracle
     unrolls the same iterations as chained CTEs, so fit AND search match
-    bit-for-bit (previously rows-only under MLlib KMeans)."""
+    bit-for-bit."""
     from icenetetl_spark.operators.ivf import knn_ivf_fixed_centroids
     from icenetetl_spark.operators.kmeans import lloyd_fit
 
@@ -149,7 +148,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fixed coarse-quantizer seeds: 16 corpus vectors by id, spread across the
 # table. Makes the IVF assign/probe/re-rank plan SQL-reproducible (both
 # engines read the same centroid rows from the table — no literal dumps to
-# drift). The KMeans-fitted variant (knn_ivf) stays rows-only for recall.
+# drift). The Lloyd-trained variant (knn_ivf) starts its fit from them.
 IVF_CENTROID_IDS = list(range(7, 500, 31))  # 16 ids: 7, 38, ..., 472
 IVF_N_PROBE = 4
 
@@ -216,7 +215,7 @@ def knn_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild — the oracle computes the rebuild (nearest-1 cell per vector
     over ALL vectors, the knn_ivf_fixed c_scored construction), and
     tests/test_ivf.py pins incremental == rebuild frame-equal. The
-    trained-quantizer analog is the same merge with knn_ivf's KMeans
+    trained-quantizer analog is the same merge with knn_ivf's Lloyd
     centroids frozen at index-build time (re-clustering is a rebuild by
     definition)."""
     from icenetetl_spark.operators.ivf import assign_cells_fixed
@@ -227,8 +226,8 @@ def knn_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     old = emb.filter(F.col("vec_id") % IVF_INCR_MOD != 0)
     new = emb.filter(F.col("vec_id") % IVF_INCR_MOD == 0)
-    # attach_vector=False (r13): postings are (id, cell, csim) — the
-    # vector-reattach join per side was dropped weight (see ivf.py)
+    # attach_vector=False: postings are (id, cell, csim) — the
+    # vector-reattach join per side would be dropped weight (see ivf.py)
     idx_old = assign_cells_fixed(
         old, cents, dim=EMB_DIM, attach_vector=False
     )  # the stored index
@@ -242,8 +241,8 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (operators/pq.knn_pq): the memory-bound
     scale path — M-byte codes replace raw vectors during candidate
     scoring. Fixed corpus-row codebooks keep every step SQL-reproducible
-    (same construction as knn_ivf_fixed); the KMeans-trained-codebook
-    variant drops into the identical plan."""
+    (same construction as knn_ivf_fixed); knn_pq_trained runs the
+    identical plan on Lloyd-trained codebooks."""
     from icenetetl_spark.operators.pq import knn_pq as _knn_pq
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -263,13 +262,12 @@ PQ_LLOYD_ITERS = 2
 def knn_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ with TRAINED per-subspace codebooks — the deterministic
     fixed-point Lloyd fit (operators/pq.fit_pq_codebooks_lloyd) on the
-    identical encode/ADC/refine plan as knn_pq. Hash-gated since round 10:
-    the oracle unrolls each subspace's fit as chained CTEs (previously
-    rows-only under MLlib KMeans; that path remains as
-    operators/pq.knn_pq_trained, recall-pinned in tests/test_pq.py)."""
+    identical encode/ADC/refine plan as knn_pq. Hash-gated: the oracle
+    unrolls each subspace's fit as chained CTEs; recall vs brute force is
+    pinned in tests/test_pq.py."""
     from icenetetl_spark.operators.pq import (
-        _knn_pq_with_codebook,
         fit_pq_codebooks_lloyd,
+        knn_pq_with_codebook,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -282,9 +280,9 @@ def knn_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         width=EMB_DIM,
         cache_key=(sf_dir, "embeddings"),
     )
-    return _knn_pq_with_codebook(
+    return knn_pq_with_codebook(
         queries, emb, codebook, K, PQ_M, PQ_REFINE, "vec_id", "embedding",
-        EMB_DIM, dim=EMB_DIM,
+        EMB_DIM,
     )
 
 
@@ -342,10 +340,11 @@ SEM_T = 0.3
 # in practice (10^9 vectors -> ~16k centroids, a few MB), never
 # corpus-sized. The mod is a pure function of COUNT(*), so the oracle
 # reproduces it; at true cluster scale the production path is
-# semdedup_trained (KMeans k tuned to the corpus, same downstream plan).
+# dedup_semantic_trained (Lloyd-trained centroids, two-level routing into
+# the same pair/component/keep plan).
 EMB_DIM = 64  # embeddings table width — enables the codegen-unrolled cosine
 
-# Per-cell block cap for the SemDeDup pair stage (VERDICT r7 #2). The sqrt
+# Per-cell block cap for the SemDeDup pair stage. The sqrt
 # law balances the MEAN occupancy, but pair work is quadratic in the
 # occupancy of the WORST cell, and real (and perturbed-stress) corpora are
 # skew-dense: at 10x data one hot cell materialized 8.1M above-threshold
@@ -397,12 +396,12 @@ SEM_TL_TRAINED_COARSE_IDS = IVF_CENTROID_IDS[::3]
 
 
 def dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with the paper's TRAINED clustering — and, since r13, the
-    HIERARCHICAL two-level assignment as the family's scale default (r12
-    verdict #1: the flat N x k crossJoin assignment was the repo's only
-    scale-weak plan, Theta(N^1.5) on a sqrt-law k, 140s at 100x; the
-    two-level routing is Theta(N^1.25), measured 1.3-2.0x cheaper at 100x
-    and widening every decade — SCALING.md "SemDeDup two-level").
+    """SemDeDup with the paper's TRAINED clustering, routed through the
+    HIERARCHICAL two-level assignment as the family's scale default (the
+    flat N x k crossJoin assignment is the repo's only scale-weak plan,
+    Theta(N^1.5) on a sqrt-law k, 140s at 100x; the two-level routing is
+    Theta(N^1.25), measured 1.3-2.0x cheaper at 100x and widening every
+    decade — SCALING.md "SemDeDup two-level").
 
     The deterministic fixed-point Lloyd fit (operators/kmeans.py) trains
     the FINE centroids; the COARSE routing table is a fixed id-subset of
@@ -464,7 +463,7 @@ def _sem_two_level_mods(n: int) -> tuple[int, int]:
 
 
 def dedup_semantic_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with HIERARCHICAL (two-level) assignment — the r12 answer
+    """SemDeDup with HIERARCHICAL (two-level) assignment — the answer
     to the cap study's finding that flat assignment's N x k crossJoin,
     not the capped pair stage, is the second-decade bottleneck
     (SCALING.md "SemDeDup cap study"): vectors route to a coarse cell

@@ -1,22 +1,43 @@
-"""IVF ANN: determinism and recall against exact brute force."""
+"""IVF ANN: determinism and recall against exact brute force, for the
+fixed-seed quantizer and the Lloyd-trained one the registry runs."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from icenetetl_spark.operators.ivf import knn_ivf
+from icenetetl_spark.operators.ivf import knn_ivf_fixed_centroids
+from icenetetl_spark.operators.kmeans import lloyd_fit
 from icenetetl_spark.operators.similarity import knn_bruteforce
+from icenetetl_spark.queries.similarity import (
+    IVF_CENTROID_IDS,
+    LLOYD_ITERS,
+    LLOYD_N_PROBE,
+)
 
 
 def _load(spark):
     return spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
 
 
+def _lloyd_cents(emb, train=None):
+    """The registry's trained quantizer: LLOYD_ITERS Lloyd iterations from
+    the IVF_CENTROID_IDS seed rows, fitted on ``train`` (default: all of
+    ``emb``). No cache_key, so every call runs the fit."""
+    init = emb.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
+    )
+    return lloyd_fit(
+        emb if train is None else train, init, iterations=LLOYD_ITERS, dim=64
+    )
+
+
 def test_ivf_recall_vs_bruteforce(spark):
     emb = _load(spark)
     queries = emb.filter(F.col("vec_id") < 20)
     exact = knn_bruteforce(queries, emb, k=5)
-    approx = knn_ivf(queries, emb, k=5, n_cells=16, n_probe=6)
+    approx = knn_ivf_fixed_centroids(
+        queries, emb, _lloyd_cents(emb), k=5, n_probe=LLOYD_N_PROBE
+    )
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -34,8 +55,6 @@ def test_ivf_recall_vs_bruteforce(spark):
 def test_ivf_fixed_centroids_recall_and_exact_scores(spark):
     """The oracle-gated fixed-centroid variant: same plan, SQL-reproducible
     quantizer. Recall above chance; surviving scores are exact cosines."""
-    from icenetetl_spark.operators.ivf import knn_ivf_fixed_centroids
-
     emb = _load(spark)
     queries = emb.filter(F.col("vec_id") < 20)
     cents = emb.filter(F.col("vec_id").isin(list(range(7, 500, 31)))).select(
@@ -46,44 +65,34 @@ def test_ivf_fixed_centroids_recall_and_exact_scores(spark):
     e = {(r["query_id"], r["neighbor_id"]): r["cos"] for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]): r["cos"] for r in approx.collect()}
     recall = len(e.keys() & a.keys()) / len(e)
-    assert recall >= 0.4, recall  # fixed seeds are a weaker quantizer than KMeans
+    assert recall >= 0.4, recall  # fixed seeds: a weaker quantizer than Lloyd
     for key, cos in a.items():
         if key in e:
             assert abs(e[key] - cos) < 1e-12
 
 
 def test_ivf_equals_fixed_centroids_on_fitted_centroids(spark):
-    """Closes the gate gap on the KMeans variant: feed the FITTED centroids
-    back into the hash-gated fixed-centroid plan and pin the two outputs
-    equal. knn_ivf's only non-SQL-reproducible step is the KMeans fit, so
-    with the quantizer held fixed the remaining assign/probe/re-rank must
-    agree pair-for-pair (and the hash gate on knn_ivf_fixed then covers
-    this shared plan). Tie-break parity: numpy argsort is stable (ties to
-    the lower centroid index) and the JVM path orders by ascending
-    centroid_id — same rule."""
-    from icenetetl_spark.operators.ivf import (
-        fit_coarse_quantizer,
-        knn_ivf_fixed_centroids,
-    )
+    """The registry's knn_ivf is the fixed-centroid plan over Lloyd
+    centroids: an independent lloyd_fit fed to knn_ivf_fixed_centroids
+    must give the same (query, neighbor) pairs with equal rank and cos."""
+    from icenetetl_spark.queries.similarity import K, N_QUERIES
+    from icenetetl_spark.queries.similarity import knn_ivf as registry_knn_ivf
 
     emb = _load(spark)
-    queries = emb.filter(F.col("vec_id") < 20)
-    fitted = fit_coarse_quantizer(emb, n_cells=16, seed=42)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(fitted)],
-        "centroid_id INT, cvec ARRAY<DOUBLE>",
+    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    via_registry = registry_knn_ivf(spark, "/root/testdata/sf0.01")
+    via_fixed = knn_ivf_fixed_centroids(
+        queries, emb, _lloyd_cents(emb), k=K, n_probe=LLOYD_N_PROBE
     )
-    via_kmeans = knn_ivf(queries, emb, k=5, n_cells=16, n_probe=6, seed=42)
-    via_fixed = knn_ivf_fixed_centroids(queries, emb, cents, k=5, n_probe=6)
     a = {
         (r["query_id"], r["neighbor_id"]): (r["rank"], r["cos"])
-        for r in via_kmeans.collect()
+        for r in via_registry.collect()
     }
     b = {
         (r["query_id"], r["neighbor_id"]): (r["rank"], r["cos"])
         for r in via_fixed.collect()
     }
-    assert a.keys() == b.keys()
+    assert a and a.keys() == b.keys()
     for key, (rank, cos) in a.items():
         assert b[key][0] == rank, key
         assert abs(b[key][1] - cos) < 1e-12, key
@@ -92,9 +101,12 @@ def test_ivf_equals_fixed_centroids_on_fitted_centroids(spark):
 def test_ivf_deterministic(spark):
     emb = _load(spark)
     queries = emb.filter(F.col("vec_id") < 5)
-    r1 = sorted(map(str, knn_ivf(queries, emb, k=3, seed=7).collect()))
-    r2 = sorted(map(str, knn_ivf(queries, emb, k=3, seed=7).collect()))
-    assert r1 == r2
+
+    def run():
+        out = knn_ivf_fixed_centroids(queries, emb, _lloyd_cents(emb), k=3)
+        return sorted(map(str, out.collect()))
+
+    assert run() == run()
 
 
 def test_ivf_incremental_equals_rebuild(spark):

@@ -1,10 +1,9 @@
 """Deterministic fixed-point Lloyd's (operators/kmeans.py).
 
-What made the trained-quantizer queries rows-only was the FIT, not the
-search: MLlib KMeans's treeAggregate float sums depend on partition order.
-These tests pin the replacement fit's contract: bit-exact equality with its
-unrolled DuckDB CTE twin on both metrics, empty-cell carry-over, and
-partition-count independence of the fixed-point update.
+A k-means whose update sums floats depends on partition order, so no SQL
+oracle can replay it. These tests pin this fit's contract: bit-exact
+equality with its unrolled DuckDB CTE twin on both metrics, empty-cell
+carry-over, and partition-count independence of the fixed-point update.
 """
 
 from __future__ import annotations
@@ -240,6 +239,22 @@ def test_fit_memo_hit_starts_no_jobs(spark, count_jobs, monkeypatch, family):
     km.reset_fit_cache()
 
 
+def test_fit_events_keep_the_newest_cap_entries(spark):
+    """FIT_EVENTS is bounded: cap + 1 resolutions leave cap entries, the
+    oldest dropped and the newest last."""
+    from icenetetl_spark.operators import kmeans as km
+
+    km.reset_fit_cache()
+    corpus = spark.range(1)
+    n = km.FIT_EVENTS_CAP + 1
+    for i in range(n):
+        km.memoized_fit(f"f{i}", corpus, None, (), lambda: [])
+    assert len(km.FIT_EVENTS) == km.FIT_EVENTS_CAP
+    assert km.FIT_EVENTS[0] == ("f1", "fit")
+    assert km.FIT_EVENTS[-1] == (f"f{n - 1}", "fit")
+    km.reset_fit_cache()
+
+
 def test_fit_without_cache_key_never_caches(spark):
     from icenetetl_spark.operators import kmeans as km
 
@@ -251,11 +266,10 @@ def test_fit_without_cache_key_never_caches(spark):
 
 
 def test_overflow_guard_raises_instead_of_wrapping(spark):
-    """Round-10 advice #4: at scale=18 a ~250-row cell of this corpus
-    genuinely overflows the BIGINT quantized sum. Under the session's
-    ANSI mode (Spark 4 default) the engine itself raises during the
-    aggregation; the fit must surface SOME exception — never return
-    wrapped centroids. (An ANSI-off deployment is covered by the guard
+    """At scale=18 a ~250-row cell of this corpus genuinely overflows
+    the BIGINT quantized sum. Under the session's ANSI mode (Spark 4
+    default) the engine itself raises during the aggregation; the fit
+    must surface SOME exception — never return wrapped centroids. (An ANSI-off deployment is covered by the guard
     test below, whose bound fires without a real wrap.)"""
     emb = load_table(spark, SF_DIR, "embeddings")
     init = emb.filter(F.col("vec_id").isin(IDS[:2])).select(

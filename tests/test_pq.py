@@ -5,10 +5,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from icenetetl_spark.operators.pq import encode_pq, knn_pq, pq_codebook
+from icenetetl_spark.operators.pq import (
+    encode_pq,
+    fit_pq_codebooks_lloyd,
+    knn_pq,
+    knn_pq_with_codebook,
+    pq_codebook,
+)
 from icenetetl_spark.operators.similarity import knn_bruteforce
 
 from icenetetl_spark.queries.similarity import PQ_CODE_IDS as CODE_IDS
+from icenetetl_spark.queries.similarity import PQ_LLOYD_ITERS
 
 
 def _load(spark):
@@ -83,12 +90,9 @@ def test_pq_widening_refine_does_not_reduce_recall(spark):
 
 
 def test_trained_codebooks_beat_or_match_fixed(spark):
-    """The per-subspace KMeans quantizer must not lose to corpus-sampled
-    codes (it minimizes the quantization error the fixed rows only
-    sample), and the family mirrors IVF: trained = rows-only + recall
-    tests, fixed = the hash-gated twin on the same plan."""
-    from icenetetl_spark.operators.pq import knn_pq_trained
-
+    """Lloyd codebooks started from the fixed code rows must not lose to
+    those rows (each Lloyd step lowers the quantization error the fixed
+    rows only sample). Same fit and plan as the knn_pq_trained query."""
     emb = _load(spark)
     queries = emb.filter(F.col("vec_id") < 20)
     exact = knn_bruteforce(queries, emb, k=5)
@@ -99,47 +103,80 @@ def test_trained_codebooks_beat_or_match_fixed(spark):
         return len(e & a) / len(e)
 
     r_fixed = rec(knn_pq(queries, emb, CODE_IDS, k=5, m=8, refine_factor=4))
+    codebook = fit_pq_codebooks_lloyd(
+        emb, CODE_IDS, m=8, iterations=PQ_LLOYD_ITERS, width=64
+    )
     r_trained = rec(
-        knn_pq_trained(queries, emb, k=5, m=8, k_codes=16, refine_factor=4)
+        knn_pq_with_codebook(
+            queries, emb, codebook, 5, 8, 4, "vec_id", "embedding", 64
+        )
     )
     assert r_trained >= r_fixed, (r_trained, r_fixed)
 
 
-def test_trained_codebooks_deterministic(spark):
-    from icenetetl_spark.operators.pq import fit_pq_codebooks
+def _codebook_rows(df):
+    return sorted((r["m"], r["code_id"], tuple(r["csub"])) for r in df.collect())
 
+
+def test_trained_codebooks_deterministic(spark):
     emb = _load(spark)
-    a = sorted(map(str, fit_pq_codebooks(emb, m=4, k_codes=8).collect()))
-    b = sorted(map(str, fit_pq_codebooks(emb, m=4, k_codes=8).collect()))
-    assert a == b
+
+    def fit():
+        return _codebook_rows(
+            fit_pq_codebooks_lloyd(emb, CODE_IDS[:8], m=4, iterations=2)
+        )
+
+    assert fit() == fit()
+
+
+# A deterministic id-hash half of the corpus: the training sample both
+# engines can replay (fit_pq_codebooks_lloyd's sampling contract).
+HALF = "vec_id % 2 = 1"
 
 
 def test_sampled_training_one_scan_shape_and_determinism(spark):
-    """Sample-based quantizer training (the 100 TB shape): bounded sample,
-    all M fits off one persisted scan; deterministic for a fixed seed and
-    same codebook schema as the full fit."""
-    from icenetetl_spark.operators.pq import fit_pq_codebooks
-
+    """Sample-based quantizer training (the 100 TB shape): a deterministic
+    id-hash sample, all M subspaces fitted in one job per iteration;
+    deterministic, with m*k codebook rows of width d/m."""
     emb = _load(spark)
-    a = fit_pq_codebooks(emb, m=4, k_codes=8, seed=3, sample_fraction=0.5)
-    b = fit_pq_codebooks(emb, m=4, k_codes=8, seed=3, sample_fraction=0.5)
-    ra = sorted(map(tuple, ((r["m"], r["code_id"], tuple(r["csub"])) for r in a.collect())))
-    rb = sorted(map(tuple, ((r["m"], r["code_id"], tuple(r["csub"])) for r in b.collect())))
-    assert ra == rb
+    init_ids = [i for i in CODE_IDS if i % 2 == 1]  # seeds inside the sample
+    assert len(init_ids) == 8
+
+    def fit():
+        return _codebook_rows(
+            fit_pq_codebooks_lloyd(
+                emb.filter(HALF), init_ids, m=4, iterations=2
+            )
+        )
+
+    ra = fit()
+    assert ra == fit()
     assert len(ra) == 4 * 8
     assert all(len(c[2]) == 16 for c in ra)  # d=64 / m=4
 
 
 def test_sampled_ivf_training_recall_not_degenerate(spark):
-    """IVF trained on a half-sample still beats random: probing 4 of 16
+    """IVF trained on a half-sample still beats random: probing 6 of 16
     cells recovers a sane share of brute-force neighbors."""
-    from icenetetl_spark.operators.ivf import fit_coarse_quantizer, knn_ivf
+    from icenetetl_spark.operators.ivf import knn_ivf_fixed_centroids
+    from icenetetl_spark.operators.kmeans import lloyd_fit
+    from icenetetl_spark.queries.similarity import (
+        IVF_CENTROID_IDS,
+        LLOYD_ITERS,
+        LLOYD_N_PROBE,
+    )
 
     emb = _load(spark)
     queries = emb.filter(F.col("vec_id") < 10)
-    cents = fit_coarse_quantizer(emb, n_cells=16, seed=5, sample_fraction=0.5)
-    assert cents.shape == (16, 64)
-    approx = knn_ivf(queries, emb, k=5, n_cells=16, n_probe=6)
+    init = emb.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
+    )
+    cents = lloyd_fit(emb.filter(HALF), init, iterations=LLOYD_ITERS, dim=64)
+    rows = cents.collect()
+    assert len(rows) == 16 and all(len(r["cvec"]) == 64 for r in rows)
+    approx = knn_ivf_fixed_centroids(
+        queries, emb, cents, k=5, n_probe=LLOYD_N_PROBE
+    )
     exact = knn_bruteforce(queries, emb, k=5)
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}

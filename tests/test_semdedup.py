@@ -10,12 +10,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from icenetetl_spark.operators.ivf import assign_cells_fixed
-from icenetetl_spark.operators.semdedup import (
-    semantic_pairs,
-    semdedup,
-    semdedup_trained,
+from icenetetl_spark.operators.kmeans import lloyd_fit
+from icenetetl_spark.operators.semdedup import semantic_pairs, semdedup
+from icenetetl_spark.queries.similarity import (
+    IVF_CENTROID_IDS,
+    LLOYD_ITERS,
+    SEM_T,
 )
-from icenetetl_spark.queries.similarity import IVF_CENTROID_IDS, SEM_T
 
 SF = "/root/testdata/sf0.001"
 
@@ -105,12 +106,31 @@ def test_drop_set_application(emb, cents):
     assert survivors.count() == emb.count() - (n_members - n_groups)
 
 
-def test_trained_variant_deterministic_and_within_cell(emb):
-    a = semdedup_trained(emb, n_cells=8, threshold=SEM_T, seed=7)
-    b = semdedup_trained(emb, n_cells=8, threshold=SEM_T, seed=7)
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb and len(ra) > 0
+def test_trained_variant_deterministic_and_within_cell(emb, cents):
+    """Two independent Lloyd fits give identical groups through the fixed
+    plan, and no pair leaves its trained cell."""
+
+    def trained():
+        return lloyd_fit(emb, cents, iterations=LLOYD_ITERS, dim=64)
+
+    a = sorted(map(tuple, semdedup(emb, trained(), SEM_T).collect()))
+    b = sorted(map(tuple, semdedup(emb, trained(), SEM_T).collect()))
+    assert a == b and len(a) > 0
+    fitted = trained()
+    cells = assign_cells_fixed(emb, fitted).select("vec_id", "cell")
+    pairs = semantic_pairs(emb, fitted, SEM_T)
+    crossed = (
+        pairs.join(
+            cells.select(F.col("vec_id").alias("doc_a"), F.col("cell").alias("ca")),
+            "doc_a",
+        )
+        .join(
+            cells.select(F.col("vec_id").alias("doc_b"), F.col("cell").alias("cb")),
+            "doc_b",
+        )
+        .filter((F.col("ca") != F.col("cell")) | (F.col("cb") != F.col("cell")))
+    )
+    assert pairs.count() > 0 and crossed.count() == 0
 
 
 def test_blockwise_components_match_global_algorithm(spark):
