@@ -15,18 +15,18 @@ Plan shape (all distributed, no Python boundary):
 1. :func:`assign_cells_fixed`: broadcast the k centroids, score every
    corpus vector against all of them, argmax via one partial-aggregated
    groupBy (the k scored copies collapse map-side);
-2. :func:`knn_ivf_fixed_centroids`: rank each query's n_probe nearest
-   centroids with a window over the small query x k product;
-3. equi-join probes and corpus cells on the cell id, then re-rank by exact
-   cosine within the probed cells (window per query).
+2. :func:`knn_ivf_fixed_centroids`: each query's n_probe nearest
+   centroids (:func:`similarity.probe_cells`, a window over the small
+   query x k product);
+3. equi-join probes and corpus cells on the cell id, score the pairs by
+   exact cosine and keep k per query (:func:`similarity.topk`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
-from icenetetl_spark.operators.similarity import cosine, dot
+from icenetetl_spark.operators.similarity import dot, probe_cells, rank_neighbors
 
 
 def assign_cells_fixed(
@@ -117,6 +117,16 @@ def assign_cells_fixed(
     # fields. (operators/kmeans.lloyd_fit keeps the first()-carry because
     # its fanout is the FIXED k<=16 quantizer width, where the k extra
     # array touches are cheaper than a join stage — measured faster there.)
+    return nearest_cell(scored, out_id, pre if attach_vector else None)
+
+
+def nearest_cell(
+    scored: DataFrame, out_id: str, pre: DataFrame | None
+) -> DataFrame:
+    """``(out_id, cell, csim)`` from ``(out_id, __sim, __negcid)`` rows:
+    the argmax as one partial-aggregated max over the scalar struct (ties
+    to the smaller centroid id), then ``v`` rejoined by key from ``pre``
+    when given — the last step of both assignment operators."""
     assigned = (
         scored.groupBy(out_id)
         .agg(F.max(F.struct("__sim", "__negcid")).alias("m"))
@@ -126,7 +136,7 @@ def assign_cells_fixed(
             F.col("m.__sim").alias("csim"),
         )
     )
-    if not attach_vector:
+    if pre is None:
         return assigned
     return assigned.join(pre.select(out_id, "v"), out_id).select(
         out_id, "v", "cell", "csim"
@@ -161,7 +171,6 @@ def knn_ivf_fixed_centroids(
     rejoins by id afterwards). A per-row window would shuffle k×N rows
     instead.
     """
-    cents = F.broadcast(centroids)
     # carry each corpus vector's norm out of the re-rank join (the
     # cosine unrolled at d=64 inside the join consume method is three
     # 64-term dots and overflows janino's 64 KB limit, dropping the probe
@@ -175,24 +184,15 @@ def knn_ivf_fixed_centroids(
         F.sqrt(dot("v", "v", dim)).alias("cvn"),
         "cell",
     )
-    q_scored = queries.crossJoin(cents).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.col("centroid_id"),
-        cosine(vec_col, "cvec", dim=dim).alias("__sim"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        q_scored.withColumn("__rk", F.row_number().over(wq))
-        .filter(F.col("__rk") <= n_probe)
-        .select(
-            "query_id",
-            "qv",
-            F.sqrt(dot("qv", "qv", dim)).alias("qvn"),
-            F.col("centroid_id").alias("cell"),
-        )
+    # (query_id, qv, qvn, cell): the query vector rides the probe window,
+    # which is query-set sized
+    probes = probe_cells(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        ),
+        centroids,
+        n_probe,
+        dim=dim,
     )
     scored = (
         # probes = queries x n_probe (bounded): broadcasting it means the
@@ -207,11 +207,4 @@ def knn_ivf_fixed_centroids(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return rank_neighbors(scored, k)

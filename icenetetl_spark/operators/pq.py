@@ -16,8 +16,9 @@ Plan shape (all distributed, no Python boundary):
    broadcastable.
 3. score: equi-join corpus codes to the ADC table on (m, code) and sum the
    M partial distances per (query, neighbor) — again partial-aggregated.
-4. refine: exact-cosine re-rank of the top ``k * refine_factor`` ADC
-   candidates per query (FAISS's IVFADC refinement step).
+4. refine: :func:`similarity.topk` keeps the ``k * refine_factor``
+   smallest ADC sums per query, :func:`similarity.refine_exact` re-scores
+   them by exact cosine and a second ``topk`` keeps ``k``.
 
 Engine-exactness (the oracle hash gate): every distance is the three-dot
 identity |a-c|^2 = (a.a + c.c) - 2*a.c computed with the same sequential-
@@ -35,9 +36,14 @@ both engines read identical codes, and both feed the same
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
 
-from icenetetl_spark.operators.similarity import cosine, dot
+from icenetetl_spark.operators.similarity import (
+    dot,
+    probe_cells,
+    rank_neighbors,
+    refine_exact,
+    topk,
+)
 
 # fixed-point scale for the order-independent cross-subspace ADC sum:
 # distances are quantized to integers with floor(d * 10^12 + 0.5) —
@@ -358,65 +364,58 @@ def knn_pq_with_codebook(
     it fixed corpus-row codes, the knn_pq_trained registry query
     Lloyd-fitted ones (:func:`fit_pq_codebooks_lloyd`); ``width`` is the
     vector dimensionality."""
-    w = _sub_width(width, m)
-    codes = encode_pq(corpus, codebook, m, id_col, vec_col, width=width)
-
-    q_sub = _subvectors(queries, "query_id", m, w, id_col, vec_col)
-    adc_table = q_sub.join(F.broadcast(codebook), "m").select(
-        "query_id",
-        "m",
-        F.col("code_id").alias("code"),
-        _l2sq("sub", "csub").alias("qdist"),
+    best = _adc_candidates(
+        queries, corpus, codebook, None, k * refine_factor, m, id_col,
+        vec_col, width,
     )
+    return rank_neighbors(
+        refine_exact(best, queries, corpus, id_col, vec_col), k
+    )
+
+
+def _adc_candidates(
+    queries: DataFrame,
+    corpus: DataFrame,
+    codebook: DataFrame,
+    cand: DataFrame | None,
+    n: int,
+    m: int,
+    id_col: str,
+    vec_col: str,
+    width: int,
+) -> DataFrame:
+    """The ``n`` smallest ADC sums per query as ``(query_id,
+    neighbor_id)`` pairs, scored over the encoded corpus: every non-self
+    (query, vector) pair when ``cand`` is None (:func:`knn_pq`), else
+    only the pairs of ``cand`` (the IVF probe of :func:`knn_ivfpq_fixed`)
+    — the one place the two plans differ."""
     from icenetetl_spark.functions.portable import fsum_col
 
-    adc = (
-        codes.join(F.broadcast(adc_table), ["m", "code"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(fsum_col("qdist", _ADC_SCALE).alias("adc"))
+    codes = encode_pq(corpus, codebook, m, id_col, vec_col, width)
+    q_sub = _subvectors(
+        queries, "query_id", m, _sub_width(width, m), id_col, vec_col
     )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    candidates = (
-        adc.withColumn("__rk", F.row_number().over(wa))
-        .filter(F.col("__rk") <= k * refine_factor)
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    refined = (
-        # candidates are k*refine_factor per query (bounded): broadcast the
-        # whole candidate+qv subtree so the corpus vectors never shuffle.
-        # the re-rank cosine uses the FOLD, not the
-        # unrolled 3-dot — this is the family's measured scoring dispatch
-        # (queries/similarity.py note: 3-dot-per-pair unrolled runs ~3x
-        # SLOWER than the interpreted fold on scoring joins), and the
-        # unrolled form additionally paid a 3x64-term whole-stage-codegen
-        # compile per query construction for a candidate set bounded at
-        # k*refine_factor per query. Values bit-identical (pinned: the
-        # two similarity.dot forms agree term for term).
-        F.broadcast(candidates.join(F.broadcast(qv), "query_id"))
-        .join(cv, "neighbor_id")
-        .select(
+    adc_table = F.broadcast(
+        q_sub.join(F.broadcast(codebook), "m").select(
             "query_id",
-            "neighbor_id",
-            cosine("qv", "cv").alias("cos"),
+            "m",
+            F.col("code_id").alias("code"),
+            _l2sq("sub", "csub").alias("qdist"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
+    if cand is None:
+        scored = codes.join(adc_table, ["m", "code"]).filter(
+            F.col("query_id") != F.col("neighbor_id")
+        )
+    else:
+        scored = cand.join(codes, "neighbor_id").join(
+            adc_table, ["query_id", "m", "code"]
+        )
+    adc = scored.groupBy("query_id", "neighbor_id").agg(
+        fsum_col("qdist", _ADC_SCALE).alias("adc")
     )
-    return (
-        refined.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    best = topk(adc, "query_id", "adc", "neighbor_id", n, ascending=True)
+    return best.select("query_id", "neighbor_id")
 
 
 def knn_ivfpq_fixed(
@@ -449,110 +448,36 @@ def knn_ivfpq_fixed(
     with 1024 cells and 8 probes, that is ~0.8%% of a brute-force scan
     with 8-byte payloads instead of 4*d-byte vectors.
     """
-    from icenetetl_spark.functions.portable import fsum_col
     from icenetetl_spark.operators.ivf import assign_cells_fixed
 
     # ``dim`` (statically-declared width) skips the one-row
     # _vector_width probe job, driver work paid at construction
     width = dim or _vector_width(corpus, vec_col)
-    w = _sub_width(width, m)
     codebook = pq_codebook(corpus, code_ids, m, id_col, vec_col, width)
-    codes = encode_pq(corpus, codebook, m, id_col, vec_col, width)
-
-    # thread ``dim`` through so the corpus-side cell assignment rides
-    # the codegen-unrolled dot (bit-identical values — similarity.py
-    # contract) instead of the interpreted aggregate/zip_with fold, which
-    # was costing ~90us/row on the one corpus-sized projection of this
-    # plan while every other stage was already unrolled; and skip the
-    # vector-reattach join — this plan only reads ``cell`` (candidates
-    # are scored from PQ codes, never raw vectors), so the join was one
-    # corpus-row exchange of pure overhead at every scale
+    # ``dim`` rides the codegen-unrolled dot on the corpus-sized cell
+    # assignment; attach_vector=False skips the vector-reattach join —
+    # candidates are scored from PQ codes, so this plan only reads ``cell``
     cells = assign_cells_fixed(
         corpus, centroids, id_col, vec_col, out_id="neighbor_id", dim=dim,
         attach_vector=False,
     ).select("neighbor_id", "cell")
-    # probe scoring in the hoisted-norm single-dot
-    # form — ||q|| once per query, ||c|| once per centroid, ONE unrolled
-    # dot in the |Q| x k crossJoin projection instead of the 3-dot
-    # unrolled cosine (same stage SHAPE as assign_cells_fixed and
-    # knn_ivf_fixed's probe scorer, so whole-stage codegen compiles one
-    # small method and the generated source matches the family's other
-    # probe stages). Bit-identical: dot/(sqrt(qq)*sqrt(cc)) with the
-    # sqrts hoisted — same operands, same op order.
-    cents_n = F.broadcast(
-        centroids.withColumn("__cn", F.sqrt(dot("cvec", "cvec", dim)))
-    )
-    q_pre = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.sqrt(dot(vec_col, vec_col, dim)).alias("__qn"),
-    )
-    q_scored = q_pre.crossJoin(cents_n).select(
-        "query_id",
-        F.col("centroid_id"),
-        (dot("__qv", "cvec", dim) / (F.col("__qn") * F.col("__cn"))).alias(
-            "__sim"
+    probes = probe_cells(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
         ),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        q_scored.withColumn("__rk", F.row_number().over(wq))
-        .filter(F.col("__rk") <= n_probe)
-        .select("query_id", F.col("centroid_id").alias("cell"))
+        centroids,
+        n_probe,
+        dim=dim,
     )
     cand = (
         F.broadcast(probes).join(cells, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
     )
-
-    q_sub = _subvectors(queries, "query_id", m, w, id_col, vec_col)
-    adc_table = q_sub.join(F.broadcast(codebook), "m").select(
-        "query_id",
-        "m",
-        F.col("code_id").alias("code"),
-        _l2sq("sub", "csub").alias("qdist"),
+    best = _adc_candidates(
+        queries, corpus, codebook, cand, k * refine_factor, m, id_col,
+        vec_col, width,
     )
-    adc = (
-        cand.join(codes, "neighbor_id")
-        .join(F.broadcast(adc_table), ["query_id", "m", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(fsum_col("qdist", _ADC_SCALE).alias("adc"))
-    )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    candidates = (
-        adc.withColumn("__rk", F.row_number().over(wa))
-        .filter(F.col("__rk") <= k * refine_factor)
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    refined = (
-        # candidates are k*refine_factor per query (bounded): broadcast the
-        # whole candidate+qv subtree so the corpus vectors never shuffle.
-        # Fold-form re-rank cosine — the family's measured scoring
-        # dispatch; see the knn_pq_with_codebook refine note.
-        F.broadcast(candidates.join(F.broadcast(qv), "query_id"))
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine("qv", "cv").alias("cos"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    return rank_neighbors(
+        refine_exact(best, queries, corpus, id_col, vec_col), k
     )

@@ -18,7 +18,8 @@ scale_q * scale_c at the end. No float accumulation order anywhere.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
+
+from icenetetl_spark.operators.similarity import rank_neighbors
 
 INT8_MAX = 127
 
@@ -92,14 +93,7 @@ def knn_int8(
             * F.col("cs")
         ).alias("qscore"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qscore").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "qscore")
-    )
+    return rank_neighbors(scored, k, "qscore")
 
 
 def reconstruction_report(

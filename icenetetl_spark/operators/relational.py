@@ -104,8 +104,3 @@ def dedup_exact(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """GROUP-BY-as-distinct (reference processor.py:431 — matview GROUP BY
     with no aggregate functions)."""
     return df.dropDuplicates(list(keys))
-
-
-def range_over_count(df: DataFrame, col: str) -> Column:
-    """(max-min)/(n-1) mean-step statistic, reference utils.py:47-48."""
-    return (F.max(col) - F.min(col)).cast("double") / (F.count(col) - F.lit(1))

@@ -36,8 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from icenetetl_spark.operators.dedup import connected_components
-from icenetetl_spark.operators.ivf import assign_cells_fixed
-from icenetetl_spark.operators.similarity import cosine, dot
+from icenetetl_spark.operators.ivf import assign_cells_fixed, nearest_cell
+from icenetetl_spark.operators.similarity import cosine, dot, probe_cells
 
 
 def semantic_pairs(
@@ -242,8 +242,9 @@ def assign_cells_two_level(
     1. route every FINE centroid to its nearest COARSE centroid
        (k2 x k1 — tiny);
     2. route every vector to its ``n_probe`` nearest COARSE centroids
-       (N x k1 scored once; a row_number window picks the top-P — ties
-       by smaller coarse id, the struct-max convention);
+       (:func:`similarity.probe_cells`: N x k1 scored once, the top-P
+       kept per vector id — ties by smaller coarse id, the struct-max
+       convention);
     3. score each vector ONLY against the fine centroids routed to its
        probed coarse cells (avg fanout P*k2/k1) — equi-join on the
        coarse id, then the same (sim, -id) argmax and key-join vector
@@ -293,9 +294,6 @@ def assign_cells_two_level(
             F.sqrt(dot("v", "v", dim)).alias("__fn"),
         )
     )
-    cents1 = F.broadcast(
-        coarse.withColumn("__cn", F.sqrt(dot("cvec", "cvec", dim)))
-    )
     # The N x k1 routing projection runs map-side on
     # this frame's partitioning; spread() keeps a row-group-bound scan
     # from serializing it (no-op once parallel — operators/scale.py)
@@ -318,45 +316,26 @@ def assign_cells_two_level(
         F.col(vec_col).alias("v"),
         F.sqrt(dot(vec_col, vec_col, dim)).alias("__vn"),
     ).localCheckpoint(eager=False)
-    sim1 = dot("v", "cvec", dim) / (F.col("__vn") * F.col("__cn"))
-    # top-P coarse cells per vector: one window over the N x k1 scored
-    # rows, partitioned on the vector id (k1 rows per partition key —
-    # bounded, shuffles once on the id). Scalars only; v rejoins by key.
-    probe_w = Window.partitionBy(out_id).orderBy(
-        F.desc("__s1"), F.asc("__cid")
-    )
+    # top-P coarse cells per vector: the probe window keys on the vector
+    # id (k1 rows per key — bounded, shuffles once on the id). The select
+    # keeps it to scalars (v is pruned below the window); v rejoins by key.
     vrouted = (
-        pre.crossJoin(cents1)
-        .select(
-            F.col(out_id),
-            sim1.alias("__s1"),
-            F.col("centroid_id").alias("__cid"),
+        probe_cells(
+            pre, coarse, int(n_probe), key=out_id, vec="v", norm="__vn",
+            dim=dim,
         )
-        .withColumn("__rk", F.row_number().over(probe_w))
-        .filter(F.col("__rk") <= F.lit(int(n_probe)))
-        .select(out_id, F.col("__cid").alias("__coarse"))
+        .select(out_id, F.col("cell").alias("__coarse"))
         .join(pre, out_id)
     )
     sim = dot("v", "fvec", dim) / (F.col("__vn") * F.col("__fn"))
     scored = vrouted.join(routed, "__coarse").select(
         F.col(out_id),
         sim.alias("__sim"),
-        (-F.col("fid")).alias("__negfid"),
+        (-F.col("fid")).alias("__negcid"),
     )
-    assigned = (
-        scored.groupBy(out_id)
-        .agg(F.max(F.struct("__sim", "__negfid")).alias("m"))
-        .select(
-            out_id,
-            (-F.col("m.__negfid")).alias("cell"),
-            F.col("m.__sim").alias("csim"),
-        )
-    )
-    # same reattach-by-key as assign_cells_fixed (array columns stay out
-    # of the fanout agg: each of the k scored copies would carry one)
-    return assigned.join(
-        pre.select(out_id, "v"), out_id
-    ).select(out_id, "v", "cell", "csim")
+    # same argmax and reattach-by-key as assign_cells_fixed (array columns
+    # stay out of the fanout agg: each of the k scored copies would carry one)
+    return nearest_cell(scored, out_id, pre)
 
 
 def semdedup(

@@ -4,12 +4,27 @@
                           package. Both take column-reference strings and
                           return ONE ``F.expr``; every vector score (ANN,
                           near-dup, SemDeDup, Lloyd, PQ) is built here.
+- ``topk``              : the one per-key top-k step (a ``row_number``
+                          window and its ``<= k`` filter) every ANN plan
+                          ends in; ``rank_neighbors`` applies it to the knn
+                          result contract.
+- ``probe_cells``       : each vector's ``n_probe`` nearest centroids (the
+                          IVF probe and the two-level SemDeDup routing).
+- ``refine_exact``      : the exact fold-cosine of bounded candidate pairs
+                          (the PQ / IVF-PQ re-rank).
+- ``knn_pairs``         : exact top-k over every (or every same-bucket)
+                          query×corpus pair — behind brute force, the LSH
+                          variants and the label-filtered query.
 - ``knn_bruteforce``    : exact top-k per query via query×corpus join +
                           per-query window. The baseline.
 - ``knn_sign_lsh``      : LSH-bucketed approximate variant — random-hyperplane
                           family degenerated to axis sign bits (deterministic,
                           engine-portable); candidates restricted to the
                           query's bucket.
+
+Every ``knn_*`` operator (here, ``ivf``, ``pq``, ``quantization``) is a
+candidate generator feeding those steps: generator → probe → refine →
+topk, with the probe and the refine only where the index has them.
 
 ``dot`` has two forms, chosen by the caller's ``dim`` and nothing else:
 
@@ -96,6 +111,149 @@ def cosine(x: str, y: str, dim: int | None = None) -> Column:
     )
 
 
+def topk(
+    scored: DataFrame,
+    key: str,
+    score: str,
+    tie: str,
+    k: int,
+    ascending: bool = False,
+) -> DataFrame:
+    """``scored`` plus a ``rank`` column, keeping the rows ranked ``<= k``
+    within each ``key``: by ``score`` descending (``ascending=True`` for
+    distances), ties to the smaller ``tie``. Ranks are 1..n without gaps,
+    and a key with fewer than ``k`` rows keeps all of them.
+
+    The one top-k step of every vector search — for the knn operators
+    ``Window.partitionBy("query_id").orderBy(cos DESC, neighbor_id)``.
+    It is a ``row_number`` window over plain columns with a literal
+    ``<= k`` filter, the shape Spark's InferWindowGroupLimit rewrites: a
+    partial WindowGroupLimit runs below the exchange, so each map task
+    ships at most ``k`` rows per key instead of every candidate
+    (tests/test_plan_invariants.py pins it per query)."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(key).orderBy(order, F.col(tie))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def rank_neighbors(scored: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    """The knn result contract ``(query_id, neighbor_id, rank, score)``:
+    :func:`topk` per query by ``score`` descending, ties to the smaller
+    neighbor id."""
+    return topk(scored, "query_id", score, "neighbor_id", k).select(
+        "query_id", "neighbor_id", "rank", score
+    )
+
+
+def probe_cells(
+    points: DataFrame,
+    centroids: DataFrame,
+    n_probe: int,
+    key: str = "query_id",
+    vec: str = "qv",
+    norm: str = "qvn",
+    dim: int | None = None,
+) -> DataFrame:
+    """``points``' columns plus ``norm`` and ``cell``, one row per probed
+    cell: each point's ``n_probe`` nearest centroids (``centroid_id``,
+    ``cvec``) by cosine, ties to the smaller centroid id — the IVF probe
+    and the two-level SemDeDup coarse routing. ``norm`` names the
+    column holding ``||vec||``; it is computed when ``points`` lacks it.
+
+    Scored in the hoisted-norm single-dot form: ``||v||`` once per point,
+    ``||c||`` once per centroid, so the points x centroids crossJoin
+    projection evaluates ONE dot (unrolled with ``dim``) instead of the
+    3-dot cosine, and whole-stage codegen compiles one small method.
+    Bit-identical to :func:`cosine` — ``dot/(sqrt(vv)*sqrt(cc))`` over the
+    same operands in the same order, with the sqrts hoisted. The
+    centroid table is broadcast; the :func:`topk` window keys on
+    ``key``, so callers whose points carry an array column project it
+    away (Catalyst prunes it below the window) or keep it when the
+    points are few (a query set)."""
+    if norm not in points.columns:
+        points = points.withColumn(norm, F.sqrt(dot(vec, vec, dim)))
+    cents = F.broadcast(
+        centroids.withColumn("__cn", F.sqrt(dot("cvec", "cvec", dim)))
+    )
+    sim = dot(vec, "cvec", dim) / (F.col(norm) * F.col("__cn"))
+    scored = points.crossJoin(cents).select(
+        *points.columns, F.col("centroid_id").alias("cell"), sim.alias("__sim")
+    )
+    return topk(scored, key, "__sim", "cell", n_probe).drop("__sim", "rank")
+
+
+def refine_exact(
+    candidates: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """``(query_id, neighbor_id, cos)``: the exact cosine of every
+    ``(query_id, neighbor_id)`` candidate pair — the re-rank of an
+    approximate generator (FAISS's IVFADC refinement).
+
+    Candidates are bounded per query (``k * refine_factor``), so the whole
+    candidate + query-vector subtree is broadcast and the corpus vectors
+    never shuffle: they stream through one hash join keyed on the
+    neighbor id. The cosine is the FOLD, not the unrolled 3-dot: on
+    scoring joins the unrolled form runs ~3x slower (the generated method
+    outgrows the JIT; queries/similarity.py note) and pays a 3x64-term
+    codegen compile per construction for a bounded candidate set. Values
+    are bit-identical either way (the two :func:`dot` forms agree term
+    for term)."""
+    qv = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    )
+    cv = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+    )
+    return (
+        F.broadcast(candidates.join(F.broadcast(qv), "query_id"))
+        .join(cv, "neighbor_id")
+        .select("query_id", "neighbor_id", cosine("qv", "cv").alias("cos"))
+    )
+
+
+def knn_pairs(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    buckets: tuple[Column, Column] | None = None,
+) -> DataFrame:
+    """Exact top-k ``(query_id, neighbor_id, rank, cos)`` over the
+    candidate pairs of ``queries`` and ``corpus``: every non-self pair, or
+    only the pairs whose bucket expressions (``buckets``: query side,
+    corpus side) are equal — an LSH bucket, a label filter — scored by
+    the fold cosine of the two sides' ``vec_col``.
+
+    The query side is broadcast explicitly: it is bounded BY CONSTRUCTION
+    (a query set, not a corpus), but it is usually a filtered subset of a
+    big table, so the static planner's size estimate balloons with the
+    data — the non-equi join degraded to CartesianProduct at the 100x
+    spot check (SCALING.md) before this hint was pinned — and a bucket
+    equi-join would shuffle the corpus."""
+    q = [F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")]
+    c = [F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")]
+    not_self = F.col("query_id") != F.col("neighbor_id")
+    if buckets is None:
+        pairs = F.broadcast(queries.select(*q)).join(corpus.select(*c), not_self)
+    else:
+        pairs = (
+            F.broadcast(queries.select(*q, buckets[0].alias("bucket")))
+            .join(corpus.select(*c, buckets[1].alias("bucket")), "bucket")
+            .filter(not_self)
+        )
+    return rank_neighbors(
+        pairs.select("query_id", "neighbor_id", cosine("qv", "cv").alias("cos")),
+        k,
+    )
+
+
 def knn_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -107,36 +265,10 @@ def knn_bruteforce(
 
     Deterministic: ties broken by neighbor id. Self-matches excluded.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    # The per-pair cosine below runs map-side on the
+    # The per-pair cosine runs map-side on the
     # corpus partitioning; spread() keeps a row-group-bound scan from
     # serializing it (no-op once parallel — operators/scale.py).
-    c = spread(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    # Explicit broadcast of the query side: it is bounded BY CONSTRUCTION
-    # (a query set, not a corpus), but it is usually a filtered subset of
-    # a big table, so the static planner's size estimate balloons with the
-    # data and the non-equi join degrades to CartesianProduct — observed
-    # at the 100x spot check (SCALING.md) before this hint was pinned.
-    scored = (
-        F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine("qv", "cv").alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return knn_pairs(queries, spread(corpus, id_col), k, id_col, vec_col)
 
 
 def normalize_embeddings(
@@ -202,22 +334,12 @@ def knn_bruteforce_prenorm(
     c = normalize_embeddings(
         spread(corpus, id_col), "neighbor_id", id_col, vec_col, dim, "cv"
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot("qv", "cv").alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    # the knn_pairs plan over sides normalize_embeddings already named:
+    # knn_pairs' renaming projection over each checkpoint adds generated
+    # code for nothing
+    scored = F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id"))
+    return rank_neighbors(
+        scored.select("query_id", "neighbor_id", dot("qv", "cv").alias("cos")), k
     )
 
 
@@ -246,34 +368,9 @@ def knn_sign_lsh(
     then exact cosine rank within bucket. One equi-join shuffle on bucket id
     instead of a full cross join — the 100 TB-shaped plan.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        sign_bucket(F.col(vec_col), num_bits).alias("bucket"),
-    )
-    c = spread(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        sign_bucket(F.col(vec_col), num_bits).alias("bucket"),
-    )
-    # broadcast the bounded query side so the corpus is never shuffled
-    # for the bucket equi-join (size-independent plan — see knn_bruteforce)
-    scored = (
-        F.broadcast(q).join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine("qv", "cv").alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    b = sign_bucket(F.col(vec_col), num_bits)
+    return knn_pairs(
+        queries, spread(corpus, id_col), k, id_col, vec_col, (b, b)
     )
 
 
@@ -326,31 +423,12 @@ def knn_hyperplane_lsh(
     knn_sign_lsh (one bucket equi-join); the hyperplanes here come from
     a table — fixed corpus rows for the oracle-gated query, seeded
     gaussian draws in production (identical plan either way)."""
-    q = hyperplane_buckets(queries, normals, "query_id", id_col, vec_col)
+    q = hyperplane_buckets(queries, normals, id_col, id_col, vec_col)
     c = hyperplane_buckets(
-        spread(corpus, id_col), normals, "neighbor_id", id_col, vec_col
+        spread(corpus, id_col), normals, id_col, id_col, vec_col
     )
-    scored = (
-        F.broadcast(q.select("query_id", F.col("__v").alias("qv"), "bucket"))
-        .join(
-            c.select("neighbor_id", F.col("__v").alias("cv"), "bucket"),
-            "bucket",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine("qv", "cv").alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    b = F.col("bucket")
+    return knn_pairs(q, c, k, id_col, "__v", (b, b))
 
 
 def _bucket_with_flips(bucket: Column, num_bits: int) -> Column:
@@ -389,36 +467,10 @@ def knn_sign_lsh_multiprobe(
     keep exactly one bucket, so a (query, neighbor) pair meets at most once
     (the probe list is distinct by construction) — no dedup stage needed.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            _bucket_with_flips(sign_bucket(F.col(vec_col), num_bits), num_bits)
-        ).alias("bucket"),
-    )
-    c = spread(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        sign_bucket(F.col(vec_col), num_bits).alias("bucket"),
-    )
-    # broadcast the bounded query side so the corpus is never shuffled
-    # for the bucket equi-join (size-independent plan — see knn_bruteforce)
-    scored = (
-        F.broadcast(q).join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine("qv", "cv").alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    b = sign_bucket(F.col(vec_col), num_bits)
+    probes = F.explode(_bucket_with_flips(b, num_bits))
+    return knn_pairs(
+        queries, spread(corpus, id_col), k, id_col, vec_col, (probes, b)
     )
 
 

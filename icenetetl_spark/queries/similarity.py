@@ -24,6 +24,36 @@ _COS = """
 """
 
 
+def _knn_topk_sql(scored: str) -> str:
+    """SQL twin of operators.similarity.rank_neighbors: the top-K rows per
+    query of the ``(query_id, neighbor_id, cos)`` relation ``scored``, by
+    cos descending, ties to the smaller neighbor id."""
+    return f"""
+        SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
+        FROM (
+            SELECT *, row_number() OVER (PARTITION BY query_id
+                      ORDER BY cos DESC, neighbor_id) AS rank
+            FROM {scored}
+        ) WHERE rank <= {K}
+    """
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(corpus, queries): the embeddings table and its first N_QUERIES
+    rows, the query set of every knn query."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return emb, emb.filter(F.col("vec_id") < N_QUERIES)
+
+
+def _centroid_rows(emb: DataFrame, pred) -> DataFrame:
+    """The ``(centroid_id, cvec)`` table of the embedding rows matching
+    ``pred`` — the fixed quantizers (and Lloyd seeds) of the IVF, IVF-PQ
+    and SemDeDup queries."""
+    return emb.filter(pred).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
+    )
+
+
 # Dispatch: every vector score is operators.similarity.dot/cosine, and
 # the only choice a call site makes is whether to pass dim=EMB_DIM. Pass
 # it where a stage computes ONE dot per row (hoisted norms: SemDeDup,
@@ -40,8 +70,7 @@ _COS = """
 
 
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    emb, queries = _embeddings(spark, sf_dir)
     return S.knn_bruteforce(queries, emb, k=K)
 
 
@@ -56,14 +85,12 @@ def knn_bruteforce_prenorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench queries keep the fold and this query gates the large-|Q| plan.
     Hash-gated: normalize-then-dot is mirrored exactly in the oracle
     (list_transform + list_dot_product, same fp order)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    emb, queries = _embeddings(spark, sf_dir)
     return S.knn_bruteforce_prenorm(queries, emb, k=K, dim=EMB_DIM)
 
 
 def knn_sign_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    emb, queries = _embeddings(spark, sf_dir)
     return S.knn_sign_lsh(queries, emb, k=K, num_bits=LSH_BITS)
 
 
@@ -71,11 +98,8 @@ def knn_sign_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe sign-LSH: the query's bucket plus every hamming-1
     neighbor bucket — the standard recall lever over single-bucket LSH
     (recall asserted monotone vs knn_sign_lsh in tests/test_similarity.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    return S.knn_sign_lsh_multiprobe(
-        queries, emb, k=K, num_bits=LSH_BITS
-    )
+    emb, queries = _embeddings(spark, sf_dir)
+    return S.knn_sign_lsh_multiprobe(queries, emb, k=K, num_bits=LSH_BITS)
 
 
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,22 +150,28 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls the same iterations as chained CTEs, so fit AND search match
     bit-for-bit."""
     from icenetetl_spark.operators.ivf import knn_ivf_fixed_centroids
+
+    emb, queries = _embeddings(spark, sf_dir)
+    return knn_ivf_fixed_centroids(
+        queries, emb, _lloyd_centroids(emb, sf_dir), k=K,
+        n_probe=LLOYD_N_PROBE, dim=EMB_DIM,
+    )
+
+
+def _lloyd_centroids(emb: DataFrame, sf_dir: str) -> DataFrame:
+    """The trained quantizer: LLOYD_ITERS Lloyd iterations from the
+    IVF_CENTROID_IDS seed rows. knn_ivf and dedup_semantic_trained read
+    the identical (corpus, init, params), so a session running both pays
+    one memoized fit."""
     from icenetetl_spark.operators.kmeans import lloyd_fit
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    init = emb.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
-    cents = lloyd_fit(
+    init = _centroid_rows(emb, F.col("vec_id").isin(IVF_CENTROID_IDS))
+    return lloyd_fit(
         emb,
         init,
         iterations=LLOYD_ITERS,
         dim=EMB_DIM,
         cache_key=(sf_dir, "embeddings", tuple(IVF_CENTROID_IDS)),
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    return knn_ivf_fixed_centroids(
-        queries, emb, cents, k=K, n_probe=LLOYD_N_PROBE, dim=EMB_DIM
     )
 
 
@@ -159,11 +189,8 @@ def knn_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid table so DuckDB mirrors every step bit-for-bit."""
     from icenetetl_spark.operators.ivf import knn_ivf_fixed_centroids
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    emb, queries = _embeddings(spark, sf_dir)
+    cents = _centroid_rows(emb, F.col("vec_id").isin(IVF_CENTROID_IDS))
     return knn_ivf_fixed_centroids(
         queries, emb, cents, k=K, n_probe=IVF_N_PROBE, dim=EMB_DIM
     )
@@ -181,13 +208,12 @@ def knn_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     production swaps in seeded gaussian normals on the same plan."""
     from icenetetl_spark.operators.similarity import knn_hyperplane_lsh as _hp
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb, queries = _embeddings(spark, sf_dir)
     # global-order window over SIX rows (the normals table), not data
     normals = emb.filter(F.col("vec_id").isin(HP_NORMAL_IDS)).select(
         F.row_number().over(Window.orderBy("vec_id")).alias("bit_idx"),
         F.col("embedding").alias("nvec"),
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return _hp(queries, emb, normals, k=K)
 
 
@@ -221,9 +247,7 @@ def knn_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from icenetetl_spark.operators.ivf import assign_cells_fixed
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
+    cents = _centroid_rows(emb, F.col("vec_id").isin(IVF_CENTROID_IDS))
     old = emb.filter(F.col("vec_id") % IVF_INCR_MOD != 0)
     new = emb.filter(F.col("vec_id") % IVF_INCR_MOD == 0)
     # attach_vector=False: postings are (id, cell, csim) — the
@@ -245,8 +269,7 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical plan on Lloyd-trained codebooks."""
     from icenetetl_spark.operators.pq import knn_pq as _knn_pq
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    emb, queries = _embeddings(spark, sf_dir)
     return _knn_pq(
         queries, emb, PQ_CODE_IDS, k=K, m=PQ_M, refine_factor=PQ_REFINE,
         dim=EMB_DIM,
@@ -270,8 +293,7 @@ def knn_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_pq_with_codebook,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    emb, queries = _embeddings(spark, sf_dir)
     codebook = fit_pq_codebooks_lloyd(
         emb,
         PQ_CODE_IDS,
@@ -295,11 +317,8 @@ def knn_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (knn_ivf, knn_pq_trained) drop into the same plan."""
     from icenetetl_spark.operators.pq import knn_ivfpq_fixed as _ivfpq
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    emb, queries = _embeddings(spark, sf_dir)
+    cents = _centroid_rows(emb, F.col("vec_id").isin(IVF_CENTROID_IDS))
     return _ivfpq(
         queries,
         emb,
@@ -379,9 +398,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     mod = _sem_cell_mod(emb.count())
-    cents = emb.filter(F.col("vec_id") % mod == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
+    cents = _centroid_rows(emb, F.col("vec_id") % mod == 0)
     return semdedup(emb, cents, threshold=SEM_T, dim=EMB_DIM, cell_cap=SEM_CAP)
 
 
@@ -415,22 +432,10 @@ def dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     affordable — one-level gates like dedup_semantic keep it as the
     paper-exact baseline; every trained/production path routes
     hierarchically."""
-    from icenetetl_spark.operators.kmeans import lloyd_fit
     from icenetetl_spark.operators.semdedup import semdedup_two_level
 
     emb = load_table(spark, sf_dir, "embeddings")
-    init = emb.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
-    # identical (corpus, init, params) as knn_ivf -> the memoized fit is
-    # SHARED: a gate window running both pays one Lloyd fit per session
-    cents = lloyd_fit(
-        emb,
-        init,
-        iterations=LLOYD_ITERS,
-        dim=EMB_DIM,
-        cache_key=(sf_dir, "embeddings", tuple(IVF_CENTROID_IDS)),
-    )
+    cents = _lloyd_centroids(emb, sf_dir)
     coarse = cents.filter(
         F.col("centroid_id").isin(SEM_TL_TRAINED_COARSE_IDS)
     )
@@ -478,12 +483,8 @@ def dedup_semantic_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     mod1, mod2 = _sem_two_level_mods(emb.count())
-    fine = emb.filter(F.col("vec_id") % mod2 == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
-    coarse = emb.filter(F.col("vec_id") % mod1 == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
+    fine = _centroid_rows(emb, F.col("vec_id") % mod2 == 0)
+    coarse = _centroid_rows(emb, F.col("vec_id") % mod1 == 0)
     return semdedup_two_level(
         emb, coarse, fine, threshold=SEM_T, dim=EMB_DIM, cell_cap=SEM_CAP,
         n_probe=SEM_TL_PROBE,
@@ -599,14 +600,8 @@ def _ivf_oracle(cents_sql: str, n_probe: int) -> str:
                                               CAST(cc.cv AS DOUBLE[])))) AS cos
             FROM probes p JOIN corpus_cells cc ON p.cell = cc.cell
             WHERE p.query_id != cc.neighbor_id
-        ),
-        ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY cos DESC, neighbor_id) AS rank
-            FROM scored
         )
-        SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
-        FROM ranked WHERE rank <= {K}
+        {_knn_topk_sql("scored")}
     """
 
 
@@ -675,13 +670,8 @@ ORACLES = {
                    {_COS} AS cos
             FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
             WHERE q.vec_id < {N_QUERIES}
-        ), ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cos DESC, neighbor_id) AS rank
-            FROM scored
         )
-        SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
-        FROM ranked WHERE rank <= {K}
+        {_knn_topk_sql("scored")}
     """,
     # Mirrors knn_bruteforce_prenorm's fp grouping exactly: normalize each
     # side once (x / sqrt(sequential-dot)), then ONE sequential dot per
@@ -700,13 +690,8 @@ ORACLES = {
                    list_dot_product(q.nv, c.nv) AS cos
             FROM nemb q JOIN nemb c ON q.vec_id != c.vec_id
             WHERE q.vec_id < {N_QUERIES}
-        ), ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cos DESC, neighbor_id) AS rank
-            FROM scored
         )
-        SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
-        FROM ranked WHERE rank <= {K}
+        {_knn_topk_sql("scored")}
     """,
     "knn_sign_lsh": f"""
         WITH q AS (SELECT vec_id, embedding, {_SIGN_BUCKET('embeddings')} AS bucket
@@ -716,13 +701,8 @@ ORACLES = {
         scored AS (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS} AS cos
             FROM q JOIN c ON q.bucket = c.bucket AND q.vec_id != c.vec_id
-        ), ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cos DESC, neighbor_id) AS rank
-            FROM scored
         )
-        SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
-        FROM ranked WHERE rank <= {K}
+        {_knn_topk_sql("scored")}
     """,
     # Multi-probe: UNION of the query bucket and each 1-bit-flipped variant,
     # then the same bucket equi-join + exact top-k as knn_sign_lsh.
@@ -743,13 +723,8 @@ ORACLES = {
         scored AS (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS} AS cos
             FROM probes q JOIN c ON q.bucket = c.bucket AND q.vec_id != c.vec_id
-        ), ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cos DESC, neighbor_id) AS rank
-            FROM scored
         )
-        SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
-        FROM ranked WHERE rank <= {K}
+        {_knn_topk_sql("scored")}
     """,
     # Mirrors the banded sign-LSH plan: candidate = agree on ALL bits of ANY
     # band (band i = sign bits of coords [i*w, (i+1)*w)), then exact-cosine
@@ -825,14 +800,8 @@ ORACLES = {
             FROM buckets q JOIN buckets c
               ON q.bucket = c.bucket AND q.vec_id != c.vec_id
             WHERE q.vec_id < {N_QUERIES}
-        ),
-        ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cos DESC, neighbor_id) AS rank
-            FROM scored
         )
-        SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
-        FROM ranked WHERE rank <= {K}
+        {_knn_topk_sql("scored")}
     """,
     # Mirrors operators/pq step for step (see _pq_oracle below; entries
     # assigned after the dict): fixed codebook rows for knn_pq, unrolled
@@ -887,12 +856,7 @@ ORACLES = {
             JOIN embeddings q ON q.vec_id = cand.query_id
             JOIN embeddings c ON c.vec_id = cand.neighbor_id
         )
-        SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
-        FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY cos DESC, neighbor_id) AS rank
-            FROM refined
-        ) WHERE rank <= {K}
+        {_knn_topk_sql("refined")}
     """),
     # Mirrors operators/pq.knn_ivfpq_fixed: the knn_ivf_fixed cell
     # CTEs bound the candidate pairs, the knn_pq code/ADC CTEs score
@@ -999,12 +963,7 @@ ORACLES = {
             JOIN embeddings q ON q.vec_id = cand.query_id
             JOIN embeddings c ON c.vec_id = cand.neighbor_id
         )
-        SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
-        FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY cos DESC, neighbor_id) AS rank
-            FROM refined
-        ) WHERE rank <= {K}
+        {_knn_topk_sql("refined")}
     """,
     "embedding_norms": """
         WITH norms AS (
@@ -1393,54 +1352,25 @@ def knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED vector search (the vector-DB capability plain ANN lacks):
     top-k restricted to corpus vectors sharing the query's label — the
     metadata predicate applies BEFORE scoring, so the scan cost is the
-    filtered subset, not the corpus. Composition: label equi-constraint
-    into the same brute-force scorer; at scale the same filter composes
+    filtered subset, not the corpus. Composition: the label is the
+    bucket of the same pair scorer the LSH variants use
+    (operators/similarity.knn_pairs); at scale the same filter composes
     with the IVF/PQ candidate generators unchanged."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qv"),
-    )
-    cand = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("clabel"),
-        F.col("embedding").alias("cv"),
-    )
-    scored = queries.join(
-        cand,
-        (F.col("qlabel") == F.col("clabel"))
-        & (F.col("query_id") != F.col("neighbor_id")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        S.cosine("qv", "cv").alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    emb, queries = _embeddings(spark, sf_dir)
+    label = F.col("label")
+    return S.knn_pairs(queries, emb, K, "vec_id", "embedding", (label, label))
 
 
 QUERIES["knn_filtered"] = knn_filtered
 
 ORACLES["knn_filtered"] = f"""
-    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos
-    FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_COS} AS cos,
-               row_number() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY {_COS} DESC, c.vec_id) AS rank
+    WITH scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS} AS cos
         FROM embeddings q JOIN embeddings c
           ON q.label = c.label AND q.vec_id <> c.vec_id
         WHERE q.vec_id < {N_QUERIES}
     )
-    WHERE rank <= {K}
+    {_knn_topk_sql("scored")}
 """
 
 

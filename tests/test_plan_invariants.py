@@ -52,3 +52,31 @@ def test_no_cartesian_without_planner_broadcasts(spark, name):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+# Registry queries whose result rows come from operators.similarity.topk.
+_TOPK_QUERIES = (
+    "knn_bruteforce",
+    "knn_bruteforce_prenorm",
+    "knn_filtered",
+    "knn_hyperplane_lsh",
+    "knn_int8_topk",
+    "knn_ivf",
+    "knn_ivf_fixed",
+    "knn_ivfpq_fixed",
+    "knn_pq",
+    "knn_pq_trained",
+    "knn_sign_lsh",
+    "knn_sign_lsh_multiprobe",
+)
+
+
+@pytest.mark.parametrize("name", _TOPK_QUERIES)
+def test_per_query_topk_keeps_window_group_limit(spark, name):
+    """Spark's InferWindowGroupLimit puts a partial WindowGroupLimit below
+    the exchange of every per-query top-k window, so each map task ships
+    at most k rows per query instead of every candidate. A ``topk`` the
+    rule no longer recognizes (a ``rank()`` over a column computed after
+    the join, a filter Catalyst cannot push) silently loses it."""
+    plan = _plan(all_queries()[name](spark, SF_DIR))
+    assert "WindowGroupLimit" in plan, f"{name}: top-k lost its group limit"

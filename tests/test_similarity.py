@@ -389,3 +389,37 @@ def test_unrolled_string_form_accepts_backtick_quoted_names(spark, emb):
             cosine(ref, ref, dim).alias("c"),
         ).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_topk_tie_order_and_short_groups(spark):
+    """``topk`` on a hand-built frame: equal scores rank the smaller id
+    first, ``ascending=True`` ranks smaller scores first (the ADC order),
+    a key with fewer than k rows keeps all of them, and ranks run 1..n
+    with no gaps."""
+    from icenetetl_spark.operators.similarity import topk
+
+    df = spark.createDataFrame(
+        [
+            (1, 5, 0.9),
+            (1, 3, 0.9),
+            (1, 7, 0.5),
+            (1, 2, 0.1),
+            (1, 8, 0.1),
+            (2, 9, 0.3),
+        ],
+        "g int, id int, s double",
+    )
+
+    def ranked(**kw):
+        out: dict[int, list[tuple[int, int]]] = {}
+        for r in topk(df, "g", "s", "id", 3, **kw).collect():
+            out.setdefault(r["g"], []).append((r["rank"], r["id"]))
+        return {g: sorted(v) for g, v in out.items()}
+
+    desc = ranked()
+    assert desc == {1: [(1, 3), (2, 5), (3, 7)], 2: [(1, 9)]}
+    asc = ranked(ascending=True)
+    assert asc == {1: [(1, 2), (2, 8), (3, 7)], 2: [(1, 9)]}
+    for got in (desc, asc):
+        for rows in got.values():
+            assert [rk for rk, _ in rows] == list(range(1, len(rows) + 1))

@@ -1,6 +1,7 @@
 """Physical-plan audit: for every registered query, report the things that
 matter at 100 TB — scan pushdown, join strategies, shuffle-exchange count,
-whole-stage-codegen coverage, and any Python-boundary operators.
+broadcast count, pushed-down top-k limits (``WindowGroupLimit``), and any
+Python-boundary operators.
 
 Usage: python tools/audit_plans.py [query ...]
 """
@@ -38,6 +39,7 @@ def audit(name, df):
         "joins": ",".join(joins) or "-",
         "shuffles": shuffles,
         "bcast": broadcasts,
+        "wgl": plan.count("WindowGroupLimit"),
         "pushed_scans": n_pushed,
         "python": ",".join(python_ops) or "-",
         "flags": ",".join(flags),
@@ -52,7 +54,10 @@ def main():
     spark = get_spark(
         "plan-audit", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    print(f"{'query':28s} {'shuffles':>8s} {'bcast':>5s} {'pushed':>6s}  joins / python")
+    print(
+        f"{'query':28s} {'shuffles':>8s} {'bcast':>5s} {'wgl':>4s} {'pushed':>6s}"
+        "  joins / python"
+    )
     for name, fn in all_queries().items():
         if only and name not in only:
             continue
@@ -61,7 +66,8 @@ def main():
             df.count()  # let AQE finalize
             a = audit(name, df)
             line = (
-                f"{name:28s} {a['shuffles']:8d} {a['bcast']:5d} {a['pushed_scans']:6d}"
+                f"{name:28s} {a['shuffles']:8d} {a['bcast']:5d} {a['wgl']:4d}"
+                f" {a['pushed_scans']:6d}"
                 f"  {a['joins']}"
             )
             if a["python"] != "-":
